@@ -177,31 +177,14 @@ def main():
     print(json.dumps(result))
 
 
-def _run_arrow(spark, input_path):
-    from pyspark.sql import functions as F
-
-    from jvst_spark.compiler.arrow_backend import arrow_verdicts
-    from jvst_spark.compiler.plan import ValidationPlan, compile_schema
-    from jvst_spark.io.spans import FLAGSHIP_SPEC
-
-    df = spark.read.parquet(input_path)
-    plan = ValidationPlan(compile_schema(FLAGSHIP_SPEC))
-    t0 = time.perf_counter()
-    r = arrow_verdicts(plan, df).agg(
-        F.count("*"), F.sum(F.col("valid").cast("long"))
-    ).collect()
-    return int(r[0][0]), time.perf_counter() - t0
-
-
 def _paired_scaling(input_path, n_lo=8, rounds=4):
     """N vs 4N evidence, paired protocol: the two parallelism levels
     alternate within one process so both share the host's noise epochs
-    (this sandbox VM shows loadavg 11-15 while idle and 10x wall-time
-    swings between JVMs — unpaired comparisons are meaningless here).
-    min-of-rounds per level; both the Column and Arrow backends."""
+    (on a shared host, wall time swings up to 10x between JVMs, so
+    unpaired comparisons are meaningless). min-of-rounds per level, on
+    apply_typed's one route."""
     n_hi = n_lo * 4
-    times = {("column", n_lo): [], ("column", n_hi): [],
-             ("arrow", n_lo): [], ("arrow", n_hi): []}
+    times = {n_lo: [], n_hi: []}
     docs = 0
     for rnd in range(rounds):
         for cores in (n_lo, n_hi):
@@ -211,34 +194,31 @@ def _paired_scaling(input_path, n_lo=8, rounds=4):
                 s.read.parquet(input_path).count()
                 run_validation(s, input_path)  # JIT warm
             docs, sec = run_validation(s, input_path)
-            times[("column", cores)].append(sec)
-            docs, sec = _run_arrow(s, input_path)
-            times[("arrow", cores)].append(sec)
+            times[cores].append(sec)
             s.stop()
-    out = {"protocol": f"paired local[{n_lo}]/local[{n_hi}], "
-                       f"min of {rounds} alternating rounds",
-           "docs": docs}
-    for backend in ("column", "arrow"):
-        lo = min(times[(backend, n_lo)])
-        hi = min(times[(backend, n_hi)])
-        out[backend] = {
-            f"local{n_lo}": {"sec": round(lo, 3),
-                             "docs_per_sec": round(docs / lo, 1)},
-            f"local{n_hi}": {"sec": round(hi, 3),
-                             "docs_per_sec": round(docs / hi, 1)},
-            "efficiency": round((docs / hi) / (docs / lo) / 4.0, 3),
-        }
-    return out
+    lo, hi = min(times[n_lo]), min(times[n_hi])
+    return {
+        "protocol": f"paired local[{n_lo}]/local[{n_hi}], "
+                    f"min of {rounds} alternating rounds",
+        "docs": docs,
+        f"local{n_lo}": {"sec": round(lo, 3),
+                         "docs_per_sec": round(docs / lo, 1)},
+        f"local{n_hi}": {"sec": round(hi, 3),
+                         "docs_per_sec": round(docs / hi, 1)},
+        "efficiency": round((docs / hi) / (docs / lo) / 4.0, 3),
+    }
+
+
+def _levels(pair) -> list[str]:
+    return [k for k in pair if k.startswith("local")]
 
 
 def _gate_line(pairs) -> str:
     met = []
     for p in pairs:
-        lo = [k for k in p["column"] if k.startswith("local")][0]
-        hi = [k for k in p["column"] if k.startswith("local")][1]
-        best = max(p["column"]["efficiency"], p["arrow"]["efficiency"])
-        if best >= 0.8:
-            met.append(f"{lo}->{hi} ({best})")
+        lo, hi = _levels(p)
+        if p["efficiency"] >= 0.8:
+            met.append(f"{lo}->{hi} ({p['efficiency']})")
     if met:
         head = (f"**Gate (>= 0.8, north rule BASELINE.json:14): met "
                 f"in-run on {', '.join(met)}**")
@@ -343,46 +323,38 @@ def _write_scaling_report(result):
     pairs = result["scaling"]["pairs"]
     rows = []
     for p in pairs:
-        lo = [k for k in p["column"] if k.startswith("local")][0]
-        hi = [k for k in p["column"] if k.startswith("local")][1]
-        for backend in ("column", "arrow"):
-            b = p[backend]
-            rows.append(
-                f"| {backend} | {lo} -> {hi} | {b[lo]['docs_per_sec']} "
-                f"| {b[hi]['docs_per_sec']} | **{b['efficiency']}** |"
-            )
+        lo, hi = _levels(p)
+        rows.append(
+            f"| {lo} -> {hi} | {p[lo]['docs_per_sec']} "
+            f"| {p[hi]['docs_per_sec']} | **{p['efficiency']}** |"
+        )
     with open(os.path.join(REPO, "BENCH", "latest_scaling.md"), "w") as f:
         f.write(
             "# BENCH/latest_scaling.md — raw scaling-run evidence "
             "(generated; hand-curated context lives in BASELINE.md)\n\n"
             "Flagship validation job on the identical materialized spans "
-            f"table (sf={result['sf']}, {pairs[0]['docs']} docs), two "
-            "execution backends: Column (typed exprs, full verdict + "
-            "violation rows) and Arrow (pyarrow kernels via mapInArrow, "
-            "verdicts).\n\n"
+            f"table (sf={result['sf']}, {pairs[0]['docs']} docs) through "
+            "apply_typed's one route (full verdict + violation rows).\n\n"
             f"Protocol: {pairs[0]['protocol']} (and the 8/32 pair "
             "likewise). Paired alternation is required on this host: the "
             "sandbox VM shows loadavg 11-15 while idle, occasional "
             "96%-system-time episodes, and 10x wall-time variance between "
             "JVMs — unpaired comparisons are dominated by noisy-neighbor "
             "epochs. The 8->32 pair additionally collides with the "
-            "host's shared-CPU ceiling (~470k docs/s regardless of "
-            "backend); the lower pairs isolate the engine's scaling "
-            "behavior. The plans themselves are partition-parallel with "
-            "no driver-side loops and map-side-combined shuffles — the "
+            "host's shared-CPU ceiling; the lower pairs isolate the "
+            "engine's scaling behavior. The plans themselves are "
+            "partition-parallel with no driver-side loops and "
+            "map-side-combined shuffles — the "
             "shape that scales on a real cluster.\n\n"
-            "| backend | pair | N docs/s | 4N docs/s | efficiency |\n"
-            "|---|---|---|---|---|\n"
+            "| pair | N docs/s | 4N docs/s | efficiency |\n"
+            "|---|---|---|---|\n"
             + "\n".join(rows)
             + "\n\n" + _gate_line(pairs)
             + _probe_section(result)
             + f"Per-query seconds at sf={result['sf']}: "
             + f"`{json.dumps(result['queries'])}`\n\n"
             + f"Headline: **{result['docs_per_sec']} validated docs/sec** "
-            + f"(Column backend incl. violation rows) at "
-            + f"local[{result['cpus']}]; the Arrow verdict backend "
-            + "peaked at ~470k docs/s at local[32] in round-1 epochs "
-            + "(the shared host's observed ceiling).\n"
+            + f"(incl. violation rows) at local[{result['cpus']}].\n"
         )
 
 

@@ -1,7 +1,7 @@
 """Arrow-kernel execution backend: ConstraintNode DAG -> pyarrow
 compute over RecordBatches (df.mapInArrow).
 
-Third backend beside typed-Column and pyeval. Why it exists: higher-
+ValidationPlan.apply_typed's default route for typed rows. Why: higher-
 order array functions keep the Column path out of whole-stage codegen
 (interpreted eval ~300ns/predicate). Arrow kernels run the same
 predicates as C++ vector ops (RE2 regex, SIMD comparisons) over the
@@ -9,8 +9,8 @@ columnar buffers Spark already ships to Python workers — list columns
 flatten ZERO-copy (values child + offsets), per-document reduction is
 one numpy cumsum pass.
 
-Supported subset (supports() reports honestly; ValidationPlan falls
-back to the Column path otherwise): Switch/And/Or/Xor/Not over
+Supported subset (supports() reports honestly; apply_typed falls
+back to the Column lowering otherwise): Switch/And/Or/Xor/Not over
 struct/map/array/string/number/boolean columns, NumRange/NumInteger/
 NumMultipleOf/StrMatch/StrLength/ObjRequired/PropRange/ObjPropSet/
 ObjPropNames (struct AND map — map entries flatten like any list:
@@ -88,6 +88,8 @@ from jvst_spark.spec.nodes import (
 )
 
 _NUMERIC = (ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
+# non-string map keys the backend validates as their string rendering
+_CASTABLE_KEYS = (ByteType, ShortType, IntegerType, LongType, BooleanType)
 
 # evaluator signature: (arrow array) -> np.ndarray[bool] with null
 # semantics already resolved (never returns masked/None entries)
@@ -236,10 +238,7 @@ class _Compiler:
         if isinstance(dtype, MapType) and not isinstance(
             dtype.keyType, StringType
         ):
-            if not isinstance(
-                dtype.keyType,
-                (ByteType, ShortType, IntegerType, LongType, BooleanType),
-            ):
+            if not isinstance(dtype.keyType, _CASTABLE_KEYS):
                 raise Unsupported(
                     f"map key type {dtype.keyType.simpleString()}"
                 )
@@ -1125,7 +1124,13 @@ def _adecompose(comp: "_Compiler", node: Node, dtype: DataType, path: str):
                 return cnt
 
         else:
-            comp._map_keys_ok(dtype)
+            # counts entries only: castable keys need no cast here,
+            # but the rule must match compile()'s so supports() holds
+            # exactly when this decomposition does
+            if not isinstance(dtype.keyType, (StringType, *_CASTABLE_KEYS)):
+                raise Unsupported(
+                    f"map key type {dtype.keyType.simpleString()}"
+                )
 
             def nprops(a):
                 off, _, _ = _map_parts(a)
@@ -1268,8 +1273,9 @@ def compile_arrow_validate(
 
 def arrow_validate(plan, df, id_col: str = "doc_id"):
     """Full validation frame (doc_id, valid, _violations) via the Arrow
-    backend — row-identical to apply_typed's output columns (raises
-    Unsupported if the spec needs a fallback)."""
+    backend — row-identical to the Column lowering's output columns.
+    Raises Unsupported, before touching Spark, when the spec needs the
+    Column path (apply_typed's route test)."""
     row_type = StructType([df.schema[c] for c in df.columns])
     run = compile_arrow_validate(
         plan.spec.root, row_type, id_col, plan.spec.defs
@@ -1281,45 +1287,4 @@ def arrow_validate(plan, df, id_col: str = "doc_id"):
         run,
         f"doc_id {id_t}, valid boolean, "
         "_violations array<struct<code:int,path:string,message:string>>",
-    )
-
-
-def compile_arrow_verdicts(
-    root: Node,
-    row_type: StructType,
-    id_col: str,
-    defs: Optional[dict] = None,
-):
-    """Batch fn for df.mapInArrow: RecordBatch -> (doc_id, valid)."""
-    comp = _Compiler(defs or {})
-    # the row is an object over its columns: evaluate per top-level
-    # structure by wrapping columns into a StructArray per batch
-    ev = comp.compile(root, row_type)
-
-    def run(batches):
-        for batch in batches:
-            cols = [batch.column(i) for i in range(batch.num_columns)]
-            names = batch.schema.names
-            struct = pa.StructArray.from_arrays(cols, names=names)
-            valid = ev(struct)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(names.index(id_col)), pa.array(valid)],
-                names=["doc_id", "valid"],
-            )
-
-    return run
-
-
-def arrow_verdicts(plan, df, id_col: str = "doc_id"):
-    """Verdict DataFrame via the Arrow backend (raises Unsupported if
-    the spec needs a fallback)."""
-    row_type = StructType([df.schema[c] for c in df.columns])
-    run = compile_arrow_verdicts(
-        plan.spec.root, row_type, id_col, plan.spec.defs
-    )
-    id_t = df.schema[id_col].dataType.simpleString()
-    from jvst_spark.ops._parallel import ensure_min_parallelism
-
-    return ensure_min_parallelism(df).mapInArrow(
-        run, f"doc_id {id_t}, valid boolean"
     )

@@ -71,11 +71,8 @@ class CheckpointedValidation:
         out_dir: str,
         n_buckets: int = 16,
         id_col: str = "doc_id",
-        engine: str = "column",
         bucket_expr=None,
     ):
-        if engine not in ("column", "arrow"):
-            raise ValueError(f"engine must be column|arrow, got {engine!r}")
         self.plan = plan
         self.out_dir = out_dir
         self.n_buckets = n_buckets
@@ -91,11 +88,6 @@ class CheckpointedValidation:
         self._bucket_of = bucket_expr or (
             lambda c: F.pmod(F.xxhash64(c), self.n_buckets)
         )
-        # 'arrow' runs the resumable pass through the kernel backend —
-        # row-identical output (parity pinned in test_arrow_backend),
-        # ~1.4x faster full validation on this host. Manifests don't
-        # record the engine: verdicts are engine-independent.
-        self.engine = engine
         self._spec_hash = spec_hash(plan.spec)
         os.makedirs(os.path.join(out_dir, "_manifests"), exist_ok=True)
 
@@ -157,11 +149,7 @@ class CheckpointedValidation:
             part = df
             if len(pending) < self.n_buckets:
                 part = part.filter(bucket_col.isin(pending))
-            res = (
-                self.plan.apply_arrow(part, id_col=self.id_col)
-                if self.engine == "arrow"
-                else self.plan.apply_typed(part, id_col=self.id_col)
-            )
+            res = self.plan.apply_typed(part, id_col=self.id_col)
             out_root = os.path.join(self.out_dir, "verdicts")
             # A pending bucket's existing slice is stale BY DEFINITION
             # (pending == its manifest is missing or mismatched), and

@@ -117,18 +117,19 @@ def exact_snippet_overlap(
 
     Scale story (round-6): the broadcast nested-loop `contains` costs
     O(docs x snippets x text-length) — at bench scale (50k docs x 516
-    snippets) that was the whole query. Snippets of >= 6 whitespace
+    snippets) that was the whole query. Snippets of >= 7 whitespace
     tokens are instead PRE-FILTERED by an interior-token 5-gram
     equi-join: if a snippet "w1 w2 ... wk" occurs as a character
     substring of text, its interior tokens w2..w(k-1) necessarily
     appear as complete, consecutive whitespace tokens of text (each is
-    flanked by the match's own spaces), so text's token 5-gram set
-    must contain "w2 w3 w4 w5 w6". Candidate (doc, snippet) pairs come
-    from one corpus gram explode joined to the broadcast snippet-gram
-    table; the exact `contains` verifies only candidates. False
-    positives cost one contains each; no false negatives, so output is
-    identical. Snippets shorter than 6 tokens (no interior 5-gram)
-    keep the plain broadcast nested-loop route; both routes union
+    flanked by the match's own spaces; w1 and wk may be the tail and
+    head of longer text tokens), so with k >= 7 text's token 5-gram
+    set must contain "w2 w3 w4 w5 w6". Candidate (doc, snippet) pairs
+    come from one corpus gram explode joined to the broadcast
+    snippet-gram table; the exact `contains` verifies only candidates.
+    False positives cost one contains each; no false negatives, so
+    output is identical. Snippets shorter than 7 tokens (no interior
+    5-gram) keep the plain broadcast nested-loop route; both routes union
     before the rollup. Empty-token filtering on BOTH sides keeps the
     necessary condition exact under repeated spaces.
 
@@ -151,16 +152,17 @@ def exact_snippet_overlap(
         return F.filter(F.split(c, " "), lambda t: F.length(t) > 0)
 
     n_snip_toks = F.size(raw_toks(F.col(snip_col)))
-    # interior 5-gram of the snippet: tokens 2..6 (1-based slice)
+    # interior 5-gram of the snippet: tokens 2..6 (1-based slice),
+    # all interior only when the snippet has >= 7 tokens
     snip_gram = F.concat_ws(
         " ", F.slice(raw_toks(F.col(snip_col)), 2, 5)
     )
-    long_snips = snips.filter(n_snip_toks >= 6).select(
+    long_snips = snips.filter(n_snip_toks >= 7).select(
         F.col(snip_id_col).alias("_sid"),
         F.col(snip_col).alias("_snippet"),
         snip_gram.alias("_gram"),
     )
-    short_snips = snips.filter(n_snip_toks < 6)
+    short_snips = snips.filter(n_snip_toks < 7)
 
     # corpus token 5-grams (positional, not distinct — dedup happens on
     # the (doc, snippet) candidate level); token array let-bound so the
@@ -192,11 +194,9 @@ def exact_snippet_overlap(
     # planted from the snippet set), which defeats dataframe-attribute
     # qualification — explicit string aliases survive both
     c = corpus.alias("_jvst_corpus")
+    # no broadcast hint on cand: its size is set by the data
     verified = (
-        c.join(
-            F.broadcast(cand),
-            F.col(f"_jvst_corpus.{id_col}") == F.col("_cid"),
-        )
+        c.join(cand, F.col(f"_jvst_corpus.{id_col}") == F.col("_cid"))
         .filter(
             F.col(f"_jvst_corpus.{text_col}").contains(F.col("_snippet"))
         )

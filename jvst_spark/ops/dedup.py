@@ -24,6 +24,7 @@ from typing import List
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from jvst_spark.ops.text import tokens, word_shingles
 
@@ -702,16 +703,18 @@ def near_dup_components(
     # convergence via the label-sum invariant (round-6): min-label
     # propagation only ever DECREASES a node's label, so the label sum
     # strictly decreases until the fixpoint and is constant exactly
-    # there — one O(1)-row aggregate per round replaces the old
-    # new-vs-old join + its extra materialization (the join was one of
-    # the two per-round shuffles and existed only to count changes).
-    # decimal(38,0) keeps the sum exact at any node count / id range.
+    # there — one O(1)-row aggregate per round replaces a new-vs-old
+    # join that counts changed labels. decimal(38,0) keeps the sum
+    # exact at any node count, but only integral ids have a sum: any
+    # other id type (strings, doubles) counts changed labels instead.
+    integral = isinstance(labels.schema["lbl"].dataType, IntegralType)
+
     def _lbl_sum(frame):
         return frame.agg(
             F.sum(F.col("lbl").cast("decimal(38,0)"))
         ).collect()[0][0]
 
-    prev_sum = _lbl_sum(labels)
+    prev_sum = _lbl_sum(labels) if integral else None
     for _ in range(max_iter):
         msgs = sym.join(
             labels.withColumnRenamed("id", "u"), "u"
@@ -722,11 +725,19 @@ def near_dup_components(
             .agg(F.min("lbl").alias("lbl"))
             .localCheckpoint(eager=False)
         )
-        new_sum = _lbl_sum(new)
+        if integral:
+            new_sum = _lbl_sum(new)
+            done, prev_sum = new_sum == prev_sum, new_sum
+        else:
+            done = (
+                new.join(labels.withColumnRenamed("lbl", "_old"), "id")
+                .filter(F.col("lbl") != F.col("_old"))
+                .count()
+                == 0
+            )
         labels = new
-        if new_sum == prev_sum:
+        if done:
             break
-        prev_sum = new_sum
     else:
         logger.warning(
             "near_dup_components: no fixpoint after %d rounds "

@@ -19,6 +19,9 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # pinned, not defaulted: the Spark 4 default, and the mode the
+        # engine must be correct under
+        .config("spark.sql.ansi.enabled", "true")
         # per-Column-call origin capture costs 5 py4j round trips per
         # expression node (64% of cold plan-build traffic, measured:
         # 2,597 -> 937 calls on the flagship build)

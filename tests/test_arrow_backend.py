@@ -7,7 +7,7 @@ from pyspark.sql.types import StructType
 from jvst_spark.compiler.arrow_backend import (
     Unsupported,
     _Compiler,
-    arrow_verdicts,
+    arrow_validate,
     supports,
 )
 from jvst_spark.compiler.plan import ValidationPlan, compile_schema
@@ -29,10 +29,15 @@ class TestArrowFlagship:
 
     def test_verdict_parity_with_column_path(self, spark, spans_df):
         plan = ValidationPlan(compile_schema(FLAGSHIP_SPEC))
-        av = {r["doc_id"]: r["valid"] for r in arrow_verdicts(plan, spans_df).collect()}
+        av = {
+            r["doc_id"]: r["valid"]
+            for r in arrow_validate(plan, spans_df)
+            .select("doc_id", "valid")
+            .collect()
+        }
         cv = {
             r["doc_id"]: r["valid"]
-            for r in plan.apply_typed(spans_df).verdicts().collect()
+            for r in plan._apply_column(spans_df, "doc_id").verdicts().collect()
         }
         assert av == cv and len(av) == 500
 
@@ -40,8 +45,6 @@ class TestArrowFlagship:
         """Round-4: arrow_validate's violation ROWS — codes, paths
         (incl. '$[*]' array-leaf stars), messages, AND order — equal
         the typed Column path's on every flagship doc."""
-        from jvst_spark.compiler.arrow_backend import arrow_validate
-
         plan = ValidationPlan(compile_schema(FLAGSHIP_SPEC))
         av = {
             r["doc_id"]: (
@@ -57,10 +60,65 @@ class TestArrowFlagship:
                 [(v["code"], v["path"], v["message"])
                  for v in r["_violations"]],
             )
-            for r in plan.apply_typed(spans_df).frame.collect()
+            for r in plan._apply_column(spans_df, "doc_id").frame.collect()
         }
         assert av == tv and len(av) == 500
         assert any(v[1] for v in av.values())  # violations present
+
+
+class TestTypedRoute:
+    """apply_typed picks its route from the spec and the input schema
+    alone: the Arrow kernels when supports() holds, the Column lowering
+    otherwise. Either way the rows equal the Column lowering's."""
+
+    PY_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+                "BatchEvalPython")
+
+    @staticmethod
+    def _rows(frame):
+        return sorted(
+            (r["doc_id"], r["valid"],
+             [(v["code"], v["path"], v["message"])
+              for v in r["_violations"]])
+            for r in frame.collect()
+        )
+
+    def _check(self, plan, df, arrow):
+        row_type = StructType(df.schema.fields)
+        assert supports(plan.spec.root, row_type, plan.spec.defs) == arrow
+        frame = plan.apply_typed(df).frame
+        text = frame._jdf.queryExecution().executedPlan().toString()
+        assert [n for n in self.PY_NODES if n in text] == (
+            ["MapInArrow"] if arrow else []
+        )
+        assert self._rows(frame) == self._rows(
+            plan._apply_column(df, "doc_id").frame
+        )
+
+    def test_flagship_spans_take_the_arrow_route(self, spans_df):
+        plan = ValidationPlan(compile_schema(FLAGSHIP_SPEC))
+        self._check(plan, spans_df, arrow=True)
+
+    @pytest.mark.parametrize(
+        "key_type, key, arrow",
+        # float keys render differently per backend: the kernels
+        # decline them; integral keys validate as their string form
+        [("double", float, False), ("bigint", int, True)],
+    )
+    def test_map_key_type_picks_the_route(self, spark, key_type, key, arrow):
+        plan = ValidationPlan(compile_schema({
+            "type": "object",
+            "properties": {"m": {"type": "object", "minProperties": 1}},
+        }))
+        df = spark.createDataFrame(
+            [(0, {}), (1, {key(1): "a"}), (2, None),
+             (3, {key(2): "b", key(3): "c"})],
+            f"doc_id bigint, m map<{key_type},string>",
+        )
+        self._check(plan, df, arrow)
+        valid = {r["doc_id"]: r["valid"]
+                 for r in plan.apply_typed(df).verdicts().collect()}
+        assert valid == {0: False, 1: True, 2: True, 3: True}
 
 
 class TestArrowKernelsDirect:
@@ -265,7 +323,6 @@ class TestArrowMapColumns:
             "propertyNames": {"maxLength": 3},
             "additionalProperties": {"type": "integer", "minimum": 0},
         }
-        plan = ValidationPlan(compile_schema(schema))
         df = spark.range(200).select(
             F.col("id").alias("doc_id"),
             F.when(
@@ -282,12 +339,6 @@ class TestArrowMapColumns:
             )
             .alias("k_map"),
         )
-        # validate the map COLUMN as the document object
-        from jvst_spark.compiler.arrow_backend import compile_arrow_verdicts
-        from pyspark.sql.types import StructType as SpStruct
-
-        rt = SpStruct([df.schema[c] for c in df.columns])
-        spec = plan.spec
         # wrap: the row object has doc_id + k_map; validate k_map only
         wrapped = {
             "type": "object",
@@ -297,11 +348,11 @@ class TestArrowMapColumns:
         wplan = ValidationPlan(compile_schema(wrapped))
         av = {
             r["doc_id"]: r["valid"]
-            for r in arrow_verdicts(wplan, df).collect()
+            for r in arrow_validate(wplan, df).select("doc_id", "valid").collect()
         }
         cv = {
             r["doc_id"]: r["valid"]
-            for r in wplan.apply_typed(df).verdicts().collect()
+            for r in wplan._apply_column(df, "doc_id").verdicts().collect()
         }
         assert av == cv and len(av) == 200
         assert True in av.values() and False in av.values()

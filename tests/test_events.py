@@ -219,6 +219,25 @@ class TestExactSnippet:
         }
         assert out == {1: (1, 10), 3: (2, 10)}
 
+    def test_six_token_snippet_inside_a_longer_token(self, spark):
+        """A snippet's first and last tokens may be the tail and head
+        of longer text tokens, so a 6-token snippet has only 4 interior
+        tokens — too few for the 5-gram prefilter, which used to miss
+        doc 1 here."""
+        from jvst_spark.ops.decontaminate import exact_snippet_overlap
+
+        corpus = spark.createDataFrame(
+            [(1, "zz aa bb cc dd ee ffx yy"), (2, "aa bb cc dd ee ff")],
+            "doc_id bigint, text string",
+        )
+        snips = spark.createDataFrame(
+            [(10, "aa bb cc dd ee ff")], "snip_id bigint, snippet string"
+        )
+        got = sorted(
+            r["doc_id"] for r in exact_snippet_overlap(corpus, snips).collect()
+        )
+        assert got == [1, 2]
+
 
 class TestValueOutliers:
     def test_sigma_zero_and_threshold(self, spark):

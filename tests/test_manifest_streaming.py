@@ -165,33 +165,6 @@ class TestCheckpointedValidation:
         r2 = ck.run(df, input_fingerprint="fp-empty")
         assert [b.skipped for b in r2] == [True, True]
 
-    def test_arrow_engine_produces_identical_manifests(self, spark, plan, tmp_path):
-        """Round-4: the resumable pass can run on the Arrow backend —
-        manifests and verdict slices equal the Column engine's, and a
-        resume under the OTHER engine skips (verdicts are
-        engine-independent, so manifests carry no engine tag)."""
-        df = spans_from_documents(spark, SF_DIR)
-        ck_a = CheckpointedValidation(
-            plan, str(tmp_path / "a"), n_buckets=4, engine="arrow"
-        )
-        ra = ck_a.run(df, input_fingerprint="fp-1")
-        ck_c = CheckpointedValidation(
-            plan, str(tmp_path / "c"), n_buckets=4, engine="column"
-        )
-        rc = ck_c.run(df, input_fingerprint="fp-1")
-        assert [(b.bucket, b.n_docs, b.n_valid, b.n_violations) for b in ra] \
-            == [(b.bucket, b.n_docs, b.n_valid, b.n_violations) for b in rc]
-        # cross-engine resume: column run resumes over arrow's output
-        ck_x = CheckpointedValidation(
-            plan, str(tmp_path / "a"), n_buckets=4, engine="column"
-        )
-        rx = ck_x.run(df, input_fingerprint="fp-1")
-        assert [b.skipped for b in rx] == [True] * 4
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            CheckpointedValidation(plan, str(tmp_path), engine="gpu")
-
     def test_spec_hash_stable(self):
         a = spec_hash(compile_schema(FLAGSHIP_SPEC).__class__(
             compile_schema(FLAGSHIP_SPEC).root,

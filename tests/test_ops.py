@@ -253,6 +253,21 @@ class TestDedup:
         }
         assert got == {1: 1, 3: 1, 4: 1, 5: 1}
 
+    def test_near_dup_components_string_ids(self, spark):
+        """Non-integral ids have no label sum: convergence must count
+        changed labels (the decimal sum raised CAST_INVALID_INPUT under
+        ANSI and stopped after one round without it)."""
+        from jvst_spark.ops.dedup import near_dup_components
+
+        df = spark.createDataFrame(
+            [("d", "c"), ("c", "b"), ("b", "a")], "doc_a string, doc_b string"
+        )
+        got = {
+            r["doc_id"]: r["component_id"]
+            for r in near_dup_components(df).collect()
+        }
+        assert got == {"a": "a", "b": "a", "c": "a", "d": "a"}
+
 
 class TestSimilarity:
     def test_blocked_gemm_multi_block_matches_exact(self, spark, emb):

@@ -41,8 +41,9 @@ def test_plans_md_has_no_error_sections():
 def test_no_python_in_validation_plans():
     """The audited plan-shape invariants that define the engine's 100 TB
     story: every row-level validation query — typed AND dynamic JSON,
-    verdicts AND violations — runs with zero Python nodes (the Arrow
-    backend's mapInArrow stage is the one deliberate exception)."""
+    verdicts AND violations — runs with no row-at-a-time Python UDF
+    (BatchEvalPython); the typed route's vectorized mapInArrow stage
+    is the one deliberate Python boundary there."""
     with open(os.path.join(REPO_ROOT, "PLANS.md")) as f:
         text = f.read()
     sections = dict(
