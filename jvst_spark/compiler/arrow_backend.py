@@ -1037,7 +1037,7 @@ class _Compiler:
 
 # ---- violation rows (round-4) --------------------------------------
 #
-# The Arrow backend's check decomposition mirrors typed.decompose_checks
+# The Arrow backend's check decomposition mirrors typed._decompose
 # EXACTLY (same codes, same paths incl. "$[*]" array-leaf stars, same
 # null-guard semantics) so all three backends produce identical
 # violation rows for the same input — verified by running the same

@@ -1,18 +1,18 @@
-"""JVM-side fast path for dynamic-JSON validation.
+"""JVM-side violation rows for dynamic-JSON validation.
 
 For schemas whose checks fit Spark's built-in JSON/variant functions,
-the per-document verdict lowers to pure Column expressions —
-`try_parse_json` + `schema_of_variant` + `try_variant_get` +
-`json_object_keys` — keeping the 100 TB verdict path out of Python
-entirely (round-1 weak item: `val_json_props` ran a row-at-a-time
-pandas UDF for a spec that is all required/integer/range/
-additionalProperties). pyeval remains the authoritative fallback —
-after round 5 reachable only for cyclic $ref specs run WITHOUT an
-unroll depth — exactly as the reference keeps its general VM
-(src/validate_vm.c:1136-1592) while constant-folding what it can.
+`try_lower_full` lowers each document's verdict and its coded
+violation rows to pure Column expressions — `try_parse_json` +
+`schema_of_variant` + `try_variant_get` + `json_object_keys` — so
+`ValidationPlan.apply_json`'s frame / violations() / metrics() plans
+hold no Python node. Verdicts (apply_json's verdicts()) always come
+from the compiled-Python validator, and the explainer UDF serves the
+rows of every spec outside the subset — exactly as the reference
+keeps its general VM (src/validate_vm.c:1136-1592) while
+constant-folding what it can.
 
-Supported subset (try_lower returns None otherwise — never wrong,
-only absent):
+Supported subset (try_lower_full returns None otherwise — never
+wrong, only absent):
 - Switch over the parsed value's runtime type, at any nesting depth
 - number arm:  NumRange / NumInteger / NumMultipleOf (+combinators)
 - string arm:  StrLength / StrMatch (+combinators)
@@ -20,8 +20,9 @@ only absent):
 - array arms at ANY depth via cast-to-array<variant> + higher-order
   functions: min/maxItems, items/additionalItems (elements recurse
   through the full value lowering — arrays of objects included),
-  contains, uniqueItems (canonicalized element text: to_json's sorted
-  keys + every number token rewritten through double)
+  contains. NOT uniqueItems: parse_json drops the sign of a decimal
+  -0.0, so [0.0, -0.0] would read as a duplicate where pyeval and the
+  reference keep the two distinct.
 - EnumMatch at value level: scalars per arm; COMPOSITE literals
   (objects/arrays) via enum-regime canonical text — both sides of the
   comparison run the same Spark canon expression, the literal side
@@ -42,21 +43,21 @@ only absent):
 - acyclic $ref at any position (inlined at lowering time); CYCLIC
   refs via opt-in bounded unrolling (max_ref_depth) — without it
   they stay on pyeval
-- violation ROWS as well as verdicts (try_lower_full) — same subset
 
 Semantic parity contracts with pyeval (tested in
 test_json_builtin.py): strict JSON (NaN/Infinity rejected), numbers
-compared as doubles, duplicate keys deduped, absent key != null value.
+compared as doubles, duplicate keys rejected, absent key != null
+value.
 
-Measured honesty (sf0.1, paired min-of-3, local[8], round 3): variant
+Measured (4 cores, alternating routes, every result checked): variant
 expressions never enter whole-stage codegen, so this path runs
-interpreted; after let-binding every (variant, text, type) triple it
-is still 2-4x SLOWER per CPU than the Arrow-batched pyeval pandas UDF
-on ~100-300B documents (props 2.2s vs 1.0s; nested 4.9s vs 1.6s;
-array-of-objects 13.0s vs 3.5s per 100k docs). What the JVM path buys
-instead: zero Python workers (memory + deployment surface on a
-1000-executor cluster), verdict plans with no Python node, and column
-pruning that drops the violations UDF entirely. For sustained 100 TB
+interpreted. Violation rows of `val_json_violations` at sf0.1 (10
+pairs, identical 70,123 rows): variant Columns 3,369 ms median (q1-q3
+3,293-3,411) vs explainer UDF 4,355 ms (3,992-4,909). On perfbench's
+json_docs generator (seed 1, 20k docs per spec, 6 pairs): a
+uniqueItems array spec ran 2,971 ms on variant vs 1,923 ms on the
+explainer UDF (one more reason uniqueItems stays off this path); the
+dynamic-properties spec tied, 1,376 vs 1,284 ms. For sustained 100 TB
 throughput on a known schema, project JSON into typed columns once
 and use apply_typed — the dynamic path is schema-on-read.
 """
@@ -74,7 +75,6 @@ from jvst_spark.spec.nodes import (
     And,
     ArrContains,
     ArrItems,
-    ArrUnique,
     EnumMatch,
     Invalid,
     ItemRange,
@@ -319,7 +319,7 @@ class _Value:
 
     def elems(self) -> Column:
         """The value as array<variant> (NULL when not an array) — the
-        element axis for items/contains/uniqueItems. Each element is a
+        element axis for items/contains. Each element is a
         full variant, so element checks recurse through _lower_value
         with no depth limit on the SPEC side."""
         return F.try_variant_get(self._v, self._path, "array<variant>")
@@ -453,60 +453,28 @@ _JSON_STR_OR_NUM = (
 )
 
 
-def _canon_elem_text(txt: Column) -> Column:
-    """Canonical text of one array element (from its to_json text)
-    for uniqueItems equality.
-
-    to_json(variant) already yields sorted object keys and normalized
-    decimals; the remaining inequality between textually-different but
-    numerically-equal tokens (1e30 vs 10...0 stored DECIMAL, variant
-    DOUBLE vs DECIMAL prints) is removed by rewriting EVERY number
-    token — at any nesting depth — to its double's canonical string:
-    mark number tokens with \\x01 sentinels (strings are protected by
-    the group-1 alternation), split, cast odd slots through double,
-    rejoin. Equality of the result matches pyeval's canonicalize()
-    ('all numbers compared as doubles', the reference's UEM recipe,
-    src/validate_uniq.c:219-355), because string->double parsing is
-    correctly-rounded IEEE on both engines and double->string is
-    injective on both.
-
-    Known divergence (documented, tested): a decimal-form negative
-    zero token ('-0.0', '-0.00') loses its sign inside parse_json
-    itself (variant stores it as DECIMAL 0) before this code runs, so
-    under uniqueItems the fast path sees it equal to 0 while
-    pyeval/the reference keep the bit patterns distinct
-    (XXH64-over-bytes hashing, src/validate_uniq.c:43). '-0' (both
-    engines drop the sign: int has no -0) and exponent forms
-    '-0.0e2' (both keep it: variant stores DOUBLE) agree."""
-    return _canon_text(txt, enum_regime=False)
-
-
 def _canon_enum_text(txt: Column) -> Column:
-    """Canonical text in the ENUM number regime: like _canon_elem_text
-    but every number token passes through `+ 0.0`, collapsing -0.0
-    into 0 exactly as the reference's NUM_RANGE enum desugar does
-    (src/validate_constraints.c:1140-1154)."""
-    return _canon_text(txt, enum_regime=True)
-
-
-def _canon_text(txt: Column, enum_regime: bool) -> Column:
-    """ONE tokenizer pipeline behind both canon regimes (a tokenizer
-    fix must never reach one regime and miss the other): mark number
-    tokens with sentinels, split, rewrite odd slots through double
-    (+0.0 in the enum regime), rejoin."""
+    """Canonical text of a JSON value (from its to_json text) for enum
+    equality. to_json(variant) already yields sorted object keys and
+    normalized decimals; the remaining inequality between textually-
+    different but numerically-equal tokens (1e30 vs 10...0 stored
+    DECIMAL, variant DOUBLE vs DECIMAL prints) is removed by rewriting
+    EVERY number token — at any nesting depth — to its double's
+    canonical string: mark number tokens with \\x01 sentinels (strings
+    are protected by the group-1 alternation), split, cast odd slots
+    through double, rejoin. Each token also passes through `+ 0.0`,
+    collapsing -0.0 into 0 exactly as the reference's NUM_RANGE enum
+    desugar does (src/validate_constraints.c:1140-1154). Equality of
+    the result matches pyeval's canonicalize(neg_zero_distinct=False),
+    because string->double parsing is correctly-rounded IEEE on both
+    engines and double->string is injective on both."""
     marked = F.regexp_replace(txt, _JSON_STR_OR_NUM, "$1\x01$2\x01")
     parts = F.split(marked, "\x01", -1)
-
-    def rewrite(p: Column) -> Column:
-        d = p.cast("double")
-        if enum_regime:
-            d = d + F.lit(0.0)
-        return d.cast("string")
-
     norm = F.transform(
         parts,
         lambda p, i: F.when(
-            (i % 2 == 1) & (p != ""), rewrite(p)
+            (i % 2 == 1) & (p != ""),
+            (p.cast("double") + F.lit(0.0)).cast("string"),
         ).otherwise(p),
     )
     return F.array_join(norm, "")
@@ -537,18 +505,16 @@ def _items_elem_cond(n: ArrItems, e: Column, txt: Column, i: Column) -> Column:
 def _array_checks(node: Node, val: _Value) -> Column:
     """Array-arm leaves over the array<variant> element axis:
     min/maxItems, items/additionalItems (full subschema recursion via
-    _lower_value — nested objects/arrays included), contains, and
-    uniqueItems via canonicalized element text.
+    _lower_value — nested objects/arrays included) and contains.
 
-    Two-phase lowering (measured 17.4s -> 4.6s at sf0.1 for the
-    items+contains+uniqueItems spec): phase 1 computes EVERY leaf's
-    per-element component (items verdict, contains hit, canonical
-    text) inside ONE transform, with the element's to_json text bound
-    once per element — so the array walk, the element serialization,
+    Two-phase lowering (measured 17.4s -> 4.6s at sf0.1, round 3):
+    phase 1 computes EVERY leaf's per-element component (items
+    verdict, contains hit) inside ONE transform, with the element's
+    to_json text bound once per element — so the array walk, the element serialization,
     and the element's variant accessors run once regardless of how
     many keywords consume them. Phase 2 let-binds that bound array
     and reduces each leaf over precomputed struct fields (forall /
-    exists / array_distinct), where a Column-tree re-reference would
+    exists), where a Column-tree re-reference would
     otherwise re-evaluate the whole per-element pass per keyword
     (items alone 8.5s + contains alone 6.5s superadded to 17.4s)."""
     leaves: list[Node] = []
@@ -565,7 +531,7 @@ def _array_checks(node: Node, val: _Value) -> Column:
                 n not in leaves
             ):
                 leaves.append(n)
-        elif isinstance(n, (ArrContains, ArrUnique)):
+        elif isinstance(n, ArrContains):
             if n not in leaves:
                 leaves.append(n)
         elif isinstance(n, (ItemRange, Valid, Invalid)):
@@ -585,10 +551,8 @@ def _array_checks(node: Node, val: _Value) -> Column:
             for j, n in enumerate(leaves):
                 if isinstance(n, ArrItems):
                     c = _items_elem_cond(n, e, txt, i)
-                elif isinstance(n, ArrContains):
+                else:  # ArrContains
                     c = _sub_cond(n.schema, e, txt)
-                else:  # ArrUnique
-                    c = _canon_elem_text(txt)
                 cols.append(c.alias(f"f{j}"))
             return F.struct(*cols)
 
@@ -614,11 +578,6 @@ def _array_checks(node: Node, val: _Value) -> Column:
             if isinstance(n, ArrContains):
                 fld = f"f{idx[n]}"
                 return F.exists(ba, lambda x: x[fld])
-            if isinstance(n, ArrUnique):
-                fld = f"f{idx[n]}"
-                return F.size(ba) == F.size(
-                    F.array_distinct(F.transform(ba, lambda x: x[fld]))
-                )
             raise _Unsupported(f"array leaf {type(n).__name__}")
 
         return _boolish(node, leaf)
@@ -1064,8 +1023,10 @@ def _chk_array(node: Node) -> None:
             return
         if isinstance(n, ArrContains):
             return _chk_value(n.schema)
-        if isinstance(n, ArrUnique):
-            return
+        # uniqueItems stays on the explainer UDF: parse_json drops the
+        # sign of a decimal -0.0, so [0.0, -0.0] would read as a
+        # duplicate here while pyeval and the reference keep them
+        # distinct (XXH64 over raw double bytes, src/validate_uniq.c:43)
         raise _Unsupported(f"array leaf {type(n).__name__}")
 
     _chk_combinators(node, leaf)
@@ -1284,13 +1245,6 @@ def _explain_array(node: Node, val: _Value, path: Column) -> Column:
                 elems, lambda e: _sub_cond(n.schema, e, F.to_json(e))
             )
             return _gate_vio(hit, E.INVALID_UNSATISFIED_CONTAINS, path)
-        if isinstance(n, ArrUnique):
-            uniq = F.size(elems) == F.size(
-                F.array_distinct(
-                    F.transform(elems, lambda e: _canon_elem_text(F.to_json(e)))
-                )
-            )
-            return _gate_vio(uniq, E.INVALID_NOT_UNIQUE, path)
         raise _Unsupported(f"array explain leaf {type(n).__name__}")
 
     return _explain_combinators(
@@ -1537,10 +1491,11 @@ def try_lower_full(
 ) -> Optional[Callable[[Column], Column]]:
     """CompiledSpec -> (json string Column -> exploded
     struct<valid:boolean, vios:array<struct<code,path,message>>>),
-    or None when the spec needs the general pyeval path. Supported
-    subset == try_lower's (same structural check), so a spec either
-    gets the fully-JVM plan (verdict AND violations, zero Python) or
-    falls back to pyeval for both. `max_ref_depth` opts cyclic $ref
+    or None when the spec needs the general pyeval path (the
+    supportability check is structural, so this is safe to call
+    without an active SparkSession). A spec either gets fully-JVM
+    violation rows and verdict column (zero Python) or falls back to
+    pyeval for both. `max_ref_depth` opts cyclic $ref
     specs into bounded unrolling (see _inline_refs) — without it they
     return None and stay on pyeval.
 
@@ -1598,35 +1553,9 @@ def try_lower_full(
     return build
 
 
-def try_lower(
-    spec, max_ref_depth: int | None = None
-) -> Optional[Callable[[Column], Column]]:
-    """CompiledSpec -> (json string Column -> boolean verdict Column),
-    or None when the spec needs the general pyeval path. The returned
-    expression is null-safe: malformed/NULL documents -> False. The
-    supportability check is structural, so this is safe to call
-    without an active SparkSession. `max_ref_depth` opts cyclic $ref
-    specs into bounded unrolling (see _inline_refs)."""
-    try:
-        root = (
-            _inline_refs(spec.root, spec.defs, max_ref_depth)
-            if spec.defs
-            else spec.root
-        )
-        _chk_value(root)
-    except _Unsupported:
-        return None
-
-    def build(col: Column) -> Column:
-        return _build(root, col, F.try_parse_json(col))
-
-    return build
-
-
 def _strict_guard(col: Column, v: Column) -> Column:
-    """STRICT-JSON guard shared by the verdict-only and full builders
-    (one definition so a strictness fix can never diverge them): the
-    JVM JSON functions are lenient about trailing tokens
+    """STRICT-JSON guard of try_lower_full's verdict: the JVM JSON
+    functions are lenient about trailing tokens
     ('{"k":5}extra') and json_array_length alone allows single quotes /
     raw control chars; the conjunction of "input wrapped in [...] is a
     1-element JSON array" with "the variant parser accepts it" matches
@@ -1637,10 +1566,3 @@ def _strict_guard(col: Column, v: Column) -> Column:
     return (
         F.json_array_length(F.concat(F.lit("["), col, F.lit("]"))) == 1
     ) & (v.cast("string").isNotNull() | F.is_variant_null(v))
-
-
-def _build(root: Node, col: Column, v: Column) -> Column:
-    expr = _lower_value(root, _Value(v, "$", text=col))
-    # malformed / non-JSON / SQL NULL -> schema_of_variant is NULL ->
-    # every typ test is NULL -> coalesce to invalid
-    return F.coalesce(_strict_guard(col, v) & expr, _F())

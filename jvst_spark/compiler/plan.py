@@ -19,8 +19,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from functools import reduce
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,12 +33,7 @@ from pyspark.sql.types import (
 
 from jvst_spark import errors as E
 from jvst_spark.compiler.pyeval import compile_explain, compile_python
-from jvst_spark.compiler.typed import (
-    Check,
-    build_violation_program,
-    decompose_checks,
-    lower_typed,
-)
+from jvst_spark.compiler.typed import build_violation_program, lower_typed
 from jvst_spark.spec.canonify import canonify
 from jvst_spark.spec.nodes import Node
 from jvst_spark.spec.translate import translate_with_defs
@@ -60,6 +54,37 @@ def _no_dup_pairs(pairs):
             raise ValueError(f"duplicate object key: {k!r}")
         d[k] = v
     return d
+
+
+def _doc_violations(txt, validator, explainer=None) -> list:
+    """One JSON text -> its violations as [{code, path}], [] when valid.
+
+    The dynamic-JSON contract of both Python UDFs: strict JSON
+    (NaN/Infinity literals and duplicate keys rejected, as by the
+    reference's SJP parser and json_builtin._strict_guard) -> else
+    INVALID_JSON; an evaluation error -> INVALID_UNEXPECTED_TOKEN, so
+    one adversarial document (e.g. RecursionError on a deep doc)
+    yields a verdict and never kills the Spark task. Without an
+    explainer (verdict-only callers read emptiness) an invalid
+    document yields that one UNEXPECTED_TOKEN row."""
+    if txt is None:
+        return [{"code": E.INVALID_JSON, "path": "$"}]
+    try:
+        doc = json.loads(
+            txt, parse_constant=_bad_const, object_pairs_hook=_no_dup_pairs
+        )
+    except (ValueError, RecursionError):
+        return [{"code": E.INVALID_JSON, "path": "$"}]
+    unexpected = [{"code": E.INVALID_UNEXPECTED_TOKEN, "path": "$"}]
+    try:
+        if validator(doc):
+            return []
+        if explainer is None:
+            return unexpected
+        rows = [{"code": c, "path": p} for c, p in explainer(doc)]
+        return rows or unexpected
+    except (OverflowError, RecursionError, ValueError):
+        return unexpected
 
 
 _VIOLATION_ELEM = StructType(
@@ -102,26 +127,17 @@ class ValidationPlan:
     mapInArrow stage where they cover the spec, pure Column
     expressions otherwise (the 100 TB path).
 
-    Dynamic mode (`over_json`): a string column holding arbitrary JSON
-    is validated by the compiled Python closure inside a pandas UDF —
-    Arrow-batched; the per-document analogue of one VM run.
+    Dynamic mode (`apply_json`): a string column holding arbitrary
+    JSON — verdicts from the compiled Python closure in an
+    Arrow-batched pandas UDF (the per-document analogue of one VM
+    run), violation rows from JVM variant Columns where the spec
+    lowers.
     """
 
     def __init__(self, spec: CompiledSpec):
         self.spec = spec
 
     # ------------------------------------------------ typed (scale) --
-
-    def typed_checks(
-        self, row_type: StructType, row_col: Optional[Column] = None
-    ) -> List[Check]:
-        if row_col is None:
-            row_col = F.struct(
-                *[F.col(f.name).alias(f.name) for f in row_type.fields]
-            )
-        return decompose_checks(
-            self.spec.root, row_type, row_col, "$", self.spec.defs
-        )
 
     def valid_expr(
         self, row_type: StructType, row_col: Optional[Column] = None
@@ -305,10 +321,19 @@ class ValidationPlan:
     ) -> "ValidationResult":
         """Validate a column of JSON text documents.
 
-        The compiled closure is built once on the driver and shipped in
-        the UDF's closure; executors parse + validate per Arrow batch
-        (jvst: compile once, jvst_vm_more per document,
-        src/main.c:372-417).
+        One route, fixed by the spec and `max_ref_depth` alone:
+        - `verdicts()` reads the compiled-Python validator in one
+          Arrow-batched pandas UDF (json.loads + closure per document;
+          jvst: compile once, jvst_vm_more per document,
+          src/main.c:372-417). Variant expressions are CodegenFallback
+          (interpreted): this validator beat them 1.31x (flat props)
+          to 2.58x (depth-9 recursive) on every benchmark spec.
+        - `frame`, `violations()` and `metrics()` read the JVM variant
+          Columns (`json_builtin.try_lower_full`) when the spec lowers
+          — no Python node in the plan — and otherwise the explainer
+          UDF (compiled Python, authoritative for everything the
+          lowering declines, e.g. cyclic $ref without max_ref_depth
+          or uniqueItems). Both routes emit the same rows.
 
         `max_ref_depth` (round-5): opt a CYCLIC $ref spec into the JVM
         variant fast path by unrolling each ref cycle to depth D —
@@ -323,34 +348,15 @@ class ValidationPlan:
         (parity pinned in test_json_builtin.py). The bound is honored
         on EVERY route: if the spec cannot unroll (a cut landing under
         not/oneOf — where Invalid-at-cut would not be fail-closed — or
-        any other lowering refusal), the pyeval fallback applies the
+        any other lowering refusal), the compiled Python applies the
         same cut dynamically (per-path re-entry counter), never true
         recursion. Default None = cycles stay on the authoritative
         unbounded pyeval closures.
 
-        `engine` (round-5) selects the dynamic-JSON route:
-          auto    — cost-based (round-6): when the spec lowers, the
-                    returned result is a HYBRID — verdicts() reads the
-                    compiled-Python validator (Arrow-batched pandas
-                    UDF), violations()/frame/metrics read the JVM
-                    variant Columns. When the spec does not lower,
-                    everything runs on pyeval.
-          variant — force the JVM route everywhere (the zero-Python-
-                    workers deployment escape); ValueError if the spec
-                    does not lower (cyclic $ref without max_ref_depth).
-          pyeval  — force the Arrow-batched pandas-UDF route (compiled
-                    Python closures per document).
-        The auto split is the measured access-level cost model
-        (sf1.0 json-engine table, paired min-of-3, round-6): pyeval
-        verdicts beat interpreted variant expressions on EVERY
-        benchmark spec — 1.31x (flat props) to 2.58x (depth-9
-        recursive) — because variant exprs are CodegenFallback, while
-        variant violation ROWS beat pyeval 2.2x (the explainer
-        re-walks per invalid document). Verdict access is the
-        valid-dominated 100 TB hot path; violation access stays
-        Python-free."""
-        import pandas as pd
-
+        `engine` selects nothing: "auto" is its only legal value."""
+        # kept only because perfbench/workloads.py passes engine="auto"
+        if engine != "auto":
+            raise ValueError(f"engine must be 'auto', got {engine!r}")
         from jvst_spark.ops._parallel import ensure_min_parallelism
 
         # variant/JSON expressions are interpreted (CodegenFallback) —
@@ -360,159 +366,68 @@ class ValidationPlan:
 
         # compile-once cache (same scheme as apply_typed: ~1.1s of
         # py4j chatter per build, expressions depend only on
-        # (spec, json_col), session-scoped so JVM refs never go stale)
+        # (spec, json_col, max_ref_depth), session-scoped so JVM refs
+        # never go stale)
         spark = df.sparkSession
         cache = getattr(spark, "_jvst_json_expr_cache", None)
         if cache is None:
             cache = {}
             spark._jvst_json_expr_cache = cache
-        if engine not in ("auto", "variant", "pyeval"):
-            raise ValueError(
-                f"engine must be auto|variant|pyeval, got {engine!r}"
-            )
         key = (
             repr(self.spec.root),
             repr(sorted(self.spec.defs.items())),
             json_col,
             max_ref_depth,
-            engine,
         )
-        cached = cache.get(key)
-        if cached is not None:
-            kind, payload = cached
-            if kind == "jvm":
-                return ValidationResult(self._project(df, id_col, payload))
-            if kind == "hybrid":
-                packed, hy_valid = payload
-                return ValidationResult(
-                    self._project(df, id_col, packed),
-                    verdicts_frame=df.select(
-                        F.col(id_col).alias("doc_id"),
-                        F.spark_partition_id().alias("partition_id"),
-                        hy_valid,
-                    ),
-                )
-            valid_col, vio_col = payload
-            return ValidationResult(
-                df.select(
-                    F.col(id_col).alias("doc_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    valid_col,
-                    vio_col,
-                )
-            )
+        if key not in cache:
+            cache[key] = self._json_columns(F.col(json_col), max_ref_depth)
+        packed, valid = cache[key]
+        return ValidationResult(
+            self._project(df, id_col, packed),
+            verdicts_frame=df.select(
+                F.col(id_col).alias("doc_id"),
+                F.spark_partition_id().alias("partition_id"),
+                valid,
+            ),
+        )
 
-        # JVM fast path (round 4): when the spec fits the variant
-        # lowering, the verdict AND the violation rows are pure Column
-        # expressions — no Python anywhere in the plan (the reference's
-        # output IS coded violations, src/validate_ir.h:134-163, so the
-        # 100 TB violations path must be vectorized too). Two-tier
-        # packing as in apply_typed: violations evaluate only in the
-        # lazy ELSE for invalid rows.
+    def _json_columns(self, doc: Column, max_ref_depth: Optional[int]):
+        """(packed struct<valid, vios> for `_project`, verdict Column)
+        of apply_json's one route."""
+        from pyspark.sql.types import BooleanType
+
         from jvst_spark.compiler.json_builtin import try_lower_full
 
-        fast_full = (
-            None
-            if engine == "pyeval"
-            else try_lower_full(self.spec, max_ref_depth)
-        )
-        if engine == "variant" and fast_full is None:
-            raise ValueError(
-                "engine='variant' but the spec does not lower to the "
-                "JVM fast path (a cyclic $ref without max_ref_depth, a "
-                "ref cut under not/oneOf, an expansion-budget overrun, "
-                "or a pattern the java regex dialect cannot express)"
-            )
-        if fast_full is not None:
-            packed = fast_full(F.col(json_col))
-            if engine == "variant":
-                cache[key] = ("jvm", packed)
-                return ValidationResult(self._project(df, id_col, packed))
-            # auto + spec lowers -> hybrid (round-6 cost model, see
-            # docstring): verdict access runs the compiled-Python
-            # VALIDATOR closure (no explainer — verdict-only work) in
-            # an Arrow-batched pandas UDF; violations/frame/metrics
-            # stay on the zero-Python variant Columns.
-            hy_validator = compile_python(
-                self.spec.root, self.spec.defs, max_ref_depth
-            )
-
-            from pyspark.sql.types import BooleanType
-
-            @F.pandas_udf(BooleanType(), F.PandasUDFType.SCALAR)
-            def hy_valid_udf(s):
-                def run(txt):
-                    if txt is None:
-                        return False
-                    try:
-                        doc = json.loads(
-                            txt,
-                            parse_constant=_bad_const,
-                            object_pairs_hook=_no_dup_pairs,
-                        )
-                    except (ValueError, RecursionError):
-                        return False
-                    try:
-                        return bool(hy_validator(doc))
-                    except (OverflowError, RecursionError, ValueError):
-                        return False
-
-                return s.map(run)
-
-            hy_valid = hy_valid_udf(F.col(json_col)).alias("valid")
-            cache[key] = ("hybrid", (packed, hy_valid))
-            return ValidationResult(
-                self._project(df, id_col, packed),
-                verdicts_frame=df.select(
-                    F.col(id_col).alias("doc_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    hy_valid,
-                ),
-            )
-
-        # general fallback: the compiled-Python closure inside an
-        # Arrow-batched pandas UDF (authoritative for cyclic $ref specs
-        # and anything else the variant lowering declines). The bound
-        # is passed through: max_ref_depth keeps its cut semantics on
-        # THIS route too (pyeval's dynamic per-path counter — review
-        # finding: falling back used to silently run true recursion,
-        # flipping verdicts for beyond-depth documents)
         validator = compile_python(
             self.spec.root, self.spec.defs, max_ref_depth
         )
+
+        @F.pandas_udf(BooleanType(), F.PandasUDFType.SCALAR)
+        def valid_udf(s):
+            return s.map(lambda txt: not _doc_violations(txt, validator))
+
+        valid = valid_udf(doc).alias("valid")
+
+        # violation rows: the variant Columns when the spec lowers —
+        # two-tier packing as in apply_typed, violations evaluate only
+        # in the lazy ELSE for invalid rows (the reference's output IS
+        # coded violations, src/validate_ir.h:134-163, so the 100 TB
+        # violations path stays vectorized)
+        lowered = try_lower_full(self.spec, max_ref_depth)
+        if lowered is not None:
+            return lowered(doc), valid
+
+        # otherwise the explainer UDF; max_ref_depth keeps its cut
+        # semantics here too (pyeval's dynamic per-path counter)
         explainer = compile_explain(
             self.spec.root, self.spec.defs, max_ref_depth
         )
 
         @F.pandas_udf(ArrayType(_VIOLATION_ELEM), F.PandasUDFType.SCALAR)
         def violations_udf(s):
-            def run(txt):
-                if txt is None:
-                    return [{"code": E.INVALID_JSON, "path": "$"}]
-                try:
-                    # strict JSON: NaN/Infinity literals are rejected,
-                    # as by the reference's SJP parser and the JVM-side
-                    # fast path (try_parse_json)
-                    doc = json.loads(
-                        txt,
-                        parse_constant=_bad_const,
-                        object_pairs_hook=_no_dup_pairs,
-                    )
-                except (ValueError, RecursionError):
-                    return [{"code": E.INVALID_JSON, "path": "$"}]
-                # one adversarial document must yield a verdict, never
-                # kill the Spark task (e.g. RecursionError on a deep
-                # doc): evaluation errors -> invalid
-                try:
-                    if validator(doc):
-                        return []
-                    return [
-                        {"code": c, "path": p} for c, p in explainer(doc)
-                    ] or [{"code": E.INVALID_UNEXPECTED_TOKEN, "path": "$"}]
-                except (OverflowError, RecursionError, ValueError):
-                    return [{"code": E.INVALID_UNEXPECTED_TOKEN, "path": "$"}]
-
-            return s.map(run)
+            return s.map(
+                lambda txt: _doc_violations(txt, validator, explainer)
+            )
 
         msg_map = F.create_map(
             *[
@@ -521,36 +436,30 @@ class ValidationPlan:
                 for x in (F.lit(code), F.lit(E.invalid_msg(code)))
             ]
         )
-        vio = violations_udf(F.col(json_col))
-        # (try_lower_full covers exactly the specs try_lower covers, so
-        # on this branch the verdict derives from the explainer's rows)
-        valid_col = (F.size(vio) == 0).alias("valid")
-        vio_col = F.transform(
-            vio,
-            lambda x: F.struct(
-                x["code"].alias("code"),
-                x["path"].alias("path"),
-                F.element_at(msg_map, x["code"]).alias("message"),
-            ),
-        ).alias("_violations")
-        cache[key] = ("udf", (valid_col, vio_col))
-        base = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.spark_partition_id().alias("partition_id"),
-            valid_col,
-            vio_col,
+        vio = violations_udf(doc)
+        packed = F.struct(
+            (F.size(vio) == 0).alias("valid"),
+            F.transform(
+                vio,
+                lambda x: F.struct(
+                    x["code"].alias("code"),
+                    x["path"].alias("path"),
+                    F.element_at(msg_map, x["code"]).alias("message"),
+                ),
+            ).alias("vios"),
         )
-        return ValidationResult(base)
+        return packed, valid
 
 
 class ValidationResult:
     """Lazy holder for the one-pass validation projection.
 
-    `verdicts_frame` (round-6): an optional alternative plan for the
-    verdict-only view — the hybrid auto engine supplies the
-    compiled-Python validator route here while the base frame stays on
-    the variant Columns (each access reads its measured-faster
-    engine; both routes are conformance- and oracle-pinned equal)."""
+    `verdicts_frame`: an optional separate plan for the verdict-only
+    view. apply_json always supplies its validator UDF here, while
+    `frame`, `violations()` and `metrics()` read the base frame
+    (variant Columns when the spec lowers, else the explainer UDF);
+    the two agree on every document (conformance- and oracle-pinned).
+    apply_typed supplies none: every view reads the base frame."""
 
     def __init__(
         self, base: DataFrame, verdicts_frame: Optional[DataFrame] = None

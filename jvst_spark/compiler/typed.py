@@ -18,8 +18,9 @@ model closed ones.
 
 Two products:
 - lower_typed(node, dtype, col)    -> Column (validity boolean)
-- decompose_checks(node, dtype, col) -> [Check] (granular violations,
-  deterministic canonical order — the violation-row constructor)
+- build_violation_program(node, dtype, col) -> coded checks (granular
+  violations, deterministic canonical order — the violation-row
+  constructor)
 """
 
 from __future__ import annotations
@@ -847,27 +848,6 @@ _LEAF_CODES = {
     ObjPropSet: E.INVALID_MATCH_CASE,
     ArrItems: E.INVALID_MATCH_CASE,
 }
-
-
-def decompose_checks(
-    node: Node,
-    dtype: DataType,
-    col: Column,
-    path: str = "$",
-    defs: Optional[dict] = None,
-) -> List[Check]:
-    """Flatten the DAG into independently-evaluable coded checks.
-
-    Decomposes through And and Switch (conjunctive structure); any
-    Or/Xor/Not subtree is one composite check (the reference likewise
-    reports combinator failures as one SPLIT_CONDITION error,
-    src/validate_ir.h:141). Order is canonical DAG order, so violation
-    rows are deterministic.
-    """
-    lw = _Lowerer(defs)
-    out: List[Check] = []
-    _decompose(lw, node, dtype, col, path, out, null_guard=None)
-    return out
 
 
 def _guard(null_guard: Optional[Column], expr: Column) -> Column:

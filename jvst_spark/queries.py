@@ -51,8 +51,8 @@ def _flagship_plan() -> ValidationPlan:
 # ---------------------------------------------------------------------
 
 # violations oracle: one row per failing CHECK per doc, mirroring
-# decompose_checks' canonical check list for FLAGSHIP_SPEC (codes from
-# src/validate_ir.h:134-163). Checks that cannot fire on typed data
+# the typed violation program's canonical check list for FLAGSHIP_SPEC
+# (codes from src/validate_ir.h:134-163). Checks that cannot fire on typed data
 # (type-mismatch arms) are omitted on both sides.
 _VIOLATIONS_SQL = f"""
 WITH spans_tbl AS ({SPANS_SQL})
@@ -275,15 +275,6 @@ def val_spans_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# round-5: dynamic-JSON engine knob for the val_json_* queries —
-# "auto" (default: JVM variant Columns when the spec lowers, pyeval
-# otherwise) | "variant" | "pyeval". scripts/json_engine_bench.py flips
-# it to measure the two routes on identical inputs; the oracle gate
-# always runs "auto". val_json_recursive participates too: pyeval
-# honors max_ref_depth with the same cut semantics (round-5 review
-# fix), so the bounded contract holds on every engine.
-JSON_ENGINE = "auto"
-
 # dynamic-JSON path: validate the events.props JSON column with the
 # compiled-Python pandas-UDF backend (the per-document analogue of one
 # reference VM run); the oracle re-expresses the spec in DuckDB's JSON
@@ -318,7 +309,7 @@ def val_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     plan = ValidationPlan(compile_schema(_PROPS_SPEC))
     return plan.apply_json(
-        ev, "props", id_col="event_id", engine=JSON_ENGINE
+        ev, "props", id_col="event_id"
     ).verdicts().select(
         "doc_id", "valid"
     )
@@ -389,16 +380,15 @@ def val_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = ev.select("event_id", doc.alias("body"))
     plan = ValidationPlan(compile_schema(_NESTED_SPEC))
     return plan.apply_json(
-        df, "body", id_col="event_id", engine=JSON_ENGINE
+        df, "body", id_col="event_id"
     ).verdicts().select(
         "doc_id", "valid"
     )
 
 
 # array-keyword dynamic JSON: documents carry an array of tag objects;
-# the spec exercises every array keyword the round-3 fast path lowers
-# (minItems/maxItems, object-subschema items, contains, uniqueItems)
-# so the whole verdict stays on JVM Columns. Injected violations:
+# the spec exercises every array keyword (minItems/maxItems,
+# object-subschema items, contains, uniqueItems). Injected violations:
 # a duplicated element on id%11 (uniqueItems), a negative weight on
 # id%13 (items' minimum), and naturally-occurring contains failures
 # when both tag ids land above 49.
@@ -441,9 +431,8 @@ FROM events
 """,
 )
 def val_json_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array-keyword dynamic-JSON validation entirely on the JVM
-    variant fast path (items/contains/uniqueItems/min-maxItems over
-    array<variant> — no Python node in the verdict plan). Documents
+    """Array-keyword dynamic-JSON verdicts (items/contains/uniqueItems/
+    min-maxItems; one Arrow-batched validator UDF). Documents
     are built deterministically from events; tag ids never collide
     between the two base elements (6e+3 is odd, 100 even), so the only
     duplicates are the injected ones."""
@@ -467,7 +456,7 @@ def val_json_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     plan = ValidationPlan(compile_schema(_ARRAY_SPEC))
     return plan.apply_json(
-        df, "body", id_col="event_id", engine=JSON_ENGINE
+        df, "body", id_col="event_id"
     ).verdicts().select(
         "doc_id", "valid"
     )
@@ -597,7 +586,7 @@ def val_json_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = ev.select("event_id", body.alias("body"))
     plan = ValidationPlan(compile_schema(_JSON_VIO_SPEC))
     return (
-        plan.apply_json(df, "body", id_col="event_id", engine=JSON_ENGINE)
+        plan.apply_json(df, "body", id_col="event_id")
         .violations()
         .select("doc_id", "code", "path", "message")
     )
@@ -653,7 +642,7 @@ def val_json_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = ev.select("event_id", body.alias("body"))
     plan = ValidationPlan(compile_schema(_JSON_DEPS_SPEC))
     return plan.apply_json(
-        df, "body", id_col="event_id", engine=JSON_ENGINE
+        df, "body", id_col="event_id"
     ).verdicts().select(
         "doc_id", "valid"
     )
@@ -728,8 +717,7 @@ def val_json_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan = ValidationPlan(compile_schema(_RECURSIVE_SPEC))
     return (
         plan.apply_json(
-            df, "doc", id_col="event_id", max_ref_depth=9,
-            engine=JSON_ENGINE,
+            df, "doc", id_col="event_id", max_ref_depth=9
         )
         .verdicts()
         .select("doc_id", "valid")
@@ -798,7 +786,7 @@ def val_json_dynprops(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = ev.select("event_id", body.alias("body"))
     plan = ValidationPlan(compile_schema(_DYNPROPS_SPEC))
     return plan.apply_json(
-        df, "body", id_col="event_id", engine=JSON_ENGINE
+        df, "body", id_col="event_id"
     ).verdicts().select(
         "doc_id", "valid"
     )

@@ -10,8 +10,7 @@ checkpointing; `spark.sql.streaming.stateStore.providerClass` selects
 it in deployment). The previous design grouped by a hash bucket and
 serialized the bucket's ENTIRE seen-set into one state blob — at
 10^12 documents each of the 64 blobs would be gigabytes, an OOM by
-construction; it survives as `streaming_duplicates_blob` strictly as
-the regression fixture proving output equivalence.
+construction.
 
 Late re-arrivals of a key are emitted to the duplicates stream
 (n_seen = occurrences so far); first arrivals emit nothing, so the
@@ -80,45 +79,3 @@ def streaming_duplicates(
         update, _OUT, _COUNT_STATE, "append", GroupStateTimeout.NoTimeout
     )
 
-
-_BLOB_STATE = StructType([StructField("seen", StringType(), True)])
-
-
-def streaming_duplicates_blob(
-    stream_df: DataFrame, id_col: str = "doc_id", n_groups: int = 64
-) -> DataFrame:
-    """The round-4 hash-group design (seen-set serialized into one
-    state blob per group). Kept ONLY as the differential fixture for
-    streaming_duplicates — its per-group state grows with the group's
-    key cardinality, which does not scale. Do not deploy."""
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        seen: dict = {}
-        if state.exists:
-            (blob,) = state.get
-            if blob:
-                for part in blob.split("\x1f"):
-                    k, _, c = part.rpartition("\x1e")
-                    seen[k] = int(c)
-        out_ids, out_counts = [], []
-        for pdf in pdfs:
-            for doc in pdf[id_col]:
-                c = seen.get(doc, 0) + 1
-                seen[doc] = c
-                if c >= 2:
-                    out_ids.append(doc)
-                    out_counts.append(c)
-        state.update(
-            ("\x1f".join(f"{k}\x1e{c}" for k, c in seen.items()),)
-        )
-        yield pd.DataFrame({"doc_id": out_ids, "n_seen": out_counts})
-
-    grouped = stream_df.select(
-        F.col(id_col).cast("string").alias(id_col),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups)).alias("_g"),
-    ).groupBy("_g")
-    return grouped.applyInPandasWithState(
-        update, _OUT, _BLOB_STATE, "append", GroupStateTimeout.NoTimeout
-    )

@@ -1,16 +1,28 @@
 """JVM-builtin fast path for dynamic-JSON validation: must agree with
-pyeval verdict-for-verdict on every lowerable schema, and the verdicts
-plan must contain no Python evaluation node."""
+pyeval verdict-for-verdict and row-for-row on every lowerable schema,
+and its violations plan must contain no Python evaluation node."""
 
 import json
 
 import pytest
 from pyspark.sql import functions as F
 
-from jvst_spark.compiler.json_builtin import try_lower
+from jvst_spark import errors as E
+from jvst_spark.compiler.json_builtin import try_lower_full
 from jvst_spark.compiler.plan import ValidationPlan, compile_schema
 from jvst_spark.compiler.pyeval import compile_python
 from tests.conftest import CONFORMANCE_CASES
+
+
+def _variant_valid(df, fast, col="body"):
+    """{doc_id: valid} from the variant route's verdict field
+    (`fast` = try_lower_full(spec)) over df[col]."""
+    rows = (
+        df.select("doc_id", fast(F.col(col)).alias("r"))
+        .select("doc_id", "r.valid")
+        .collect()
+    )
+    return {r["doc_id"]: r["valid"] for r in rows}
 
 PROPS_SPEC = {
     "type": "object",
@@ -69,13 +81,13 @@ NESTED_DOCS = [
 
 class TestFastPathSupported:
     def test_props_spec_lowers(self):
-        assert try_lower(compile_schema(PROPS_SPEC)) is not None
+        assert try_lower_full(compile_schema(PROPS_SPEC)) is not None
 
     def test_array_length_spec_lowers_and_agrees(self, spark):
         schema = {"properties": {"tags": {
             "type": "array", "minItems": 1, "maxItems": 3}}}
         spec = compile_schema(schema)
-        fast = try_lower(spec)
+        fast = try_lower_full(spec)
         assert fast is not None
         pyv = compile_python(spec.root, spec.defs)
         docs = ['{"tags": []}', '{"tags": [1]}', '{"tags": [1,2,3]}',
@@ -83,13 +95,12 @@ class TestFastPathSupported:
                 '{"tags": [[1],[2]]}']
         df = spark.createDataFrame(
             [(str(i), d) for i, d in enumerate(docs)], ["doc_id", "body"])
-        got = {int(r["doc_id"]): r["v"] for r in df.select(
-            "doc_id", fast(F.col("body")).alias("v")).collect()}
+        got = _variant_valid(df, fast)
         for i, d in enumerate(docs):
-            assert got[i] == pyv(json.loads(d)), d
+            assert got[str(i)] == pyv(json.loads(d)), d
 
     def test_nested_object_spec_lowers(self):
-        assert try_lower(compile_schema(
+        assert try_lower_full(compile_schema(
             {"properties": {"a": {
                 "type": "object",
                 "required": ["b"],
@@ -104,11 +115,14 @@ class TestFastPathSupported:
             # cyclic without an unroll depth stays on pyeval
             {"$ref": "#/definitions/a",
              "definitions": {"a": {"properties": {"b": {"$ref": "#/definitions/a"}}}}},
+            # parse_json drops a decimal -0.0's sign: the explainer UDF
+            # keeps [0.0, -0.0] distinct like the reference
+            {"uniqueItems": True},
         ],
-        ids=["cyclic-ref"],
+        ids=["cyclic-ref", "unique"],
     )
     def test_unsupported_specs_fall_back(self, schema):
-        assert try_lower(compile_schema(schema)) is None
+        assert try_lower_full(compile_schema(schema)) is None
 
     @pytest.mark.parametrize(
         "schema",
@@ -122,13 +136,12 @@ class TestFastPathSupported:
         ids=["unaddressable-key", "pattern-subschema", "schema-additional"],
     )
     def test_dynamic_key_specs_now_lower(self, schema):
-        assert try_lower(compile_schema(schema)) is not None
+        assert try_lower_full(compile_schema(schema)) is not None
 
     @pytest.mark.parametrize(
         "schema",
         [
             {"type": "array", "items": {"type": "integer"}},
-            {"uniqueItems": True},
             {"contains": {"type": "string", "minLength": 2}},
             {"items": [{"type": "integer"}, {"type": "string"}],
              "additionalItems": {"type": "boolean"}},
@@ -137,12 +150,12 @@ class TestFastPathSupported:
                        "additionalProperties": False}},
             {"items": {"type": "array", "items": {"type": "number"}}},
         ],
-        ids=["items-scalar", "unique", "contains", "positional-items",
+        ids=["items-scalar", "contains", "positional-items",
              "items-object", "items-nested-array"],
     )
     def test_array_specs_now_lower(self, schema):
         # round-3: the array keywords joined the JVM fast path
-        assert try_lower(compile_schema(schema)) is not None
+        assert try_lower_full(compile_schema(schema)) is not None
 
 
 class TestFastPathParity:
@@ -165,54 +178,16 @@ class TestFastPathParity:
 
     def test_nested_spec_matches_pyeval(self, spark):
         spec = compile_schema(NESTED_SPEC)
-        fast = try_lower(spec)
+        fast = try_lower_full(spec)
         assert fast is not None
         pyv = compile_python(spec.root, spec.defs)
         df = spark.createDataFrame(
             [(str(i), d) for i, d in enumerate(NESTED_DOCS)],
             ["doc_id", "body"],
         )
-        got = {
-            int(r["doc_id"]): r["v"]
-            for r in df.select(
-                "doc_id", fast(F.col("body")).alias("v")
-            ).collect()
-        }
+        got = _variant_valid(df, fast)
         for i, d in enumerate(NESTED_DOCS):
-            assert got[i] == pyv(json.loads(d)), d
-
-    def test_conformance_corpus_fastpath_agrees(self, spark):
-        """Every lowerable schema in the corpus: builtin verdict ==
-        pyeval verdict == expected, for all of that schema's docs."""
-        by_schema = {}
-        for suite, schema, desc, doc, expected in CONFORMANCE_CASES:
-            key = json.dumps(schema, sort_keys=True)
-            by_schema.setdefault(key, (schema, []))[1].append(
-                (f"{suite}::{desc}", json.dumps(doc), expected)
-            )
-        n_lowered = 0
-        mismatches = []
-        for key, (schema, cases) in by_schema.items():
-            spec = compile_schema(schema)
-            fast = try_lower(spec)
-            if fast is None:
-                continue
-            n_lowered += 1
-            df = spark.createDataFrame(
-                [(cid, txt) for cid, txt, _ in cases], ["doc_id", "body"]
-            )
-            got = {
-                r["doc_id"]: r["v"]
-                for r in df.select(
-                    "doc_id", fast(F.col("body")).alias("v")
-                ).collect()
-            }
-            pyv = compile_python(spec.root, spec.defs)
-            for cid, txt, expected in cases:
-                if got[cid] != expected or pyv(json.loads(txt)) != expected:
-                    mismatches.append((cid, expected, got[cid]))
-        assert n_lowered >= 10, f"only {n_lowered} schemas lowered"
-        assert not mismatches, mismatches[:10]
+            assert got[str(i)] == pyv(json.loads(d)), d
 
     def test_conformance_pattern_properties_suite_fully_lowers(self, spark):
         """Round-5 coverage pin: EVERY schema in the patternProperties
@@ -231,17 +206,12 @@ class TestFastPathParity:
         bad = []
         for key, (schema, cases) in targets.items():
             spec = compile_schema(schema)
-            fast = try_lower(spec)
+            fast = try_lower_full(spec)
             assert fast is not None, f"did not lower: {schema}"
             df = spark.createDataFrame(
                 [(cid, txt) for cid, txt, _ in cases], ["doc_id", "body"]
             )
-            got = {
-                r["doc_id"]: r["v"]
-                for r in df.select(
-                    "doc_id", fast(F.col("body")).alias("v")
-                ).collect()
-            }
+            got = _variant_valid(df, fast)
             for cid, txt, expected in cases:
                 if got[cid] != expected:
                     bad.append((cid, expected, got[cid]))
@@ -253,7 +223,7 @@ class TestFastPathParity:
         (every leaf's per-element component moves into one shared
         bound transform; the combinator skeleton then consumes
         precomputed fields). not/anyOf/allOf/oneOf over items,
-        contains, uniqueItems, and duplicate leaves that must share a
+        contains, min/maxItems, and duplicate leaves that must share a
         field."""
         specs = [
             {"not": {"contains": {"type": "integer", "minimum": 5}}},
@@ -263,7 +233,7 @@ class TestFastPathParity:
             ]},
             {"allOf": [
                 {"items": {"type": "number", "minimum": 0}},
-                {"uniqueItems": True},
+                {"maxItems": 2},
                 {"minItems": 1},
             ]},
             {"oneOf": [
@@ -278,7 +248,7 @@ class TestFastPathParity:
                     {"minItems": 3},
                 ]},
             ]},
-            {"not": {"uniqueItems": True}},
+            {"not": {"items": {"type": "integer"}}},
             {"items": [{"type": "integer"}, {"type": "string"}],
              "additionalItems": {"type": "boolean"}},
         ]
@@ -291,21 +261,16 @@ class TestFastPathParity:
         ]
         for schema in specs:
             spec = compile_schema(schema)
-            fast = try_lower(spec)
+            fast = try_lower_full(spec)
             assert fast is not None, schema
             pyv = compile_python(spec.root, spec.defs)
             df = spark.createDataFrame(
                 [(str(i), d) for i, d in enumerate(docs)],
                 ["doc_id", "body"],
             )
-            got = {
-                int(r["doc_id"]): r["v"]
-                for r in df.select(
-                    "doc_id", fast(F.col("body")).alias("v")
-                ).collect()
-            }
+            got = _variant_valid(df, fast)
             for i, d in enumerate(docs):
-                assert got[i] == pyv(json.loads(d)), (schema, d)
+                assert got[str(i)] == pyv(json.loads(d)), (schema, d)
 
     def test_fuzz_random_specs_match_pyeval(self, spark):
         """Seeded fuzz: random supported-spec shapes x random documents
@@ -406,7 +371,7 @@ class TestFastPathParity:
         for trial in range(20):
             schema = obj_spec(1)
             spec = compile_schema(schema)
-            fast = try_lower(spec)
+            fast = try_lower_full(spec)
             if fast is None:
                 continue
             pyv = compile_python(spec.root, spec.defs)
@@ -416,13 +381,7 @@ class TestFastPathParity:
                 [(str(i), d) for i, d in enumerate(docs)],
                 ["doc_id", "body"],
             )
-            got = {
-                int(r["doc_id"]): r["v"]
-                for r in df.select(
-                    "doc_id",
-                    F.coalesce(fast(F.col("body")), F.lit(False)).alias("v"),
-                ).collect()
-            }
+            got = _variant_valid(df, fast)
             from jvst_spark.compiler.plan import _bad_const, _no_dup_pairs
 
             for i, d in enumerate(docs):
@@ -438,81 +397,57 @@ class TestFastPathParity:
                     want = pyv(doc)
                 except ValueError:
                     want = False
-                assert got[i] == want, (schema, d, got[i], want)
+                assert got[str(i)] == want, (schema, d, got[str(i)], want)
 
-    def test_verdict_plan_engine_contract(self, spark):
-        """Round-6 cost model: under engine='auto' the verdict view
-        runs the compiled-Python validator (ArrowEvalPython — measured
-        1.3-2.6x faster than interpreted variant exprs at bench scale
-        on every benchmark spec), while engine='variant' keeps the
-        zero-Python verdict plan (the Python-less-cluster escape).
-        Values are identical on both routes."""
+    def test_verdict_plan_route(self, spark):
+        """apply_json's one route: verdicts() reads the compiled-Python
+        validator in exactly one Arrow-batched UDF node, while frame —
+        for a spec that lowers — holds no Python node at all. Both
+        views agree on every document."""
         plan = ValidationPlan(compile_schema(PROPS_SPEC))
         docs = ['{"k": 3}', '{"k": -1}', "{}", "[1]", "not json"]
         df = spark.createDataFrame(
             [(str(i), d) for i, d in enumerate(docs)], ["doc_id", "body"]
         )
-        auto = plan.apply_json(df, "body").verdicts()
-        auto_plan = auto._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" in auto_plan
-        assert "BatchEvalPython" not in auto_plan
-        jvm = plan.apply_json(df, "body", engine="variant").verdicts()
-        jvm_plan = jvm._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in jvm_plan
-        snap_auto = {r["doc_id"]: r["valid"] for r in auto.collect()}
-        snap_jvm = {r["doc_id"]: r["valid"] for r in jvm.collect()}
-        assert snap_auto == snap_jvm
+        res = plan.apply_json(df, "body")
+        verd_plan = (
+            res.verdicts()._jdf.queryExecution().executedPlan().toString()
+        )
+        assert verd_plan.count("ArrowEvalPython") == 1, verd_plan
+        assert "BatchEvalPython" not in verd_plan
+        frame_plan = res.frame._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in frame_plan
+        verd = {r["doc_id"]: r["valid"] for r in res.verdicts().collect()}
+        frame = {r["doc_id"]: r["valid"] for r in res.frame.collect()}
+        assert verd == frame
+        assert verd == {"0": True, "1": False, "2": False, "3": False,
+                        "4": False}
 
-    def test_array_spec_verdict_plan_variant_has_no_python(self, spark):
-        # round-3 gate, round-6 scope: array keywords must not drop
-        # the VARIANT verdict path into per-row Python (auto now
-        # deliberately routes verdicts through the Arrow-batched
-        # validator — the measured-faster engine)
-        schema = {
-            "type": "array",
-            "minItems": 1,
-            "uniqueItems": True,
-            "contains": {"type": "integer"},
-            "items": {
-                "type": "object",
-                "required": ["id"],
-                "properties": {"id": {"type": "integer"}},
-            },
-        }
-        plan = ValidationPlan(compile_schema(schema))
-        df = spark.createDataFrame([("a", "[1]")], ["doc_id", "body"])
-        verd = plan.apply_json(df, "body", engine="variant").verdicts()
-        explained = verd._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in explained
-        assert "ArrowEvalPython" not in explained
-
-    def test_unique_negative_zero_divergence_is_exactly_as_documented(
-        self, spark
-    ):
-        """Pin the ONE known uniqueItems divergence: decimal-form -0.0
-        loses its sign inside parse_json (variant DECIMAL has no -0),
-        so the fast path calls [0.0, -0.0] a duplicate while pyeval /
-        the reference (XXH64 over raw double bytes,
-        src/validate_uniq.c:43) keep them distinct. '-0' and exponent
-        forms agree between backends; if this test ever flips, update
-        the _canon_elem_text docstring."""
-        spec = compile_schema({"uniqueItems": True})
-        fast = try_lower(spec)
-        assert fast is not None
-        pyv = compile_python(spec.root, spec.defs)
-        cases = {
-            "[0.0, -0.0]": (True, False),   # pyeval, fast — DIVERGES
-            "[0, -0]": (False, False),      # both drop int -0 sign
-            "[-0.0e2, 0.0]": (True, True),  # variant DOUBLE keeps sign
-            "[-0.0, -0.0]": (False, False),
-        }
-        df = spark.createDataFrame(
-            [(t,) for t in cases], ["body"]
-        ).select("body", fast(F.col("body")).alias("v"))
-        got = {r["body"]: r["v"] for r in df.collect()}
-        for txt, (want_py, want_fast) in cases.items():
-            assert pyv(json.loads(txt)) == want_py, txt
-            assert got[txt] == want_fast, txt
+    def test_unique_negative_zero_agrees_on_every_view(self, spark):
+        """Decimal-form -0.0 loses its sign inside parse_json (variant
+        DECIMAL has no -0), so uniqueItems stays off the variant
+        lowering: verdicts(), frame and violations() all agree with
+        pyeval / the reference (XXH64 over raw double bytes,
+        src/validate_uniq.c:43), which keep [0.0, -0.0] distinct — at
+        the root and nested at $.t."""
+        unique = {"uniqueItems": True}
+        cases = [  # (schema, document, valid as pyeval / the reference)
+            (unique, "[0.0, -0.0]", True),
+            (unique, "[0, -0]", False),  # int has no -0
+            (unique, "[-0.0e2, 0.0]", True),
+            (unique, "[-0.0, -0.0]", False),
+            ({"properties": {"t": unique}}, '{"t": [0.0, -0.0]}', True),
+        ]
+        for schema, txt, valid in cases:
+            spec = compile_schema(schema)
+            assert try_lower_full(spec) is None, schema
+            df = spark.createDataFrame([("d", txt)], ["doc_id", "body"])
+            res = ValidationPlan(spec).apply_json(df, "body")
+            (verdict,) = res.verdicts().collect()
+            (row,) = res.frame.collect()
+            got = [(v["code"], v["path"]) for v in row["_violations"]]
+            assert verdict["valid"] == row["valid"] == valid, txt
+            assert got == _pyeval_violations(spec, txt), (txt, got)
 
     def test_violations_still_work_with_fast_path(self, spark):
         plan = ValidationPlan(compile_schema(PROPS_SPEC))
@@ -522,46 +457,27 @@ class TestFastPathParity:
         vio = plan.apply_json(df, "body").violations().collect()
         assert {r["doc_id"] for r in vio} == {"a"}
 
-    def test_json_engine_switch(self, spark):
-        """Round-5: apply_json's engine switch. 'variant' = zero Python
-        in the plan; 'pyeval' = the Arrow-batched pandas-UDF route;
-        identical (valid, violations) either way; 'variant' on a spec
-        that cannot lower raises instead of silently falling back."""
-        import pytest as _pytest
-
+    def test_json_route_has_no_engine_menu(self, spark):
+        """The `engine` keyword accepts only "auto"; the removed
+        "variant" / "pyeval" routes and anything else raise. The one
+        route's rows equal pyeval's on every document."""
         plan = ValidationPlan(compile_schema(PROPS_SPEC))
         docs = ['{"k": -1}', '{"k": 3}', '{"k": "x"}', "{}", "[1]",
                 "not json", '{"k": 3, "z": 1}']
         df = spark.createDataFrame(
             [(str(i), d) for i, d in enumerate(docs)], ["doc_id", "body"]
         )
-
-        def snap(res):
-            return {
-                r["doc_id"]: (
-                    r["valid"],
-                    [(v["code"], v["path"]) for v in r["_violations"]],
-                )
-                for r in res.frame.collect()
-            }
-
-        jvm = plan.apply_json(df, "body", engine="variant")
-        py = plan.apply_json(df, "body", engine="pyeval")
-        assert snap(jvm) == snap(py)
-        jvm_plan = jvm.frame._jdf.queryExecution().executedPlan().toString()
-        py_plan = py.frame._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in jvm_plan
-        assert "EvalPython" in py_plan
-
-        cyclic = compile_schema(
-            {"$ref": "#/definitions/a",
-             "definitions": {"a": {"properties": {
-                 "b": {"$ref": "#/definitions/a"}}}}}
-        )
-        with _pytest.raises(ValueError, match="variant"):
-            ValidationPlan(cyclic).apply_json(df, "body", engine="variant")
-        with _pytest.raises(ValueError, match="engine"):
-            plan.apply_json(df, "body", engine="bogus")
+        for engine in ("variant", "pyeval", "bogus"):
+            with pytest.raises(ValueError, match="engine"):
+                plan.apply_json(df, "body", engine=engine)
+        got = {
+            r["doc_id"]: [(v["code"], v["path"]) for v in r["_violations"]]
+            for r in plan.apply_json(df, "body", engine="auto").frame.collect()
+        }
+        spec = compile_schema(PROPS_SPEC)
+        assert got == {
+            str(i): _pyeval_violations(spec, d) for i, d in enumerate(docs)
+        }
 
 
 def _pyeval_violations(spec, txt):
@@ -569,7 +485,6 @@ def _pyeval_violations(spec, txt):
     exact wrapper semantics of plan.apply_json's pandas-UDF branch
     (INVALID_JSON on null/malformed/dup-keys, explain rows otherwise,
     UNEXPECTED_TOKEN fallback when explain is empty but invalid)."""
-    from jvst_spark import errors as E
     from jvst_spark.compiler.plan import _bad_const, _no_dup_pairs
     from jvst_spark.compiler.pyeval import compile_explain
 
@@ -589,6 +504,58 @@ def _pyeval_violations(spec, txt):
         return ex(doc) or [(E.INVALID_UNEXPECTED_TOKEN, "$")]
     except (OverflowError, RecursionError, ValueError):
         return [(E.INVALID_UNEXPECTED_TOKEN, "$")]
+
+
+BAD_JSON, UNEXPECTED = E.INVALID_JSON, E.INVALID_UNEXPECTED_TOKEN
+
+
+@pytest.mark.parametrize(
+    "txt, explained, verdict_only",
+    [
+        (None, [(BAD_JSON, "$")], [(BAD_JSON, "$")]),
+        ("{", [(BAD_JSON, "$")], [(BAD_JSON, "$")]),
+        ('{"k": NaN}', [(BAD_JSON, "$")], [(BAD_JSON, "$")]),
+        ('{"k": 1, "k": 1}', [(BAD_JSON, "$")], [(BAD_JSON, "$")]),
+        ("[" * 5000 + "]" * 5000, [(BAD_JSON, "$")], [(BAD_JSON, "$")]),
+        ('{"k": 3}', [], []),
+        ('{"k": -1}', [(E.INVALID_NUMBER, "$.k")], [(UNEXPECTED, "$")]),
+        ('{"k": 3, "z": 1}', [(UNEXPECTED, "$.z")], [(UNEXPECTED, "$")]),
+    ],
+    ids=["null", "malformed", "nan", "dup-key", "too-deep", "valid",
+         "range", "extra-key"],
+)
+def test_doc_violations_contract(txt, explained, verdict_only):
+    """The one parse-and-guard body behind both Python UDFs of
+    apply_json: INVALID_JSON for NULL / malformed / non-standard
+    constants / duplicate keys / parser recursion; explainer rows when
+    given one; otherwise one UNEXPECTED_TOKEN row per invalid
+    document, which the verdict UDF reads as invalid."""
+    from jvst_spark.compiler.plan import _doc_violations
+    from jvst_spark.compiler.pyeval import compile_explain
+
+    spec = compile_schema(PROPS_SPEC)
+    validator = compile_python(spec.root, spec.defs)
+    explainer = compile_explain(spec.root, spec.defs)
+
+    def pairs(rows):
+        return [(r["code"], r["path"]) for r in rows]
+
+    assert pairs(_doc_violations(txt, validator, explainer)) == explained
+    assert pairs(_doc_violations(txt, validator)) == verdict_only
+
+
+@pytest.mark.parametrize("exc", [OverflowError, RecursionError, ValueError])
+def test_doc_violations_evaluation_error_is_a_verdict(exc):
+    """An evaluation error on one document yields INVALID_UNEXPECTED_TOKEN
+    instead of killing the Spark task."""
+    from jvst_spark.compiler.plan import _doc_violations
+
+    def boom(doc):
+        raise exc("adversarial document")
+
+    for explainer in (None, boom):
+        got = _doc_violations('{"k": 1}', boom, explainer)
+        assert got == [{"code": UNEXPECTED, "path": "$"}]
 
 
 class TestExplainLowering:
@@ -628,7 +595,6 @@ class TestExplainLowering:
             "type": "array",
             "minItems": 1,
             "maxItems": 3,
-            "uniqueItems": True,
             "contains": {"type": "integer", "minimum": 0},
             "items": {
                 "type": "object",
@@ -644,7 +610,10 @@ class TestExplainLowering:
             '[{"id": 1, "zz": 2}]', "[1]", '["a", {"id": 1}]',
             '[{"id": 1.5}]', "{}", "5", "null",
         ]
+        assert try_lower_full(compile_schema(schema)) is not None
         self._check(spark, schema, docs)
+        # uniqueItems moves the rows onto the explainer UDF
+        self._check(spark, {**schema, "uniqueItems": True}, docs)
 
     def test_positional_items_explain_parity(self, spark):
         schema = {
@@ -688,8 +657,6 @@ class TestExplainLowering:
         """Every lowerable schema in the conformance corpus: the JVM
         explain rows equal pyeval's, (code, path) for (code, path), in
         order, on every document."""
-        from jvst_spark.compiler.json_builtin import try_lower_full
-
         by_schema = {}
         for suite, schema, desc, doc, expected in CONFORMANCE_CASES:
             key = json.dumps(schema, sort_keys=True)
@@ -730,8 +697,6 @@ class TestExplainLowering:
         assert "ArrowEvalPython" not in explained
 
     def test_messages_match_reference_vocabulary(self, spark):
-        from jvst_spark import errors as E
-
         plan = ValidationPlan(compile_schema(PROPS_SPEC))
         df = spark.createDataFrame(
             [("a", '{"k": -1}'), ("b", "{"), ("c", "{}")],
@@ -759,8 +724,6 @@ class TestExplainLowering:
         ]
         docs = ["1", "0", "-3", '"x"', "{}", '{"a": "xy"}', '{"a": "x"}',
                 "6", "5", "null", "[1, 2]", '[1, "x"]']
-        from jvst_spark.compiler.json_builtin import try_lower_full
-
         for schema in specs:
             assert try_lower_full(compile_schema(schema)) is not None, schema
             self._check(spark, schema, docs)
@@ -780,8 +743,6 @@ class TestExplainLowering:
             },
             "additionalProperties": False,
         }
-        from jvst_spark.compiler.json_builtin import try_lower_full
-
         assert try_lower_full(compile_schema(schema)) is not None
         docs = ["{}", '{"a b": 1}', '{"a b": 1.5}',
                 '{"a b": 2, "c-d": -1}', '{"a b": 2, "c-d": 3}',
@@ -830,8 +791,6 @@ class TestExplainLowering:
             '{"obj1": {"b": 1}}', '{"obj1": {"a": 1, "c": 2}}',
             '{"obj1": 5}', "[3]", "null", "5", "not json",
         ]
-        from jvst_spark.compiler.json_builtin import try_lower_full
-
         for schema in specs:
             assert try_lower_full(compile_schema(schema)) is not None
             self._check(spark, schema, docs)
@@ -878,9 +837,6 @@ class TestExplainLowering:
         cycle beyond the bound is rejected with
         INVALID_UNEXPECTED_TOKEN at the cut path. Without
         max_ref_depth the cyclic spec still falls back to pyeval."""
-        from jvst_spark import errors as E
-        from jvst_spark.compiler.json_builtin import try_lower_full
-
         schema = {
             "definitions": {
                 "node": {
@@ -966,7 +922,6 @@ class TestExplainLowering:
         semantics — never a silent switch to true recursion."""
         import json as _json
 
-        from jvst_spark.compiler.json_builtin import try_lower_full
         from jvst_spark.compiler.pyeval import compile_python
 
         node_def = {
@@ -1094,8 +1049,6 @@ class TestExplainLowering:
                 d[key] = value(depth - 1) if depth > 0 else rng.randint(0, 5)
             return d
 
-        from jvst_spark.compiler.json_builtin import try_lower_full
-
         n_checked = 0
         for trial in range(15):
             schema = obj_spec(1)
@@ -1185,8 +1138,6 @@ class TestExplainLowering:
                     d[key] = [1, 2]
             return d
 
-        from jvst_spark.compiler.json_builtin import try_lower_full
-
         n_checked = 0
         for trial in range(12):
             schema = dyn_spec()
@@ -1223,8 +1174,6 @@ class TestExplainLowering:
         subschema) and the schema form (value-level Switch nested in
         the object arm, handled by arm projection), as do merged
         anyOf/allOf-of-full-schemas."""
-        from jvst_spark.compiler.json_builtin import try_lower_full
-
         specs = [
             {"type": "object",
              "dependencies": {"credit": ["billing", "name"]}},
@@ -1278,16 +1227,12 @@ class TestExplainLowering:
             assert rows[k][0] is False and rows[k][1] >= 1, (k, rows[k])
 
     def test_canon_text_equality_relation_matches_canonicalize(self, spark):
-        """The JVM canonical-text EQUALITY RELATION (both regimes) must
+        """The JVM canonical-text EQUALITY RELATION (enum regime) must
         induce the same equivalence classes as pyeval's canonicalize on
         a battery of numeric twins, key-order twins, delimiter-spoofing
         strings, and nested composites — pairwise, not just member-
-        ship. Known exclusion: decimal-form -0.0 loses its sign inside
-        parse_json (unique regime only; documented divergence)."""
-        from jvst_spark.compiler.json_builtin import (
-            _canon_elem_text,
-            _canon_enum_text,
-        )
+        ship."""
+        from jvst_spark.compiler.json_builtin import _canon_enum_text
         from jvst_spark.spec.nodes import canonicalize
 
         vals = [
@@ -1310,16 +1255,10 @@ class TestExplainLowering:
         rows = df.select(
             "i",
             _canon_enum_text(F.to_json(F.try_parse_json("j"))).alias("ce"),
-            _canon_elem_text(F.to_json(F.try_parse_json("j"))).alias("cu"),
         ).collect()
         jvm_e = {r["i"]: r["ce"] for r in rows}
-        jvm_u = {r["i"]: r["cu"] for r in rows}
         py_e = {
             i: canonicalize(v, neg_zero_distinct=False)
-            for i, v in enumerate(vals)
-        }
-        py_u = {
-            i: canonicalize(v, neg_zero_distinct=True)
             for i, v in enumerate(vals)
         }
         n = len(vals)
@@ -1328,17 +1267,12 @@ class TestExplainLowering:
                 assert (jvm_e[a] == jvm_e[b]) == (py_e[a] == py_e[b]), (
                     "enum regime", vals[a], vals[b]
                 )
-                if "-0.0" in texts[a] or "-0.0" in texts[b]:
-                    continue  # parse_json drops decimal -0.0's sign
-                assert (jvm_u[a] == jvm_u[b]) == (py_u[a] == py_u[b]), (
-                    "unique regime", vals[a], vals[b]
-                )
 
     def test_unsupported_spec_still_uses_pyeval(self, spark):
-        """Specs outside the variant subset keep the authoritative
-        pandas-UDF path (verdicts + violations from the explainer).
-        After round 5 the only remaining unsupported shape is a cyclic
-        $ref without an unroll depth."""
+        """Specs outside the variant subset (a cyclic $ref without an
+        unroll depth, uniqueItems) keep the authoritative pandas-UDF
+        path: violations from the explainer in one Arrow-batched node,
+        verdicts from the validator."""
         schema = {
             "$ref": "#/definitions/n",
             "definitions": {"n": {
@@ -1357,4 +1291,7 @@ class TestExplainLowering:
         explained = (
             res.frame._jdf.queryExecution().executedPlan().toString()
         )
-        assert "EvalPython" in explained  # honestly the Python path
+        assert explained.count("ArrowEvalPython") == 1, explained
+        assert {r["doc_id"]: r["valid"] for r in res.verdicts().collect()} == {
+            "a": False, "b": True
+        }

@@ -174,6 +174,48 @@ class TestCheckpointedValidation:
         assert a == b
 
 
+def _streaming_duplicates_blob(stream_df, id_col="doc_id", n_groups=64):
+    """The retired round-4 hash-group design of streaming_duplicates
+    (the group's seen-set serialized into one state blob per group):
+    the differential fixture proving the per-key state redesign emits
+    the identical row multiset. Its per-group state grows with the
+    group's key cardinality, which does not scale."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from jvst_spark.streaming.stateful_dedup import _OUT
+
+    def update(key, pdfs, state: GroupState):
+        import pandas as pd
+
+        seen: dict = {}
+        if state.exists:
+            (blob,) = state.get
+            if blob:
+                for part in blob.split("\x1f"):
+                    k, _, c = part.rpartition("\x1e")
+                    seen[k] = int(c)
+        out_ids, out_counts = [], []
+        for pdf in pdfs:
+            for doc in pdf[id_col]:
+                c = seen.get(doc, 0) + 1
+                seen[doc] = c
+                if c >= 2:
+                    out_ids.append(doc)
+                    out_counts.append(c)
+        state.update(
+            ("\x1f".join(f"{k}\x1e{c}" for k, c in seen.items()),)
+        )
+        yield pd.DataFrame({"doc_id": out_ids, "n_seen": out_counts})
+
+    grouped = stream_df.select(
+        F.col(id_col).cast("string").alias(id_col),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups)).alias("_g"),
+    ).groupBy("_g")
+    return grouped.applyInPandasWithState(
+        update, _OUT, "seen string", "append", GroupStateTimeout.NoTimeout
+    )
+
+
 class TestStreaming:
     def test_stream_matches_batch(self, spark, plan, tmp_path):
         from jvst_spark.streaming.validate_stream import validate_stream
@@ -277,15 +319,9 @@ class TestStreaming:
         # 'b' dup across batches (n=2); order of files = name order
         assert rows == [("a", 2), ("a", 3), ("b", 2)]
 
-        # differential vs the retired hash-group blob design (kept as
-        # the fixture proving the per-key state redesign emits the
-        # identical row multiset)
-        from jvst_spark.streaming.stateful_dedup import (
-            streaming_duplicates_blob,
-        )
-
+        # differential vs the retired hash-group blob design
         q2 = (
-            streaming_duplicates_blob(stream, n_groups=4)
+            _streaming_duplicates_blob(stream, n_groups=4)
             .writeStream.format("memory")
             .queryName("dupstream_blob")
             .outputMode("append")
