@@ -8,9 +8,10 @@ Scale design (the 100 TB story):
   groups by band key, and only verifies Jaccard on within-bucket pairs
   — the all-pairs O(n^2) never materializes.
 - n-gram Jaccard: exposed for verification and small candidate sets.
-- SimHash: per-doc 64-bit signature via one explode + groupBy; near-dup
-  pairs come from banding the signature (4 x 16-bit chunks: any pair
-  with hamming distance <= 3 shares at least one chunk by pigeonhole).
+- SimHash: per-doc 64-bit signature in one Arrow-batched numpy pass per
+  partition (no shuffle); near-dup pairs come from banding the
+  signature (4 x 16-bit chunks: any pair with hamming distance <= 3
+  shares at least one chunk by pigeonhole).
 
 MinHash uses lexicographic-min over md5(seed || shingle) hex strings:
 a per-seed random total order, portable to the DuckDB oracle (no
@@ -42,33 +43,23 @@ BAND_SIZE = 4  # -> 4 bands; similarity threshold ~ (1/b)^(1/r) ~ 0.7
 MAX_BUCKET_SIZE = 1024
 
 
-def exact_dup_groups(
-    df: DataFrame, text_col: str = "text", with_ids: bool = True
-) -> DataFrame:
+def exact_dup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Groups of byte-identical documents: (content_hash, dup_count,
-    doc_ids sorted). One shuffle on the hash.
+    min_doc_id, max_doc_id). One shuffle on the hash.
 
-    `with_ids=False` is the 100 TB mode: a pathological group (e.g.
-    every empty document in the corpus) would otherwise collect_list
-    millions of ids into ONE aggregation row; the scale shape keeps
-    (hash, count, min_id, max_id) and lets callers join back by hash
-    for the groups they actually act on."""
-    h = F.md5(F.col(text_col))
-    base = df.select(h.alias("content_hash"), "doc_id").groupBy(
-        "content_hash"
-    )
-    if with_ids:
-        agg = base.agg(
-            F.count("*").alias("dup_count"),
-            F.array_sort(F.collect_list("doc_id")).alias("doc_ids"),
-        )
-    else:
-        agg = base.agg(
+    No per-group id list: a pathological group (e.g. every empty
+    document in the corpus) would collect millions of ids into ONE
+    aggregation row. Callers join back by hash for the groups they
+    actually act on."""
+    return (
+        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
+        .agg(
             F.count("*").alias("dup_count"),
             F.min("doc_id").alias("min_doc_id"),
             F.max("doc_id").alias("max_doc_id"),
         )
-    return agg.filter(F.col("dup_count") >= 2)
+        .filter(F.col("dup_count") >= 2)
+    )
 
 
 def exact_class_representatives(
@@ -328,15 +319,14 @@ def minhash_lsh_dedup(
     df: DataFrame,
     text_col: str = "text",
     threshold: float = 0.7,
-    collapse_exact: bool = True,
     max_bucket_size: int = MAX_BUCKET_SIZE,
     log_overflow: bool = False,
 ) -> DataFrame:
     """Full near-dup pipeline: exact-class collapse -> LSH candidates
     -> exact Jaccard verify.
 
-    `collapse_exact` (default ON) maps every byte-identical duplicate
-    class to its min-doc_id representative BEFORE banding
+    Every byte-identical duplicate class maps to its min-doc_id
+    representative BEFORE banding
     (`exact_class_representatives`): a mass-duplicate class — the
     classic web-corpus pathology — contributes ONE banding row instead
     of a quadratic pair explosion. Reported pairs are therefore over
@@ -350,9 +340,7 @@ def minhash_lsh_dedup(
     the banding pipeline per reference would triple the corpus work.
     Unlike the corpus-scale band cache this replaced, the pair list is
     O(duplicates found), bounded and small by construction."""
-    corpus = (
-        exact_class_representatives(df, text_col) if collapse_exact else df
-    )
+    corpus = exact_class_representatives(df, text_col)
     cand = lsh_candidate_pairs(corpus, text_col, max_bucket_size).cache()
     if log_overflow:
         _warn_overflow(
@@ -363,63 +351,14 @@ def minhash_lsh_dedup(
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document as a 16-char hex string.
+    """64-bit SimHash per document as a 64-char '0'/'1' string, via
+    Arrow mapInPandas + numpy: no explode/shuffle, one pass per
+    partition.
 
-    Bits come from md5(token): each of the first 16 hex chars
-    contributes 4 bits; bit b of the signature is 1 iff the sum over
-    tokens of (+1/-1) at bit b is positive. One explode (doc x token)
-    + one groupBy(doc) — linear, no O(n^2).
-    """
-    from jvst_spark.ops._parallel import ensure_min_parallelism
-
-    t = tokens(F.col(text_col))
-    # per-token md5 bit expansion is CPU-bound (see minhash_bands)
-    toks_df = ensure_min_parallelism(df).select(
-        "doc_id", F.explode(t).alias("tok")
-    )
-    h = F.md5(F.col("tok"))
-    # per-token 64-bit vector packed as array<int> of +-1
-    bits = F.flatten(
-        F.transform(
-            F.split(F.substring(h, 1, 16), ""),
-            lambda c: _hex_char_bits(c),
-        )
-    )
-    per_tok = toks_df.select("doc_id", bits.alias("bits"))
-    summed = per_tok.groupBy("doc_id").agg(
-        F.array(
-            *[F.sum(F.element_at("bits", i + 1)).alias(f"b{i}") for i in range(64)]
-        ).alias("sums")
-    )
-    sig_bits = F.transform(
-        F.col("sums"), lambda s: F.when(s > 0, F.lit("1")).otherwise(F.lit("0"))
-    )
-    return summed.select(
-        "doc_id", F.concat_ws("", sig_bits).alias("simhash")
-    )
-
-
-def _hex_char_bits(c: Column) -> Column:
-    """Hex char -> array of 4 ints in {-1, +1} (MSB first)."""
-    v = (
-        F.when(c == "a", 10).when(c == "b", 11).when(c == "c", 12)
-        .when(c == "d", 13).when(c == "e", 14).when(c == "f", 15)
-        .otherwise(c.cast("int"))
-    )
-    return F.array(
-        *[
-            F.when(((v / F.lit(1 << (3 - j))).cast("int") % 2) == 1, F.lit(1))
-            .otherwise(F.lit(-1))
-            for j in range(4)
-        ]
-    )
-
-
-def simhash_signatures_fast(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """SimHash via Arrow mapInPandas + numpy — identical output to
-    simhash_signatures (the md5 64-bit prefix big-endian bit order
-    matches the hex-char/nibble order of the Column version), no
-    explode/shuffle, one pass per partition.
+    Tokens are the lower-cased, single-space-split non-empty words;
+    a document without tokens gets no row. Bit b is 1 iff, summed over
+    the document's tokens, more of their md5 digests have bit b of the
+    first 8 bytes (big-endian) set than clear.
 
     Round-2: the per-(doc, token) Python md5 loop is gone. Each batch
     hashes only its UNIQUE tokens (natural-language vocabularies are
@@ -535,8 +474,6 @@ def simhash_near_pairs(
     df: DataFrame,
     text_col: str = "text",
     max_hamming: int = 3,
-    signatures: DataFrame | None = None,
-    collapse_exact: bool = True,
     max_bucket_size: int = MAX_BUCKET_SIZE,
     log_overflow: bool = False,
 ) -> DataFrame:
@@ -544,35 +481,20 @@ def simhash_near_pairs(
     16-bit chunks; pairs sharing a chunk are candidates (pigeonhole:
     hamming <= 3 over 4 chunks => one chunk equal); verify hamming.
 
-    `signatures` lets callers supply a precomputed (doc_id, simhash)
-    frame (e.g. simhash_signatures_fast — bit-identical, Arrow-batched).
-
     Aggregate-then-pair (round-4, replacing a cached self-join): one
     groupBy((chunk, key)) collects each bucket's (doc_id, simhash)
     members sorted by id, then i<j pairs explode from the array — the
     signature subtree evaluates once per doc and nothing pins an
     exploded corpus into executor storage.
 
-    Round-5 skew guard (see minhash_lsh_dedup): `collapse_exact`
-    (default ON) restricts banding to exact-duplicate-class
-    representatives — with a precomputed `signatures` frame the
-    representative set semi-joins in by doc_id, so the signature
-    pipeline still runs once over whatever the caller computed — and
-    each chunk bucket keeps only its first `max_bucket_size` members
-    (enforced before the aggregation buffer fills)."""
-    if collapse_exact:
-        reps = exact_class_representatives(df, text_col)
-        sig = (
-            signatures.join(reps.select("doc_id"), "doc_id")
-            if signatures is not None
-            else simhash_signatures(reps, text_col)
-        )
-    else:
-        sig = (
-            signatures
-            if signatures is not None
-            else simhash_signatures(df, text_col)
-        )
+    Round-5 skew guard (see minhash_lsh_dedup): banding runs only over
+    exact-duplicate-class representatives — signatures are computed
+    once over the whole input, then semi-join to the representatives'
+    doc_ids — and each chunk bucket keeps only its first
+    `max_bucket_size` members (enforced before the aggregation buffer
+    fills)."""
+    reps = exact_class_representatives(df, text_col).select("doc_id")
+    sig = simhash_signatures(df, text_col).join(reps, "doc_id")
     chunks = _simhash_chunks(sig)
     # the 64-bit signature rides through banding as TWO longs (binary
     # string halves via conv base 2): hamming then costs two

@@ -3,8 +3,8 @@
 - cosine_expr: dot/norms via zip_with + aggregate (JVM-side, no UDF)
 - brute_force_topk: exact baseline — crossJoin + window row_number.
   O(n*q); correct at any q when the query set is small/broadcast.
-- near_dup_pairs: all-pairs above a cosine threshold (verification
-  scale only).
+- near_dup_pairs_blocked: exact all-pairs above a cosine threshold via
+  distributed block-pair GEMM (verification scale).
 - lsh_ann_topk: the scale path — random-hyperplane LSH buckets
   (deterministic md5-derived hyperplanes), candidates only within
   matching buckets across several tables, exact re-rank of candidates.
@@ -91,28 +91,6 @@ def brute_force_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "sim")
-    )
-
-
-def near_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All pairs (a < b) with cosine >= threshold (exact, O(n^2) —
-    verification scale; the LSH path below is the 100 TB variant)."""
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    sim = F.round(cosine_expr(F.col("va"), F.col("vb")), 6)
-    # explode(array(...)) Generate barrier: without it the threshold
-    # filter is pushed below the projection and the cosine fold is
-    # evaluated twice per pair (measured 2x wall time)
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.explode(F.array(sim)).alias("sim"))
-        .filter(F.col("sim") >= threshold)
     )
 
 

@@ -317,9 +317,8 @@ def val_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # nested dynamic-JSON: a two-level spec over a JSON document derived
 # deterministically from events (lang pattern, score range, integer n,
-# additionalProperties at both levels) — exercises the JVM variant
-# fast path on nested objects; the oracle computes the same verdict
-# from the raw columns
+# additionalProperties at both levels) — exercises apply_json on nested
+# objects; the oracle computes the same verdict from the raw columns
 _NESTED_SPEC = {
     "type": "object",
     "required": ["meta"],
@@ -357,8 +356,8 @@ FROM events
 """,
 )
 def val_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nested schemaless-JSON validation through the JVM variant fast
-    path (no Python in the verdict plan): documents built with to_json
+    """Nested schemaless-JSON verdicts from apply_json's compiled-Python
+    validator (one ArrowEvalPython node): documents built with to_json
     from event columns, with injected violations (uppercase lang on
     id%7, score>1 for value>50, negative n on id%13)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -595,7 +594,8 @@ def val_json_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round-4 fast-path widening at the oracle gate: dependencies (the
 # property-form desugar = forbidden-key pattern), composite enum
 # literals (enum-regime canonical text), and patternProperties:false —
-# all pure Column expressions, no Python node.
+# all lower to JVM variant Columns (apply_json's frame/violations);
+# the verdicts below come from the compiled-Python validator.
 _JSON_DEPS_SPEC = {
     "type": "object",
     "dependencies": {"credit": ["billing"]},
@@ -617,7 +617,8 @@ FROM events
 @query("val_json_deps", _JSON_DEPS_SQL)
 def val_json_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dependencies + composite enum + forbidden-key patterns over
-    dynamic JSON, entirely on the JVM variant fast path. Injections:
+    dynamic JSON; verdicts from the compiled-Python validator (one
+    ArrowEvalPython node). Injections:
     credit-without-billing on id%12==0, a non-matching composite enum
     value on id%5==3, a forbidden tmp_ key on id%7==0."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -648,9 +649,10 @@ def val_json_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# round-5: a genuinely CYCLIC $ref spec (linked list) validated on the
-# JVM variant fast path via bounded unrolling (apply_json
-# max_ref_depth=9 — the reference runs recursion natively through VM
+# round-5: a genuinely CYCLIC $ref spec (linked list) validated with a
+# bounded recursion depth (apply_json max_ref_depth=9: the variant
+# Columns unroll the cycle, the compiled-Python verdict validator cuts
+# at the same depth — the reference runs recursion natively through VM
 # CALL frames, src/validate_vm.c:1449-1468; a columnar plan unrolls
 # and rejects documents whose structure re-enters the cycle beyond
 # the bound with INVALID_UNEXPECTED_TOKEN at the cut). max_ref_depth
@@ -698,8 +700,9 @@ FROM events
 def val_json_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cyclic-$ref validation (recursive linked-list schema) over
     dynamic JSON with the cycle unrolled to depth 9 (8 object levels
-    + the terminating null) — pure Column expressions, no Python node
-    (pyeval remains the unbounded differential fixture, pinned in
+    + the terminating null); verdicts from the compiled-Python
+    validator (one ArrowEvalPython node) applying the same cut
+    (unbounded pyeval remains the differential fixture, pinned in
     test_json_builtin.py)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     eid = F.col("event_id")
@@ -724,8 +727,8 @@ def val_json_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# round-5: dynamic-key VALUE checks on the JVM fast path via the
-# map-entry axis (from_json to map<string,variant> turns keys into
+# round-5: dynamic-key VALUE checks, lowered to JVM variant Columns via
+# the map-entry axis (from_json to map<string,variant> turns keys into
 # data) — patternProperties value subschemas, schema-form
 # additionalProperties, and a quote-bearing key no path grammar can
 # address. Documents are deterministic from event_id, so the oracle's
@@ -761,8 +764,9 @@ FROM events
 def val_json_dynprops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """patternProperties value subschemas + schema-form
     additionalProperties + an unaddressable (quote) key over dynamic
-    JSON — entirely on the JVM variant fast path via the map-entry
-    axis, zero Python in the plan (pyeval-only through round 4)."""
+    JSON; verdicts from the compiled-Python validator (one
+    ArrowEvalPython node), while frame/violations lower to variant
+    Columns via the map-entry axis (pyeval-only through round 4)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     eid = F.col("event_id")
     m_j = F.when(
@@ -988,7 +992,8 @@ LEFT JOIN catalog c USING (media_ref) WHERE c.media_ref IS NULL
 )
 def tbl_ref_dangling_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential integrity: span media_refs absent from the media
-    catalog (broadcast left-anti join; the catalog excludes 'media-6').
+    catalog (left-anti join, which the planner broadcasts from the
+    catalog's statistics; the catalog excludes 'media-6').
     materialize_spans: the explode must read the spans ATTRIBUTE, not
     re-derive the span-building transform 3x (round-6)."""
     from jvst_spark.io.spans import materialize_spans
@@ -1483,18 +1488,12 @@ FROM corpus GROUP BY 1 HAVING count(*) >= 2
 """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: one groupBy on the content hash (map-side partial
-    aggregation absorbs duplicate-heavy hashes)."""
-    corpus = _exact_corpus(spark, sf_dir)
-    return (
-        corpus.groupBy(F.md5("text").alias("content_hash"))
-        .agg(
-            F.count("*").alias("dup_count"),
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
-        )
-        .filter(F.col("dup_count") >= 2)
-    )
+    """Exact dedup (ops/dedup.exact_dup_groups): one groupBy on the
+    content hash (map-side partial aggregation absorbs duplicate-heavy
+    hashes)."""
+    from jvst_spark.ops.dedup import exact_dup_groups
+
+    return exact_dup_groups(_exact_corpus(spark, sf_dir))
 
 
 def _minhash_sql(
@@ -1661,11 +1660,11 @@ FROM s GROUP BY doc_id
 """,
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/numpy SimHash (shuffle-free; output identical to the
-    Column-expression variant ops/dedup.simhash_signatures)."""
-    from jvst_spark.ops.dedup import simhash_signatures_fast
+    """Arrow/numpy SimHash (ops/dedup.simhash_signatures): one
+    shuffle-free pass per partition."""
+    from jvst_spark.ops.dedup import simhash_signatures
 
-    return simhash_signatures_fast(
+    return simhash_signatures(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
     )
 
@@ -1720,15 +1719,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse to min-id representatives before banding (the signatures
     frame, computed over the full corpus, semi-joins to the
     representative set), and chunk buckets cap at 1024 members."""
-    from jvst_spark.ops.dedup import (
-        simhash_near_pairs,
-        simhash_signatures_fast,
-    )
+    from jvst_spark.ops.dedup import simhash_near_pairs
 
-    corpus = _dup_corpus(spark, sf_dir)
-    return simhash_near_pairs(
-        corpus, max_hamming=3, signatures=simhash_signatures_fast(corpus)
-    )
+    return simhash_near_pairs(_dup_corpus(spark, sf_dir), max_hamming=3)
 
 
 # ---------------------------------------------------------------------
@@ -1781,9 +1774,7 @@ WHERE a.vec_id < b.vec_id
 )
 def sim_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via blocked GEMM (exact;
-    the Column-expression variant lives in ops/similarity.near_dup_pairs
-    and agrees value-for-value; the LSH variant below is the
-    approximate scale path)."""
+    the LSH variant below is the approximate scale path)."""
     from jvst_spark.ops.similarity import near_dup_pairs_blocked
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

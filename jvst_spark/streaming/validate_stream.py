@@ -1,12 +1,12 @@
 """Streaming validation: the compiled plan over readStream sources.
 
 apply_typed is a stateless projection, so it composes directly with
-Structured Streaming — verdict/violation streams come out of the same
-compiled plan that batch uses (one compiler, two runtimes; the
-reference compiles once and runs per-document the same way,
-src/main.c:372-417).
+Structured Streaming: `plan.apply_typed(stream_df).frame` is the
+verdict/violation stream, from the same compiled plan that batch uses
+(one compiler, two runtimes; the reference compiles once and runs
+per-document the same way, src/main.c:372-417).
 
-violation_rate_stream adds the stateful layer: watermarked tumbling-
+violation_rate_windows adds the stateful layer: watermarked tumbling-
 window aggregation of validity rates (late data handled by the
 watermark; state bounded by window x watermark horizon).
 """
@@ -17,13 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jvst_spark.compiler.plan import ValidationPlan
-
-
-def validate_stream(
-    plan: ValidationPlan, stream_df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Streaming verdicts+violations: same projection as batch."""
-    return plan.apply_typed(stream_df, id_col=id_col).frame
 
 
 def violation_rate_windows(

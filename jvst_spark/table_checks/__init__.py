@@ -5,8 +5,9 @@ its per-array uniqueItems machinery (src/validate_uniq.c) is the
 in-miniature analogue of these cross-row checks:
 
 - uniqueness.py: key uniqueness across the table (HLL++ prefilter +
-  exact groupBy, skew-aware)
-- referential.py: FK integrity via broadcast/shuffle left-anti joins
+  one exact groupBy whose map-side combine absorbs hot keys)
+- referential.py: FK integrity via a left-anti join whose strategy the
+  planner and AQE choose
 - drift.py: distribution drift (KS statistic + PSI) via binned
   aggregations against a baseline histogram
 """

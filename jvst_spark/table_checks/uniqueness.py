@@ -11,20 +11,14 @@ rows the hash set becomes a distributed two-phase plan:
    fraction (below ~3x the sketch's rsd) looks identical to a unique
    one, so a uniqueness GUARANTEE always requires step 2.
 2. EXACT PASS: groupBy(key).count() > 1. The shuffle hashes on the key,
-   so uniform keys scale linearly with executors; skewed key RANGES
-   (FIXTURES.md: ~20% of rows share few prefixes) are handled by AQE
-   skew-join/aggregation plus an optional two-phase salted partial
-   aggregate: groupBy(key, salt).count() -> groupBy(key).sum().
-
-The partial-aggregation (map-side combine) Catalyst inserts for
-groupBy/count already de-hotspots duplicate-heavy keys; explicit salting
-is exposed for the pathological case of ONE key owning a partition's
-worth of rows.
+   so uniform keys scale linearly with executors. The partial
+   aggregation (map-side combine) Catalyst inserts for groupBy/count
+   already de-hotspots duplicate-heavy keys: even ONE key owning a
+   partition's worth of rows reaches its reducer as one partial count
+   per map task.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,24 +45,11 @@ def distinct_stats(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-def duplicate_keys(
-    df: DataFrame, key: str, salt_buckets: Optional[int] = None
-) -> DataFrame:
+def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
     """Exact duplicate detection: (key, dup_count) rows, dup_count >= 2.
-
-    salt_buckets: two-phase aggregation for single-hot-key skew —
-    partial counts per (key, salt) then global sum per key. With AQE on,
-    only needed when one key exceeds an executor's partition budget.
-    """
-    if salt_buckets:
-        partial = (
-            df.select(F.col(key), (F.spark_partition_id() % salt_buckets).alias("_salt"))
-            .groupBy(key, "_salt")
-            .agg(F.count("*").alias("_c"))
-        )
-        counts = partial.groupBy(key).agg(F.sum("_c").alias("dup_count"))
-    else:
-        counts = df.groupBy(key).agg(F.count("*").alias("dup_count"))
+    One hash exchange on the key; map-side partial counts absorb a hot
+    key."""
+    counts = df.groupBy(key).agg(F.count("*").alias("dup_count"))
     return counts.filter(F.col("dup_count") >= 2).select(
         F.col(key), F.col("dup_count").cast("long").alias("dup_count")
     )

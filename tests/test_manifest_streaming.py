@@ -218,14 +218,12 @@ def _streaming_duplicates_blob(stream_df, id_col="doc_id", n_groups=64):
 
 class TestStreaming:
     def test_stream_matches_batch(self, spark, plan, tmp_path):
-        from jvst_spark.streaming.validate_stream import validate_stream
-
         src = spans_from_documents(spark, SF_DIR)
         data_dir = str(tmp_path / "in")
         src.write.mode("overwrite").parquet(data_dir)
 
         stream = spark.readStream.schema(src.schema).parquet(data_dir)
-        out = validate_stream(plan, stream)
+        out = plan.apply_typed(stream).frame
         q = (
             out.writeStream.format("memory")
             .queryName("vstream")

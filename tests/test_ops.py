@@ -21,24 +21,34 @@ class TestDedup:
     def test_exact_groups_find_injected_dups(self, spark, docs):
         from jvst_spark.ops.dedup import exact_dup_groups
 
+        import hashlib
+
         copies = docs.filter(F.col("doc_id") % 43 == 0).withColumn(
             "doc_id", F.col("doc_id") + 1000
         )
-        groups = exact_dup_groups(docs.unionByName(copies)).collect()
-        n_inj = docs.filter("doc_id % 43 = 0").count()
-        assert len(groups) >= n_inj
-        assert all(g["dup_count"] >= 2 for g in groups)
-        # scale mode: no per-group id list, same groups
-        scale = exact_dup_groups(
-            docs.unionByName(copies), with_ids=False
-        ).collect()
-        assert {g["content_hash"] for g in scale} == {
-            g["content_hash"] for g in groups
+        corpus = docs.unionByName(copies)
+        groups = {
+            g["content_hash"]: g for g in exact_dup_groups(corpus).collect()
         }
-        by_hash = {g["content_hash"]: g for g in groups}
-        for g in scale:
-            ids = by_hash[g["content_hash"]]["doc_ids"]
-            assert (g["min_doc_id"], g["max_doc_id"]) == (ids[0], ids[-1])
+        assert all(g["dup_count"] >= 2 for g in groups.values())
+        # brute force over the collected corpus: every hash class of >= 2
+        ids_by_hash = {}
+        for r in corpus.select("doc_id", "text").collect():
+            h = hashlib.md5(r["text"].encode("utf-8")).hexdigest()
+            ids_by_hash.setdefault(h, []).append(r["doc_id"])
+        expect = {h: ids for h, ids in ids_by_hash.items() if len(ids) >= 2}
+        assert set(groups) == set(expect)
+        for h, ids in expect.items():
+            g = groups[h]
+            assert (g["dup_count"], g["min_doc_id"], g["max_doc_id"]) == (
+                len(ids), min(ids), max(ids)
+            )
+        # each injected copy lands in its original's group
+        injected = docs.filter("doc_id % 43 = 0").select("doc_id", "text")
+        for r in injected.collect():
+            g = groups[hashlib.md5(r["text"].encode("utf-8")).hexdigest()]
+            assert g["min_doc_id"] <= r["doc_id"]
+            assert g["max_doc_id"] >= r["doc_id"] + 1000
 
     def test_minhash_lsh_finds_near_copies(self, spark, docs):
         from jvst_spark.ops.dedup import minhash_lsh_dedup
@@ -68,16 +78,19 @@ class TestDedup:
 
     def test_simhash_properties(self, spark, docs):
         from jvst_spark.ops.dedup import simhash_signatures
+        from tests.test_fastpath_differential import simhash_reference
 
-        sigs = simhash_signatures(docs.limit(50)).collect()
+        sample = docs.orderBy("doc_id").limit(50)
+        sigs = simhash_signatures(sample).collect()
         assert all(len(s["simhash"]) == 64 for s in sigs)
         assert all(set(s["simhash"]) <= {"0", "1"} for s in sigs)
-        # deterministic, and the numpy fast path is bit-identical
-        from jvst_spark.ops.dedup import simhash_signatures_fast
-
-        sigs2 = simhash_signatures_fast(docs.limit(50)).collect()
+        # bit-identical to the pure-Python md5 reference
+        ref = {
+            r["doc_id"]: simhash_reference(r["text"])
+            for r in sample.collect()
+        }
         assert {s["doc_id"]: s["simhash"] for s in sigs} == {
-            s["doc_id"]: s["simhash"] for s in sigs2
+            i: h for i, h in ref.items() if h
         }
 
     def test_simhash_near_pairs_on_near_copies(self, spark, docs):
@@ -179,7 +192,7 @@ class TestDedup:
             minhash_lsh_dedup,
             simhash_bucket_overflow,
             simhash_near_pairs,
-            simhash_signatures_fast,
+            simhash_signatures,
         )
 
         rows = [(i, " ".join(["x"] * (3 + i))) for i in range(50)]
@@ -198,7 +211,7 @@ class TestDedup:
         assert len(sim) == 28  # hamming 0 within the capped 8 members
         assert all(p["doc_a"] < 8 and p["doc_b"] < 8 for p in sim)
         sov = simhash_bucket_overflow(
-            simhash_signatures_fast(corpus), max_bucket_size=8
+            simhash_signatures(corpus), max_bucket_size=8
         ).collect()
         assert len(sov) == 4
         assert all(r["bucket_size"] == 50 for r in sov)
@@ -271,19 +284,27 @@ class TestDedup:
 
 class TestSimilarity:
     def test_blocked_gemm_multi_block_matches_exact(self, spark, emb):
-        """The distributed block-pair GEMM with B>1 (the 100 TB shape:
-        diagonal triangular masking + off-diagonal min/max
-        canonicalization) must emit exactly the pairs the O(n^2) Column
-        plan does. The oracle query runs at B=1, so this pins the
-        multi-block branch specifically."""
-        from jvst_spark.ops.similarity import (
-            near_dup_pairs,
-            near_dup_pairs_blocked,
-        )
+        """The distributed block-pair GEMM at explicit block counts
+        (B=1, and B>1 for diagonal triangular masking + off-diagonal
+        min/max canonicalization) must emit exactly the pairs a NumPy
+        all-pairs brute force over the collected vectors does. Left to
+        itself the block-count floor picks B from the core count (B=6
+        under the oracle's local[8]), so the explicit counts pin each
+        branch."""
+        import numpy as np
 
+        from jvst_spark.ops.similarity import near_dup_pairs_blocked
+
+        rows = emb.select("vec_id", "embedding").collect()
+        ids = [r["vec_id"] for r in rows]
+        m = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        norms = np.sqrt((m * m).sum(axis=1))
+        sims = np.round((m @ m.T) / np.outer(norms, norms), 6)
         exact = {
-            (r["id_a"], r["id_b"]): r["sim"]
-            for r in near_dup_pairs(emb, threshold=0.4).collect()
+            (min(ids[i], ids[j]), max(ids[i], ids[j])): sims[i, j]
+            for i in range(len(ids))
+            for j in range(i + 1, len(ids))
+            if sims[i, j] >= 0.4
         }
         for n_blocks in (1, 4, 7):
             got = {

@@ -1,10 +1,10 @@
-"""Skew handling: salted two-phase aggregation on hot keys.
+"""Skew handling: uniqueness checks on a hot key.
 
 FIXTURES.md §1: ~20% of rows share a small set of doc_id prefixes. The
 pathological case for a groupBy-based uniqueness check is ONE key
-owning a partition's worth of rows — the salted path partial-aggregates
-per (key, salt) before the global combine, so no reducer receives the
-hot key's raw rows."""
+owning a partition's worth of rows — the count's map-side partial
+aggregation combines it before the one hash exchange, so no reducer
+receives the hot key's raw rows."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,22 +27,14 @@ def skewed(spark):
 
 
 class TestSkewedUniqueness:
-    def test_salted_matches_unsalted(self, spark, skewed):
-        plain = {
-            (r["doc_id"], r["dup_count"])
-            for r in duplicate_keys(skewed, "doc_id").collect()
-        }
-        salted = {
-            (r["doc_id"], r["dup_count"])
-            for r in duplicate_keys(skewed, "doc_id", salt_buckets=8).collect()
-        }
-        assert plain == salted == {("doc-HOT", 20000)}
-
-    def test_salted_plan_two_phase(self, spark, skewed):
-        df = duplicate_keys(skewed, "doc_id", salt_buckets=8)
+    def test_hot_key_counted_in_one_exchange(self, spark, skewed):
+        df = duplicate_keys(skewed, "doc_id")
+        # read before any action: an executed AQE plan prints its
+        # initial and final trees both
         plan = df._jdf.queryExecution().executedPlan().toString()
-        # two aggregation layers: (key, salt) partial then key-global
-        assert plan.count("HashAggregate") >= 4 or "ObjectHashAggregate" in plan
+        assert plan.count("Exchange hashpartitioning") == 1
+        got = {(r["doc_id"], r["dup_count"]) for r in df.collect()}
+        assert got == {("doc-HOT", 20000)}
 
     def test_hll_prefilter_detects_dupes(self, spark, skewed):
         row = distinct_stats(skewed, "doc_id").collect()[0]
