@@ -60,6 +60,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from jvst_spark._pyworker import install
 from jvst_spark.spec import redialect
 from jvst_spark.spec.nodes import (
     And,
@@ -1232,6 +1233,7 @@ def compile_arrow_validate(
     )
 
     def run(batches):
+        install()
         for batch in batches:
             cols = [batch.column(i) for i in range(batch.num_columns)]
             names = batch.schema.names

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from jvst_spark import errors as E
+from jvst_spark._pyworker import install
 from jvst_spark.compiler.pyeval import compile_explain, compile_python
 from jvst_spark.compiler.typed import build_violation_program, lower_typed
 from jvst_spark.spec.canonify import canonify
@@ -404,6 +405,7 @@ class ValidationPlan:
 
         @F.pandas_udf(BooleanType(), F.PandasUDFType.SCALAR)
         def valid_udf(s):
+            install()
             return s.map(lambda txt: not _doc_violations(txt, validator))
 
         valid = valid_udf(doc).alias("valid")
@@ -425,6 +427,7 @@ class ValidationPlan:
 
         @F.pandas_udf(ArrayType(_VIOLATION_ELEM), F.PandasUDFType.SCALAR)
         def violations_udf(s):
+            install()
             return s.map(
                 lambda txt: _doc_violations(txt, validator, explainer)
             )

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
+from jvst_spark._pyworker import install
 from jvst_spark.ops.text import tokens, word_shingles
 
 logger = logging.getLogger(__name__)
@@ -376,6 +377,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
     shifts = (63 - np.arange(64)).astype(np.uint64)
 
     def batches(it):
+        install()
         import pandas as pd
 
         hash_cache: dict = {}  # token -> uint64, per partition

@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from jvst_spark._pyworker import install
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_ref", StringType(), False),
@@ -97,6 +99,7 @@ def decode_features(
         table.update(decoders)
 
     def decode_batches(it: Iterator) -> Iterator:
+        install()
         for pdf in it:
             feats = []
             for mt, payload in zip(pdf[media_type_col], pdf[payload_col]):
@@ -294,6 +297,7 @@ def resize_images(
     fn = resizer or resize_ppm
 
     def resize_batches(it: Iterator) -> Iterator:
+        install()
         for pdf in it:
             out_payloads = []
             for mt, payload in zip(pdf[media_type_col], pdf[payload_col]):
@@ -390,6 +394,7 @@ def real_media_from_ids(
     )
 
     def batches(it: Iterator) -> Iterator:
+        install()
         import pandas as pd
 
         for pdf in it:

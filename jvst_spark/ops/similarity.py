@@ -22,6 +22,7 @@ from typing import List
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jvst_spark._pyworker import install
 from jvst_spark.ops._expr import let_bound as _let
 
 
@@ -158,6 +159,7 @@ def near_dup_pairs_blocked(
     right = side("pj")
 
     def gemm(key, l, r):
+        install()
         empty = pd.DataFrame(
             {
                 "id_a": np.array([], dtype=np.int64),

@@ -33,6 +33,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _zipimport_unpatched():
+    """A test that runs a worker function in-process installs the zip
+    guard (jvst_spark._pyworker); put the previous method back after
+    it, so the process-global patch never leaks into later tests."""
+    import zipimport
+
+    before = zipimport.zipimporter.invalidate_caches
+    yield
+    zipimport.zipimporter.invalidate_caches = before
+
+
 def load_conformance_suites():
     """All (suite_desc, schema, case_desc, doc, expected) tuples from the
     fixture corpus: the reference's vendored custom suites + hand-written

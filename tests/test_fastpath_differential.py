@@ -1,21 +1,31 @@
-"""Differential tests: SimHash signatures and near-pairs over a seeded,
-adversarial corpus vs pure-Python references.
+"""Differential tests: SimHash signatures, near-pairs and near-duplicate
+components over seeded, adversarial inputs vs pure-Python references.
 
-The corpus carries what bench-shaped text never does: NULL, empty and
-whitespace-only text, one-token documents, runs of spaces, mixed case,
-non-ASCII words, and byte-identical duplicate classes. The references
-follow the definitions, not the Arrow/numpy code: tokens are the
-lower-cased, single-space-split non-empty words, and bit b of the
+The SimHash corpus carries what bench-shaped text never does: NULL,
+empty and whitespace-only text, one-token documents, runs of spaces,
+mixed case, non-ASCII words, and byte-identical duplicate classes. The
+references follow the definitions, not the Arrow/numpy code: tokens are
+the lower-cased, single-space-split non-empty words, and bit b of the
 signature reads nibble b // 4 of md5(token)'s hex digest (MSB first),
-as the DuckDB oracle does."""
+as the DuckDB oracle does.
+
+The component graphs are unions of cliques, the shape banding emits,
+with shared members bridging cliques, edges in either orientation and
+repeated; their ids are strings, negative longs, or longs above 2^53
+(where a double would round). The reference is a union-find."""
 
 import hashlib
+import logging
 import random
 from itertools import combinations
 
 import pytest
 
-from jvst_spark.ops.dedup import simhash_near_pairs, simhash_signatures
+from jvst_spark.ops.dedup import (
+    near_dup_components,
+    simhash_near_pairs,
+    simhash_signatures,
+)
 
 VOCAB = [
     "alpha", "Beta", "GAMMA", "delta", "eps", "zeta", "eta", "theta",
@@ -108,3 +118,109 @@ def test_simhash_near_pairs_match_brute_force(spark, seed, id_kind):
     got = simhash_near_pairs(df, max_hamming=3).collect()
     assert len(got) == len(expect)
     assert {(r["doc_a"], r["doc_b"], r["hamming"]) for r in got} == expect
+
+
+def components_reference(pairs):
+    """{id: min id of its component} over every id in a pair
+    (union-find)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _diameter(pairs):
+    """Longest shortest path within any component (BFS from each node)."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    worst = 0
+    for src in adj:
+        dist, frontier = {src: 0}, [src]
+        while frontier:
+            nxt = []
+            for x in frontier:
+                for y in adj[x]:
+                    if y not in dist:
+                        dist[y] = dist[x] + 1
+                        nxt.append(y)
+            frontier = nxt
+        worst = max(worst, max(dist.values()))
+    return worst
+
+
+_ID_KINDS = {
+    # lexicographic order disagrees with numeric ("d10" < "d9")
+    "string": ("string", lambda i: f"d{i}"),
+    "negative": ("long", lambda i: -7 * i - 1),
+    # spaced by 1 above 2^53: neighbours a double cannot tell apart
+    "above_2p53": ("long", lambda i: 2**53 + i if i % 2 else 2**62 + i),
+}
+
+
+def _clique_union_pairs(seed, id_of, n_nodes=80, n_cliques=16):
+    """Banding-style pairs: every i<j in each clique, cliques sharing
+    members, each edge's orientation random, some edges repeated."""
+    rng = random.Random(seed)
+    pairs = []
+    for _ in range(n_cliques):
+        members = rng.sample(range(n_nodes), rng.randrange(2, 6))
+        for x, y in combinations(members, 2):
+            a, b = id_of(x), id_of(y)
+            pairs.append((a, b) if rng.random() < 0.5 else (b, a))
+    pairs += rng.sample(pairs, len(pairs) // 5)  # repeated edges
+    rng.shuffle(pairs)
+    return pairs
+
+
+@pytest.mark.parametrize("seed", [5, 23])
+@pytest.mark.parametrize("id_kind", sorted(_ID_KINDS))
+def test_near_dup_components_match_union_find(spark, seed, id_kind):
+    sql_type, id_of = _ID_KINDS[id_kind]
+    pairs = _clique_union_pairs(seed, id_of)
+    expect = components_reference(pairs)
+    # the graph must need several rounds (bridged cliques) and still
+    # fit the default 12, or it checks convergence rather than labels
+    assert 2 <= _diameter(pairs) < 12
+    assert len(set(expect.values())) >= 3
+    df = spark.createDataFrame(pairs, f"doc_a {sql_type}, doc_b {sql_type}")
+    got = {
+        r["doc_id"]: r["component_id"]
+        for r in near_dup_components(df).collect()
+    }
+    assert got == expect
+
+
+@pytest.mark.parametrize("id_kind", ["string", "negative"])
+def test_near_dup_components_chain_past_max_iter_warns(
+    spark, caplog, id_kind
+):
+    """A chain longer than max_iter has no fixpoint within the rounds:
+    the warning is logged, and every label is an upper approximation
+    (never below the true component min, never above the node's id)."""
+    sql_type, id_of = _ID_KINDS[id_kind]
+    chain = [id_of(i) for i in range(10)]
+    pairs = list(zip(chain[1:], chain[:-1]))
+    truth = components_reference(pairs)
+    df = spark.createDataFrame(pairs, f"doc_a {sql_type}, doc_b {sql_type}")
+    with caplog.at_level(logging.WARNING, logger="jvst_spark.ops.dedup"):
+        got = {
+            r["doc_id"]: r["component_id"]
+            for r in near_dup_components(df, max_iter=3).collect()
+        }
+    assert any(
+        "no fixpoint after 3 rounds" in r.getMessage() for r in caplog.records
+    )
+    assert got.keys() == truth.keys() and got != truth
+    assert all(truth[x] <= got[x] <= x for x in got)
