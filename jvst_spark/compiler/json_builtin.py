@@ -12,17 +12,20 @@ keeps its general VM (src/validate_vm.c:1136-1592) while
 constant-folding what it can.
 
 Supported subset (try_lower_full returns None otherwise — never
-wrong, only absent):
+wrong, only absent). The lowering functions raise _Unsupported at
+every leaf they cannot lower, so building the Column IS the support
+check:
 - Switch over the parsed value's runtime type, at any nesting depth
 - number arm:  NumRange / NumInteger / NumMultipleOf (+combinators)
 - string arm:  StrLength / StrMatch (+combinators)
 - null / boolean arms: Valid / Invalid (+scalar enums)
-- array arms at ANY depth via cast-to-array<variant> + higher-order
-  functions: min/maxItems, items/additionalItems (elements recurse
-  through the full value lowering — arrays of objects included),
-  contains. NOT uniqueItems: parse_json drops the sign of a decimal
-  -0.0, so [0.0, -0.0] would read as a duplicate where pyeval and the
-  reference keep the two distinct.
+- array arms: Valid / Invalid only (the type check). Any array
+  keyword — min/maxItems, items/additionalItems, contains,
+  uniqueItems — declines: the explainer UDF is faster on those rows
+  (measured below), and uniqueItems would also be wrong here
+  (parse_json drops the sign of a decimal -0.0, so [0.0, -0.0] would
+  read as a duplicate where pyeval and the reference keep the two
+  distinct).
 - EnumMatch at value level: scalars per arm; COMPOSITE literals
   (objects/arrays) via enum-regime canonical text — both sides of the
   comparison run the same Spark canon expression, the literal side
@@ -33,39 +36,46 @@ wrong, only absent):
   addressable prop names (`$['a b']` path form), pattern props as
   gates or forbidden-key rules (Valid/Invalid — covers BOTH
   `dependencies` desugars), and boolean additionalProperties
-- round-5, via the map-entry axis (from_json to map<string,variant>,
-  so keys are DATA instead of path text): patternProperties VALUE
-  subschemas at dynamic keys, schema-form additionalProperties, and
-  prop names outside the path grammar (quotes/backslashes/brackets/
-  dots/control chars)
+- via the map-entry axis (from_json to map<string,variant>, so keys
+  are DATA instead of path text): patternProperties VALUE subschemas
+  at dynamic keys, schema-form additionalProperties, and prop names
+  outside the path grammar (quotes/backslashes/brackets/dots/control
+  chars)
 - value-level Switches nested inside type arms (the schema-form
   `dependencies` / merged anyOf-of-schemas shape) via arm projection
-- acyclic $ref at any position (inlined at lowering time); CYCLIC
-  refs via opt-in bounded unrolling (max_ref_depth) — without it
-  they stay on pyeval
+- acyclic $ref at any position (inlined at lowering time). A CYCLIC
+  ref declines; apply_json(max_ref_depth=D) applies its cut through
+  pyeval's per-path counter on every view.
 
 Semantic parity contracts with pyeval (tested in
 test_json_builtin.py): strict JSON (NaN/Infinity rejected), numbers
 compared as doubles, duplicate keys rejected, absent key != null
 value.
 
-Measured (4 cores, alternating routes, every result checked): variant
-expressions never enter whole-stage codegen, so this path runs
-interpreted. Violation rows of `val_json_violations` at sf0.1 (10
-pairs, identical 70,123 rows): variant Columns 3,369 ms median (q1-q3
-3,293-3,411) vs explainer UDF 4,355 ms (3,992-4,909). On perfbench's
-json_docs generator (seed 1, 20k docs per spec, 6 pairs): a
-uniqueItems array spec ran 2,971 ms on variant vs 1,923 ms on the
-explainer UDF (one more reason uniqueItems stays off this path); the
-dynamic-properties spec tied, 1,376 vs 1,284 ms. For sustained 100 TB
-throughput on a known schema, project JSON into typed columns once
-and use apply_typed — the dynamic path is schema-on-read.
+Measured (4 cores, sf0.1, violation rows to a `noop` sink, routes
+alternated, identical rows by digest): variant expressions never
+enter whole-stage codegen, so this path runs interpreted. Medians,
+variant Columns vs explainer UDF:
+- `val_json_array`'s spec without uniqueItems (36,393 rows): 5,972 vs
+  4,696 ms, explainer faster 6/6; the depth-9 `val_json_recursive`
+  spec (30,735 rows): 8,687 vs 5,947 ms, 6/6; `val_json_violations`'
+  spec plus an array property with maxItems, 100k synthetic docs:
+  2,280 vs 1,116 ms, 6/6 (with `items` too: 2,900 vs 1,122 ms) —
+  hence array keywords and cyclic refs decline.
+- specs without array keywords keep this route: `val_json_violations`
+  2,455 vs 3,219 ms (6/6), props 1,543 vs 2,660, nested 3,346 vs 3,796,
+  deps 2,022 vs 3,189, dynprops 1,895 vs 2,189 (4/5). One synthetic
+  scalar-doc control went the other way (1,652 vs 892 ms): for scalar
+  and object specs the winner depends on the document mix.
+For sustained 100 TB throughput on a known schema, project JSON into
+typed columns once and use apply_typed — the dynamic path is
+schema-on-read.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -73,11 +83,8 @@ from pyspark.sql import functions as F
 from jvst_spark.spec import redialect
 from jvst_spark.spec.nodes import (
     And,
-    ArrContains,
-    ArrItems,
     EnumMatch,
     Invalid,
-    ItemRange,
     Node,
     Not,
     NumInteger,
@@ -130,125 +137,65 @@ class _Unsupported(Exception):
 _INLINE_BUDGET = 10_000
 
 
-def _inline_refs(
-    node: Node, defs: dict, unroll_depth: int | None = None
-) -> Node:
+def _inline_refs(node: Node, defs: dict) -> Node:
     """Expand acyclic $refs into the tree so ref'd specs reach the JVM
     fast path (the reference compiles refs to VM CALL frames,
     src/validate_vm.c:1449-1468 — a columnar plan has no call stack,
-    so inlining is the equivalent; cycles stay on pyeval unless
-    bounded unrolling is requested).
-
-    `unroll_depth` (round-5): with a depth D, a CYCLIC ref is unrolled
-    D times along any path and the (D+1)-th re-entry is replaced by
-    `Invalid()` — a document whose structure actually reaches the cut
-    is rejected with INVALID_UNEXPECTED_TOKEN there (the §7.3 bounded-
-    unroll plan; typed lowering already bounds recursion by the
-    column's DataType the same way). Documents that never exercise the
-    cut (nesting <= D, or the recursive key absent) validate exactly
-    as pyeval's true recursion would. With unroll_depth None (default)
-    cycles raise _Unsupported and the spec stays on pyeval's memoized
-    closures — the authoritative unbounded semantics.
-
-    POLARITY GUARD (round-5 review finding): substituting Invalid at
-    the cut is fail-closed only in MONOTONE contexts (And/Or/Switch/
-    object/array containers — flipping a subtree False can only flip
-    the root toward False). Under `not` or `oneOf` (Not/Xor) a cut
-    would ACCEPT beyond-depth documents that true recursion rejects,
-    so a cut landing anywhere below a Not/Xor raises _Unsupported and
-    the spec falls back (conservatively including double negation —
-    'never wrong, only absent'). Cycles fully outside Not/Xor unroll
-    as before.
+    so inlining is the equivalent). A cycle raises _Unsupported: the
+    explainer UDF's memoized closures run it, and apply_json's
+    max_ref_depth cut with them.
 
     Bounded: a diamond-shaped ref DAG (each def referencing the
     previous twice) doubles per level, and downstream lowering walks
     the TREE — so expansion is capped at _INLINE_BUDGET nodes and
     anything larger falls back to pyeval, whose memoized closures
-    compile each def once. 'Never wrong, only absent.'"""
+    compile each def once. 'Never wrong, only absent.' Array keywords
+    are left as they are: their lowering declines anyway."""
     import dataclasses
 
     count = [0]
 
-    def walk(node: Node, stack: tuple, monotone: bool) -> Node:
+    def walk(node: Node, stack: tuple) -> Node:
         if stack:
             # budget counts only nodes visited INSIDE a ref expansion —
             # a large-but-ref-free root costs nothing against it
             count[0] += 1
             if count[0] > _INLINE_BUDGET:
                 raise _Unsupported("ref expansion exceeds budget")
-        if len(stack) > max(64, (unroll_depth or 0) * 4):
+        if len(stack) > 64:
             raise _Unsupported("ref nesting too deep")
         if isinstance(node, Ref):
             if node.uri in stack:
-                if unroll_depth is None:
-                    raise _Unsupported("cyclic ref")
-                if stack.count(node.uri) >= unroll_depth:
-                    if not monotone:
-                        # the cut is fail-closed only with monotone
-                        # ancestors (see docstring) — refuse under
-                        # Not/Xor rather than accept beyond-depth docs
-                        raise _Unsupported(
-                            "cyclic ref cut under non-monotone "
-                            "combinator (not/oneOf)"
-                        )
-                    # the cut: structure that re-enters the cycle
-                    # beyond the unroll depth is rejected (Invalid's
-                    # default code is INVALID_UNEXPECTED_TOKEN)
-                    return Invalid()
+                raise _Unsupported("cyclic ref")
             if node.uri not in defs:
                 raise _Unsupported("unresolved ref")
-            return walk(defs[node.uri], stack + (node.uri,), monotone)
-        if isinstance(node, (And, Or)):
+            return walk(defs[node.uri], stack + (node.uri,))
+        if isinstance(node, (And, Or, Xor)):
             return dataclasses.replace(
-                node,
-                terms=tuple(walk(t, stack, monotone) for t in node.terms),
-            )
-        if isinstance(node, Xor):
-            return dataclasses.replace(
-                node,
-                terms=tuple(walk(t, stack, False) for t in node.terms),
+                node, terms=tuple(walk(t, stack) for t in node.terms)
             )
         if isinstance(node, Not):
-            return dataclasses.replace(
-                node, term=walk(node.term, stack, False)
-            )
+            return dataclasses.replace(node, term=walk(node.term, stack))
         if isinstance(node, Switch):
             return dataclasses.replace(
-                node,
-                arms=tuple(
-                    (t, walk(a, stack, monotone)) for t, a in node.arms
-                ),
+                node, arms=tuple((t, walk(a, stack)) for t, a in node.arms)
             )
         if isinstance(node, ObjPropSet):
             return dataclasses.replace(
                 node,
-                props=tuple(
-                    (k, walk(s, stack, monotone)) for k, s in node.props
-                ),
+                props=tuple((k, walk(s, stack)) for k, s in node.props),
                 patterns=tuple(
-                    (p, walk(s, stack, monotone)) for p, s in node.patterns
+                    (p, walk(s, stack)) for p, s in node.patterns
                 ),
-                additional=walk(node.additional, stack, monotone),
+                additional=walk(node.additional, stack),
             )
         if isinstance(node, ObjPropNames):
             return dataclasses.replace(
-                node, name_schema=walk(node.name_schema, stack, monotone)
-            )
-        if isinstance(node, ArrItems):
-            return dataclasses.replace(
-                node,
-                positional=tuple(
-                    walk(p, stack, monotone) for p in node.positional
-                ),
-                additional=walk(node.additional, stack, monotone),
-            )
-        if isinstance(node, ArrContains):
-            return dataclasses.replace(
-                node, schema=walk(node.schema, stack, monotone)
+                node, name_schema=walk(node.name_schema, stack)
             )
         return node
 
-    return walk(node, (), True)
+    return walk(node, ())
 
 
 def _T() -> Column:
@@ -316,13 +263,6 @@ class _Value:
         if self.text is None:
             raise _Unsupported("object keys unavailable at this path")
         return F.array_distinct(F.json_object_keys(self.text))
-
-    def elems(self) -> Column:
-        """The value as array<variant> (NULL when not an array) — the
-        element axis for items/contains. Each element is a
-        full variant, so element checks recurse through _lower_value
-        with no depth limit on the SPEC side."""
-        return F.try_variant_get(self._v, self._path, "array<variant>")
 
     def variant(self) -> Column:
         """The raw variant at this path (for let-binding)."""
@@ -480,121 +420,6 @@ def _canon_enum_text(txt: Column) -> Column:
     return F.array_join(norm, "")
 
 
-def _sub_cond(sub: Node, e: Column, txt: Column) -> Column:
-    """One element's verdict under subschema `sub` (null-safe), with
-    the element's subtree text already bound to `txt`."""
-    return F.coalesce(_lower_value(sub, _Value(e, "$", text=txt)), _F())
-
-
-def _items_elem_cond(n: ArrItems, e: Column, txt: Column, i: Column) -> Column:
-    """items/additionalItems verdict for ONE element at index `i`:
-    positional prefixes check index-matched subschemas; the tail (or
-    the whole array for single-form items) checks `additional`."""
-    c = (
-        _T()
-        if isinstance(n.additional, Valid)
-        else _sub_cond(n.additional, e, txt)
-    )
-    for idx in range(len(n.positional) - 1, -1, -1):
-        c = F.when(
-            i == F.lit(idx), _sub_cond(n.positional[idx], e, txt)
-        ).otherwise(c)
-    return c
-
-
-def _array_checks(node: Node, val: _Value) -> Column:
-    """Array-arm leaves over the array<variant> element axis:
-    min/maxItems, items/additionalItems (full subschema recursion via
-    _lower_value — nested objects/arrays included) and contains.
-
-    Two-phase lowering (measured 17.4s -> 4.6s at sf0.1, round 3):
-    phase 1 computes EVERY leaf's per-element component (items
-    verdict, contains hit) inside ONE transform, with the element's
-    to_json text bound once per element — so the array walk, the element serialization,
-    and the element's variant accessors run once regardless of how
-    many keywords consume them. Phase 2 let-binds that bound array
-    and reduces each leaf over precomputed struct fields (forall /
-    exists), where a Column-tree re-reference would
-    otherwise re-evaluate the whole per-element pass per keyword
-    (items alone 8.5s + contains alone 6.5s superadded to 17.4s)."""
-    leaves: list[Node] = []
-
-    def collect(n: Node) -> None:
-        if isinstance(n, (And, Or, Xor)):
-            for t in n.terms:
-                collect(t)
-        elif isinstance(n, Not):
-            collect(n.term)
-        elif isinstance(n, ArrItems):
-            # single-form items with a Valid schema is constant True
-            if (n.positional or not isinstance(n.additional, Valid)) and (
-                n not in leaves
-            ):
-                leaves.append(n)
-        elif isinstance(n, ArrContains):
-            if n not in leaves:
-                leaves.append(n)
-        elif isinstance(n, (ItemRange, Valid, Invalid)):
-            pass
-        else:
-            raise _Unsupported(f"array leaf {type(n).__name__}")
-
-    collect(node)
-    idx = {n: i for i, n in enumerate(leaves)}
-
-    def elem_fields(e: Column, i: Column) -> Column:
-        """struct of every leaf's component for one element, with the
-        element text let-bound (to_json runs once per element)."""
-
-        def fields_body(txt: Column) -> Column:
-            cols = []
-            for j, n in enumerate(leaves):
-                if isinstance(n, ArrItems):
-                    c = _items_elem_cond(n, e, txt, i)
-                else:  # ArrContains
-                    c = _sub_cond(n.schema, e, txt)
-                cols.append(c.alias(f"f{j}"))
-            return F.struct(*cols)
-
-        return F.element_at(
-            F.transform(F.array(F.to_json(e)), fields_body), 1
-        )
-
-    def consume(ba: Column) -> Column:
-        def leaf(n: Node) -> Column:
-            if isinstance(n, ItemRange):
-                ln = F.size(ba)
-                c = ln >= F.lit(n.lo)
-                if n.hi is not None:
-                    c = c & (ln <= F.lit(n.hi))
-                return c
-            # NB: closures, not default args — a second Python lambda
-            # param is PySpark's INDEX argument, not a let-binding
-            if isinstance(n, ArrItems):
-                if n not in idx:  # constant-True single-form items
-                    return _T()
-                fld = f"f{idx[n]}"
-                return F.forall(ba, lambda x: x[fld])
-            if isinstance(n, ArrContains):
-                fld = f"f{idx[n]}"
-                return F.exists(ba, lambda x: x[fld])
-            raise _Unsupported(f"array leaf {type(n).__name__}")
-
-        return _boolish(node, leaf)
-
-    if not leaves:
-        # only size checks: reduce over the element array directly
-        return F.element_at(
-            F.transform(F.array(val.elems()), consume), 1
-        )
-    return F.element_at(
-        F.transform(
-            F.array(F.transform(val.elems(), elem_fields)), consume
-        ),
-        1,
-    )
-
-
 def _trivial_checks(node: Node, arm: str, val: Optional[_Value]) -> Column:
     """Arms where only Valid/Invalid (+ scalar enum for bool/null) fit."""
 
@@ -641,12 +466,10 @@ def _let_typ(val: _Value, body) -> Column:
     A Column is a TREE, not a DAG: re-using the same python Column in
     N leaves inlines N copies, and variant expressions never enter
     whole-stage codegen, so interpreted eval re-runs each copy's full
-    subtree. The killer case: an element _Value's text is to_json(e),
-    which object checks referenced ~6x per element (required + one
-    json_object_keys per propset cond + additionalProperties) — six
-    whole-element serializations per element (measured: the combined
-    val_json_array spec ran 13.6s at sf0.1 while every single-keyword
-    slice of it ran ~0.15s; to_json alone is 1.76s/pass). The nested
+    subtree. An object's text feeds required, one json_object_keys
+    per propset condition and additionalProperties, so an unbound text
+    expression (a get_json_object, or a variant cast on a map entry)
+    would be re-evaluated once per consuming leaf. The nested
     single-element transform()s turn (variant, text) into struct
     fields of a LAMBDA VARIABLE and the type string into a second
     lambda variable — every reference inside `body` is a variable
@@ -686,9 +509,8 @@ def _needs_text(node: Node) -> bool:
     Only a non-trivial OBJECT arm does: keys / required / property
     ranges / additionalProperties come from json_object_keys over the
     text, and object property children derive their text from it.
-    Array elements re-derive text via to_json(element) and scalar arms
-    never touch it, so a scalar-only subschema can skip the text
-    binding entirely."""
+    Scalar and array arms never touch it, so a scalar-only subschema
+    can skip the text binding entirely."""
     if isinstance(node, Switch):
         return not isinstance(dict(node.arms)["object"], (Valid, Invalid))
     if isinstance(node, (And, Or, Xor)):
@@ -801,7 +623,9 @@ def _lower_value(node: Node, val: _Value) -> Column:
             ).otherwise(expr)
             expr = F.when(
                 typ.startswith("ARRAY"),
-                _array_checks(_arm_project(arms["array"], "array"), bound),
+                _trivial_checks(
+                    _arm_project(arms["array"], "array"), "array", bound
+                ),
             ).otherwise(expr)
             if val.text is not None:
                 obj = _lower_object(
@@ -955,136 +779,6 @@ def _propset_over_entries(n: ObjPropSet, val: _Value) -> Column:
     return F.coalesce(F.forall(val.entries(), ent_check), _F())
 
 
-# ---- structural supportability check (no SparkSession needed) ------
-
-
-def _scalar_enum_ok(node: EnumMatch) -> None:
-    import json as _json
-
-    if any(isinstance(_json.loads(r), (list, dict)) for r in node.raw_json):
-        raise _Unsupported("composite enum")
-
-
-def _chk_combinators(node: Node, leaf) -> None:
-    if isinstance(node, (Valid, Invalid)):
-        return
-    if isinstance(node, (And, Or, Xor)):
-        for t in node.terms:
-            _chk_combinators(t, leaf)
-        return
-    if isinstance(node, Not):
-        _chk_combinators(node.term, leaf)
-        return
-    leaf(node)
-
-
-def _chk_number(node: Node) -> None:
-    def leaf(n):
-        if isinstance(n, (NumRange, NumInteger, NumMultipleOf)):
-            return
-        if isinstance(n, EnumMatch):
-            return _scalar_enum_ok(n)
-        raise _Unsupported(f"number leaf {type(n).__name__}")
-
-    _chk_combinators(node, leaf)
-
-
-def _chk_string(node: Node) -> None:
-    def leaf(n):
-        if isinstance(n, StrLength):
-            return
-        if isinstance(n, StrMatch):
-            redialect.translate(n.pattern, "java")
-            return
-        if isinstance(n, EnumMatch):
-            return _scalar_enum_ok(n)
-        raise _Unsupported(f"string leaf {type(n).__name__}")
-
-    _chk_combinators(node, leaf)
-
-
-def _chk_trivial(node: Node, arm: str) -> None:
-    def leaf(n):
-        if isinstance(n, EnumMatch) and arm in ("boolean", "null"):
-            return _scalar_enum_ok(n)
-        raise _Unsupported(f"{arm} leaf {type(n).__name__}")
-
-    _chk_combinators(node, leaf)
-
-
-def _chk_array(node: Node) -> None:
-    def leaf(n):
-        if isinstance(n, ItemRange):
-            return
-        if isinstance(n, ArrItems):
-            for s in n.positional:
-                _chk_value(s)
-            _chk_value(n.additional)
-            return
-        if isinstance(n, ArrContains):
-            return _chk_value(n.schema)
-        # uniqueItems stays on the explainer UDF: parse_json drops the
-        # sign of a decimal -0.0, so [0.0, -0.0] would read as a
-        # duplicate here while pyeval and the reference keep them
-        # distinct (XXH64 over raw double bytes, src/validate_uniq.c:43)
-        raise _Unsupported(f"array leaf {type(n).__name__}")
-
-    _chk_combinators(node, leaf)
-
-
-def _chk_object(node: Node) -> None:
-    def leaf(n):
-        if isinstance(n, (ObjRequired, PropRange)):
-            return
-        if isinstance(n, ObjPropNames):
-            arm = (
-                dict(n.name_schema.arms)["string"]
-                if isinstance(n.name_schema, Switch)
-                else n.name_schema
-            )
-            return _chk_string(arm)
-        if isinstance(n, ObjPropSet):
-            # round-5: the map-entry axis (ObjPropSet.entries) removed
-            # the path-grammar limits — pattern VALUE subschemas,
-            # schema-form additionalProperties, and exotic key names
-            # all lower; every subschema must itself be lowerable
-            for _k, sub in n.props:
-                _chk_value(sub)
-            for pat, sub in n.patterns:
-                _chk_value(sub)
-                redialect.translate(pat, "java")
-            _chk_value(n.additional)
-            return
-        raise _Unsupported(f"object leaf {type(n).__name__}")
-
-    _chk_combinators(node, leaf)
-
-
-def _chk_value(node: Node) -> None:
-    if isinstance(node, Ref):
-        raise _Unsupported("$ref")
-    if isinstance(node, (Valid, Invalid)):
-        return
-    if isinstance(node, EnumMatch):
-        return  # scalars per arm; composites via enum-regime canon text
-    if isinstance(node, (And, Or, Xor)):
-        for t in node.terms:
-            _chk_value(t)
-        return
-    if isinstance(node, Not):
-        return _chk_value(node.term)
-    if isinstance(node, Switch):
-        arms = dict(node.arms)
-        _chk_trivial(_arm_project(arms["null"], "null"), "null")
-        _chk_trivial(_arm_project(arms["boolean"], "boolean"), "boolean")
-        _chk_number(_arm_project(arms["number"], "number"))
-        _chk_string(_arm_project(arms["string"], "string"))
-        _chk_array(_arm_project(arms["array"], "array"))
-        _chk_object(_arm_project(arms["object"], "object"))
-        return
-    raise _Unsupported(f"value-level node {type(node).__name__}")
-
-
 # ---- violation-row (explain) lowering ------------------------------
 #
 # Round-4: the *violations* output lowers through the same variant
@@ -1096,10 +790,8 @@ def _chk_value(node: Node) -> None:
 #   And        -> concatenation of term violations
 #   Or/Xor/Not -> one INVALID_SPLIT_CONDITION at the subtree's path
 #   ObjPropSet -> document key order (json_object_keys preserves it)
-#   ArrItems   -> per-element rows at $path[i]
 # The explain expression only ever evaluates in the lazy ELSE branch of
-# the two-tier packing (valid rows never pay for it), so it favors
-# clarity over the two-phase fusion the boolean array path uses.
+# the two-tier packing (valid rows never pay for it).
 
 _VIO_ARR_T = "array<struct<code:int,path:string,message:string>>"
 
@@ -1197,58 +889,6 @@ def _explain_trivial(node: Node, arm: str, val: Optional[_Value], path: Column) 
 
     return _explain_combinators(
         node, lambda n: _trivial_checks(n, arm, val), leaf, path
-    )
-
-
-def _explain_array(node: Node, val: _Value, path: Column) -> Column:
-    from jvst_spark import errors as E
-
-    elems = val.elems()
-
-    def items_explain(n: ArrItems) -> Column:
-        def per_elem(e: Column, i: Column) -> Column:
-            ep = F.concat(
-                path, F.lit("["), i.cast("string"), F.lit("]")
-            )
-
-            def body(txt: Column) -> Column:
-                ev = _Value(e, "$", text=txt)
-                expr = _explain_value(n.additional, ev, ep)
-                for idx in range(len(n.positional) - 1, -1, -1):
-                    expr = F.when(
-                        i == F.lit(idx),
-                        _explain_value(n.positional[idx], ev, ep),
-                    ).otherwise(expr)
-                return expr
-
-            return F.element_at(
-                F.transform(F.array(F.to_json(e)), body), 1
-            )
-
-        return F.flatten(F.transform(elems, per_elem))
-
-    def leaf(n: Node) -> Column:
-        if isinstance(n, ItemRange):
-            ln = F.size(elems)
-            expr = F.when(
-                ln < F.lit(n.lo), _vio1(E.INVALID_TOO_FEW_ITEMS, path)
-            )
-            if n.hi is not None:
-                expr = expr.when(
-                    ln > F.lit(n.hi), _vio1(E.INVALID_TOO_MANY_ITEMS, path)
-                )
-            return expr.otherwise(_empty_vio())
-        if isinstance(n, ArrItems):
-            return items_explain(n)
-        if isinstance(n, ArrContains):
-            hit = F.exists(
-                elems, lambda e: _sub_cond(n.schema, e, F.to_json(e))
-            )
-            return _gate_vio(hit, E.INVALID_UNSATISFIED_CONTAINS, path)
-        raise _Unsupported(f"array explain leaf {type(n).__name__}")
-
-    return _explain_combinators(
-        node, lambda n: _array_checks(n, val), leaf, path
     )
 
 
@@ -1369,8 +1009,7 @@ def _propset_explain_entries(
     paths are dynamic Columns (`path . key`), the same dot form pyeval
     renders for every key shape.
 
-    Order caveat (shared with the array-element route, whose element
-    text is to_json(e)): violations NESTED >= 2 levels below a dynamic
+    Order caveat: violations NESTED >= 2 levels below a dynamic
     key iterate that deeper object's keys in sorted order (the entry
     value's text is recovered via variant cast, which renders sorted
     keys), while pyeval iterates document order. Same rows, same codes,
@@ -1448,8 +1087,8 @@ def _explain_switch(node: Switch, val: _Value, path: Column) -> Column:
         ).otherwise(res)
         res = F.when(
             typ.startswith("ARRAY"),
-            _explain_array(
-                _arm_project(arms["array"], "array"), bound, path
+            _explain_trivial(
+                _arm_project(arms["array"], "array"), "array", bound, path
             ),
         ).otherwise(res)
         if has_text:
@@ -1486,18 +1125,13 @@ def _explain_value(node: Node, val: _Value, path: Column) -> Column:
     )
 
 
-def try_lower_full(
-    spec, max_ref_depth: int | None = None
-) -> Optional[Callable[[Column], Column]]:
-    """CompiledSpec -> (json string Column -> exploded
-    struct<valid:boolean, vios:array<struct<code,path,message>>>),
-    or None when the spec needs the general pyeval path (the
-    supportability check is structural, so this is safe to call
-    without an active SparkSession). A spec either gets fully-JVM
-    violation rows and verdict column (zero Python) or falls back to
-    pyeval for both. `max_ref_depth` opts cyclic $ref
-    specs into bounded unrolling (see _inline_refs) — without it they
-    return None and stay on pyeval.
+def try_lower_full(spec, doc: Column) -> Optional[Column]:
+    """CompiledSpec + JSON text Column -> exploded
+    struct<valid:boolean, vios:array<struct<code,path,message>>>, or
+    None when the spec falls outside the subset (module docstring).
+    Building the Column is the support check: every lowering function
+    raises _Unsupported at a leaf it cannot lower, so this needs an
+    active SparkSession and is called once per compiled route.
 
     Shape: the parsed variant is let-bound once; `valid` is the strict
     guard + boolean lowering; violations sit in the lazy ELSE of a
@@ -1507,50 +1141,39 @@ def try_lower_full(
     once, downstream field reads are attribute refs."""
     from jvst_spark import errors as E
 
+    def outer(v: Column) -> Column:
+        val = _Value(v, "$", text=doc)
+        strict = _strict_guard(doc, v)
+        valid_e = F.coalesce(strict & _lower_value(root, val), _F())
+
+        def inner(ok: Column) -> Column:
+            explain = _explain_value(root, val, F.lit("$"))
+            # invariant: invalid => >=1 violation row (pyeval's
+            # wrapper falls back to UNEXPECTED_TOKEN likewise)
+            nonempty = F.element_at(
+                F.transform(
+                    F.array(explain),
+                    lambda a: F.when(F.size(a) > 0, a).otherwise(
+                        _vio1(E.INVALID_UNEXPECTED_TOKEN, F.lit("$"))
+                    ),
+                ),
+                1,
+            )
+            vio = F.when(ok, _empty_vio()).otherwise(
+                F.when(
+                    ~F.coalesce(strict, _F()),
+                    _vio1(E.INVALID_JSON, F.lit("$")),
+                ).otherwise(nonempty)
+            )
+            return F.struct(ok.alias("valid"), vio.alias("vios"))
+
+        return F.element_at(F.transform(F.array(valid_e), inner), 1)
+
     try:
-        root = (
-            _inline_refs(spec.root, spec.defs, max_ref_depth)
-            if spec.defs
-            else spec.root
-        )
-        _chk_value(root)
+        root = _inline_refs(spec.root, spec.defs) if spec.defs else spec.root
+        return F.explode(F.transform(F.array(F.try_parse_json(doc)), outer))
     except _Unsupported:
         return None
-
-    def build(col: Column) -> Column:
-        def outer(v: Column) -> Column:
-            val = _Value(v, "$", text=col)
-            strict = _strict_guard(col, v)
-            valid_e = F.coalesce(strict & _lower_value(root, val), _F())
-
-            def inner(ok: Column) -> Column:
-                explain = _explain_value(root, val, F.lit("$"))
-                # invariant: invalid => >=1 violation row (pyeval's
-                # wrapper falls back to UNEXPECTED_TOKEN likewise)
-                nonempty = F.element_at(
-                    F.transform(
-                        F.array(explain),
-                        lambda a: F.when(F.size(a) > 0, a).otherwise(
-                            _vio1(E.INVALID_UNEXPECTED_TOKEN, F.lit("$"))
-                        ),
-                    ),
-                    1,
-                )
-                vio = F.when(ok, _empty_vio()).otherwise(
-                    F.when(
-                        ~F.coalesce(strict, _F()),
-                        _vio1(E.INVALID_JSON, F.lit("$")),
-                    ).otherwise(nonempty)
-                )
-                return F.struct(ok.alias("valid"), vio.alias("vios"))
-
-            return F.element_at(F.transform(F.array(valid_e), inner), 1)
-
-        return F.explode(
-            F.transform(F.array(F.try_parse_json(col)), outer)
-        )
-
-    return build
 
 
 def _strict_guard(col: Column, v: Column) -> Column:

@@ -322,7 +322,7 @@ class ValidationPlan:
     ) -> "ValidationResult":
         """Validate a column of JSON text documents.
 
-        One route, fixed by the spec and `max_ref_depth` alone:
+        One route, fixed by the spec alone:
         - `verdicts()` reads the compiled-Python validator in one
           Arrow-batched pandas UDF (json.loads + closure per document;
           jvst: compile once, jvst_vm_more per document,
@@ -333,26 +333,23 @@ class ValidationPlan:
           Columns (`json_builtin.try_lower_full`) when the spec lowers
           — no Python node in the plan — and otherwise the explainer
           UDF (compiled Python, authoritative for everything the
-          lowering declines, e.g. cyclic $ref without max_ref_depth
-          or uniqueItems). Both routes emit the same rows.
+          lowering declines, e.g. any array keyword or a cyclic $ref,
+          where the explainer also measured faster). Both routes emit
+          the same rows.
 
-        `max_ref_depth` (round-5): opt a CYCLIC $ref spec into the JVM
-        variant fast path by unrolling each ref cycle to depth D —
-        documents whose structure re-enters the cycle beyond D are
-        rejected with INVALID_UNEXPECTED_TOKEN at the cut (the §7.3
-        bounded-unroll plan; jvst runs recursion natively via VM CALL
+        `max_ref_depth`: bound the recursion of a CYCLIC $ref spec.
+        The (D+1)-th re-entry of the same ref along a path evaluates
+        as Invalid, and its violation row is INVALID_UNEXPECTED_TOKEN
+        at the cut path (jvst runs recursion natively via VM CALL
         frames, src/validate_vm.c:1449-1468). D counts ref EXPANSIONS
         along a path — a k-level linked-list chain with an explicit
         null terminator exercises its ref k+1 times — so choose D
         above the data's max expansion count; documents within the
-        bound validate exactly as pyeval's true recursion would
-        (parity pinned in test_json_builtin.py). The bound is honored
-        on EVERY route: if the spec cannot unroll (a cut landing under
-        not/oneOf — where Invalid-at-cut would not be fail-closed — or
-        any other lowering refusal), the compiled Python applies the
-        same cut dynamically (per-path re-entry counter), never true
-        recursion. Default None = cycles stay on the authoritative
-        unbounded pyeval closures.
+        bound validate exactly as true recursion would. Cyclic specs
+        never lower to variant Columns, so every view applies the cut
+        through the compiled Python's per-path re-entry counter (under
+        not/oneOf too, where a cut subtree reads as Invalid before the
+        negation). Default None = unbounded recursion.
 
         `engine` selects nothing: "auto" is its only legal value."""
         # kept only because perfbench/workloads.py passes engine="auto"
@@ -415,12 +412,12 @@ class ValidationPlan:
         # in the lazy ELSE for invalid rows (the reference's output IS
         # coded violations, src/validate_ir.h:134-163, so the 100 TB
         # violations path stays vectorized)
-        lowered = try_lower_full(self.spec, max_ref_depth)
-        if lowered is not None:
-            return lowered(doc), valid
+        packed = try_lower_full(self.spec, doc)
+        if packed is not None:
+            return packed, valid
 
-        # otherwise the explainer UDF; max_ref_depth keeps its cut
-        # semantics here too (pyeval's dynamic per-path counter)
+        # otherwise the explainer UDF, which applies max_ref_depth's
+        # cut (pyeval's dynamic per-path counter) like the validator
         explainer = compile_explain(
             self.spec.root, self.spec.defs, max_ref_depth
         )

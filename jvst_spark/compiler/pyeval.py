@@ -71,14 +71,13 @@ def compile_python(
 ) -> Validator:
     """Compile to a value -> bool closure.
 
-    `max_ref_depth` (round-5): the (D+1)-th re-entry of the SAME $ref
-    along an evaluation path evaluates as Invalid (False) — the
-    dynamic twin of json_builtin's bounded unrolling, so the pyeval
-    fallback honors apply_json(max_ref_depth=...) with identical
-    semantics instead of silently running true recursion (review
-    finding). Depth is tracked per path via enter/exit bookkeeping;
-    evaluation is synchronous, so one counter dict per compile is
-    safe. `_ref_depth` lets compile_explain share ITS path counters
+    `max_ref_depth`: the (D+1)-th re-entry of the SAME $ref along an
+    evaluation path evaluates as Invalid (False). This counter is how
+    apply_json(max_ref_depth=...) bounds a cyclic spec on every view:
+    cyclic refs never lower to variant Columns, so the validator and
+    the explainer apply the one cut. Depth is tracked per path via
+    enter/exit bookkeeping; evaluation is synchronous, so one counter
+    dict per compile is safe. `_ref_depth` lets compile_explain share ITS path counters
     with the fast validators it embeds (a fresh dict would grant
     embedded subtrees a fresh depth budget)."""
     memo: Dict[str, Validator] = {}
@@ -264,8 +263,8 @@ def compile_explain(
     valid. Failures appear in canonical DAG order; index [0] is the
     reference-VM-equivalent first error. `max_ref_depth`: see
     compile_python — the cut emits INVALID_UNEXPECTED_TOKEN at the cut
-    path, matching the unrolled Invalid; the embedded fast validators
-    share this compile's path counters."""
+    path; the embedded fast validators share this compile's path
+    counters."""
     memo: Dict[str, ExplainFn] = {}
     defs = defs or {}
     ok: List[Tuple[int, str]] = []

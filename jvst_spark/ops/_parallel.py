@@ -14,11 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Round-robin repartition `df` up to `min_parts` (default: the
-    cluster's defaultParallelism) ONLY when it currently has fewer
-    partitions. No-op — no shuffle, no plan change — when the input is
-    already wide enough, which is the normal case at scale.
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition `df` up to the cluster's
+    defaultParallelism ONLY when it currently has fewer partitions.
+    No-op — no shuffle, no plan change — when the input is already
+    wide enough, which is the normal case at scale.
 
     Cost note: the `.rdd` partition probe plans the input subtree on
     the driver (~0.3-0.6s on this host, once per DataFrame build —
@@ -29,8 +29,7 @@ def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None) -> DataF
     if df.isStreaming:  # .rdd is undefined; micro-batches repartition
         return df       # via their own shuffle boundaries
     spark = df.sparkSession
-    sc = spark.sparkContext
-    target = min_parts if min_parts is not None else sc.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     # memoize the probe per (session, analyzed-plan semantic hash)
     # (round-6): the .rdd probe pays ~0.2-0.3s of driver-side physical
     # planning per FRESH DataFrame, and query entry points rebuild

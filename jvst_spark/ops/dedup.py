@@ -95,22 +95,6 @@ def exact_class_representatives(
     )
 
 
-def minhash_signature(toks: Column, n_hashes: int = N_HASHES) -> Column:
-    """Array of n lexicographic-min md5(seed||shingle) hex strings."""
-    sh = word_shingles(toks)
-
-    def one(i: int) -> Column:
-        # NB: a two-param lambda (even `i=i` defaults) would be treated
-        # by pyspark as the (element, index) form — seed must be bound
-        # OUTSIDE the lambda
-        seed = F.lit(f"mh{i}|")
-        return F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(seed, s)))
-        )
-
-    return F.array(*[one(i) for i in range(n_hashes)])
-
-
 def minhash_bands(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, band int, band_key string): LSH bucket keys. Narrow
     explode — n_bands rows per doc.

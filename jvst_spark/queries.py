@@ -650,12 +650,12 @@ def val_json_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # round-5: a genuinely CYCLIC $ref spec (linked list) validated with a
-# bounded recursion depth (apply_json max_ref_depth=9: the variant
-# Columns unroll the cycle, the compiled-Python verdict validator cuts
-# at the same depth — the reference runs recursion natively through VM
-# CALL frames, src/validate_vm.c:1449-1468; a columnar plan unrolls
-# and rejects documents whose structure re-enters the cycle beyond
-# the bound with INVALID_UNEXPECTED_TOKEN at the cut). max_ref_depth
+# bounded recursion depth (apply_json max_ref_depth=9: the compiled
+# Python counts ref re-entries per path and rejects documents whose
+# structure re-enters the cycle beyond the bound, with
+# INVALID_UNEXPECTED_TOKEN at the cut in violation rows — the
+# reference runs recursion natively through VM CALL frames,
+# src/validate_vm.c:1449-1468). max_ref_depth
 # counts ref EXPANSIONS along a path, and a chain of k object levels
 # terminated by an explicit `"next": null` exercises the ref k+1
 # times (the null is itself validated by the ref'd schema), so depth 9
@@ -699,11 +699,9 @@ FROM events
 @query("val_json_recursive", _JSON_RECURSIVE_SQL)
 def val_json_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cyclic-$ref validation (recursive linked-list schema) over
-    dynamic JSON with the cycle unrolled to depth 9 (8 object levels
-    + the terminating null); verdicts from the compiled-Python
-    validator (one ArrowEvalPython node) applying the same cut
-    (unbounded pyeval remains the differential fixture, pinned in
-    test_json_builtin.py)."""
+    dynamic JSON with recursion cut at depth 9 (8 object levels + the
+    terminating null); verdicts from the compiled-Python validator
+    (one ArrowEvalPython node) counting ref re-entries per path."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     eid = F.col("event_id")
     depth = (eid % 9 + 1).cast("int")

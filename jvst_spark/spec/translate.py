@@ -355,8 +355,9 @@ class _Translator:
                 # most _INLINE_SIZE_LIMIT nodes and big shared schemas
                 # become CALL-style defs, which all four engines bound
                 # (pyeval memoizes; typed unrolls against the finite
-                # DataType; arrow caps ref depth; json_builtin's
-                # inliner has its own budget).
+                # DataType; arrow caps ref depth; json_builtin inlines
+                # acyclic refs under its own budget and declines
+                # cycles).
                 if key not in self.defs:
                     self.defs[key] = node
                 ref = Ref(key)

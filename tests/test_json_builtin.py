@@ -14,11 +14,17 @@ from jvst_spark.compiler.pyeval import compile_python
 from tests.conftest import CONFORMANCE_CASES
 
 
-def _variant_valid(df, fast, col="body"):
+def _lowers(spec):
+    """Does `spec` lower to variant Columns? (Needs a SparkSession:
+    building the Column is the support check.)"""
+    return try_lower_full(spec, F.col("body")) is not None
+
+
+def _variant_valid(df, fast):
     """{doc_id: valid} from the variant route's verdict field
-    (`fast` = try_lower_full(spec)) over df[col]."""
+    (`fast` = try_lower_full(spec, F.col("body")))."""
     rows = (
-        df.select("doc_id", fast(F.col(col)).alias("r"))
+        df.select("doc_id", fast.alias("r"))
         .select("doc_id", "r.valid")
         .collect()
     )
@@ -80,49 +86,68 @@ NESTED_DOCS = [
 
 
 class TestFastPathSupported:
-    def test_props_spec_lowers(self):
-        assert try_lower_full(compile_schema(PROPS_SPEC)) is not None
+    def test_props_spec_lowers(self, spark):
+        assert _lowers(compile_schema(PROPS_SPEC))
 
-    def test_array_length_spec_lowers_and_agrees(self, spark):
-        schema = {"properties": {"tags": {
-            "type": "array", "minItems": 1, "maxItems": 3}}}
+    def test_array_type_check_lowers_and_agrees(self, spark):
+        """An array arm that is a plain type check (Valid/Invalid)
+        still lowers; only array keywords decline."""
+        schema = {"required": ["tags"], "properties": {
+            "tags": {"type": "array"}, "n": {"type": ["integer", "array"]}}}
         spec = compile_schema(schema)
-        fast = try_lower_full(spec)
+        fast = try_lower_full(spec, F.col("body"))
         assert fast is not None
         pyv = compile_python(spec.root, spec.defs)
-        docs = ['{"tags": []}', '{"tags": [1]}', '{"tags": [1,2,3]}',
-                '{"tags": [1,2,3,4]}', '{"tags": "x"}', "{}",
-                '{"tags": [[1],[2]]}']
+        docs = ['{"tags": []}', '{"tags": [1]}', '{"tags": [[1],[2]]}',
+                '{"tags": "x"}', "{}", '{"tags": {}}', '{"tags": null}',
+                '{"tags": [], "n": 2}', '{"tags": [], "n": [1.5]}',
+                '{"tags": [], "n": "x"}', "[1]"]
         df = spark.createDataFrame(
             [(str(i), d) for i, d in enumerate(docs)], ["doc_id", "body"])
         got = _variant_valid(df, fast)
         for i, d in enumerate(docs):
             assert got[str(i)] == pyv(json.loads(d)), d
 
-    def test_nested_object_spec_lowers(self):
-        assert try_lower_full(compile_schema(
+    def test_nested_object_spec_lowers(self, spark):
+        assert _lowers(compile_schema(
             {"properties": {"a": {
                 "type": "object",
                 "required": ["b"],
                 "properties": {"b": {"type": "integer", "minimum": 1}},
                 "additionalProperties": False,
             }}}
-        )) is not None
+        ))
 
     @pytest.mark.parametrize(
         "schema",
         [
-            # cyclic without an unroll depth stays on pyeval
+            # cyclic refs run on the explainer UDF's closures
             {"$ref": "#/definitions/a",
              "definitions": {"a": {"properties": {"b": {"$ref": "#/definitions/a"}}}}},
             # parse_json drops a decimal -0.0's sign: the explainer UDF
             # keeps [0.0, -0.0] distinct like the reference
             {"uniqueItems": True},
+            # every other array keyword: the explainer UDF measured
+            # faster on these rows
+            {"properties": {"tags": {
+                "type": "array", "minItems": 1, "maxItems": 3}}},
+            {"type": "array", "items": {"type": "integer"}},
+            {"contains": {"type": "string", "minLength": 2}},
+            {"items": [{"type": "integer"}, {"type": "string"}],
+             "additionalItems": {"type": "boolean"}},
+            {"items": {"type": "object", "required": ["id"],
+                       "properties": {"id": {"type": "integer"}},
+                       "additionalProperties": False}},
+            {"items": {"type": "array", "items": {"type": "number"}}},
+            {"not": {"contains": {"type": "integer", "minimum": 5}}},
+            {"properties": {"a": {"properties": {"b": {"maxItems": 2}}}}},
         ],
-        ids=["cyclic-ref", "unique"],
+        ids=["cyclic-ref", "unique", "item-range", "items-scalar",
+             "contains", "positional-items", "items-object",
+             "items-nested-array", "not-contains", "nested-max-items"],
     )
-    def test_unsupported_specs_fall_back(self, schema):
-        assert try_lower_full(compile_schema(schema)) is None
+    def test_unsupported_specs_fall_back(self, spark, schema):
+        assert not _lowers(compile_schema(schema))
 
     @pytest.mark.parametrize(
         "schema",
@@ -135,27 +160,8 @@ class TestFastPathSupported:
         ],
         ids=["unaddressable-key", "pattern-subschema", "schema-additional"],
     )
-    def test_dynamic_key_specs_now_lower(self, schema):
-        assert try_lower_full(compile_schema(schema)) is not None
-
-    @pytest.mark.parametrize(
-        "schema",
-        [
-            {"type": "array", "items": {"type": "integer"}},
-            {"contains": {"type": "string", "minLength": 2}},
-            {"items": [{"type": "integer"}, {"type": "string"}],
-             "additionalItems": {"type": "boolean"}},
-            {"items": {"type": "object", "required": ["id"],
-                       "properties": {"id": {"type": "integer"}},
-                       "additionalProperties": False}},
-            {"items": {"type": "array", "items": {"type": "number"}}},
-        ],
-        ids=["items-scalar", "contains", "positional-items",
-             "items-object", "items-nested-array"],
-    )
-    def test_array_specs_now_lower(self, schema):
-        # round-3: the array keywords joined the JVM fast path
-        assert try_lower_full(compile_schema(schema)) is not None
+    def test_dynamic_key_specs_now_lower(self, spark, schema):
+        assert _lowers(compile_schema(schema))
 
 
 class TestFastPathParity:
@@ -178,7 +184,7 @@ class TestFastPathParity:
 
     def test_nested_spec_matches_pyeval(self, spark):
         spec = compile_schema(NESTED_SPEC)
-        fast = try_lower_full(spec)
+        fast = try_lower_full(spec, F.col("body"))
         assert fast is not None
         pyv = compile_python(spec.root, spec.defs)
         df = spark.createDataFrame(
@@ -190,11 +196,25 @@ class TestFastPathParity:
             assert got[str(i)] == pyv(json.loads(d)), d
 
     def test_conformance_pattern_properties_suite_fully_lowers(self, spark):
-        """Round-5 coverage pin: EVERY schema in the patternProperties
-        and additionalProperties conformance suites lowers to the JVM
-        fast path (the map-entry axis) and reproduces the expected
-        verdicts — these suites carried the dynamic-key value checks
-        that were pyeval-only through round 4."""
+        """Round-5 coverage pin: every schema in the patternProperties
+        and additionalProperties conformance suites without an array
+        keyword lowers to the JVM fast path (the map-entry axis) and
+        reproduces the expected verdicts — these suites carried the
+        dynamic-key value checks that were pyeval-only through round
+        4. A schema with an array keyword declines, and its frame (the
+        explainer UDF) reproduces the expected verdicts instead."""
+        array_kw = ("minItems", "maxItems", "items", "additionalItems",
+                    "contains", "uniqueItems")
+
+        def has_array_kw(s):
+            if isinstance(s, dict):
+                return any(k in array_kw for k in s) or any(
+                    has_array_kw(v) for v in s.values()
+                )
+            if isinstance(s, list):
+                return any(has_array_kw(v) for v in s)
+            return False
+
         targets = {}
         for suite, schema, desc, doc, expected in CONFORMANCE_CASES:
             if "patternProperties" in suite or "additionalProperties" in suite:
@@ -206,71 +226,21 @@ class TestFastPathParity:
         bad = []
         for key, (schema, cases) in targets.items():
             spec = compile_schema(schema)
-            fast = try_lower_full(spec)
-            assert fast is not None, f"did not lower: {schema}"
             df = spark.createDataFrame(
                 [(cid, txt) for cid, txt, _ in cases], ["doc_id", "body"]
             )
-            got = _variant_valid(df, fast)
+            if has_array_kw(schema):
+                assert not _lowers(spec), schema
+                frame = ValidationPlan(spec).apply_json(df, "body").frame
+                got = {r["doc_id"]: r["valid"] for r in frame.collect()}
+            else:
+                fast = try_lower_full(spec, F.col("body"))
+                assert fast is not None, f"did not lower: {schema}"
+                got = _variant_valid(df, fast)
             for cid, txt, expected in cases:
                 if got[cid] != expected:
                     bad.append((cid, expected, got[cid]))
         assert not bad, bad[:10]
-
-    def test_combinators_over_array_leaves_match_pyeval(self, spark):
-        """Boolean combinators wrapping array leaves at the SAME array
-        path — the shapes the round-3 two-phase lowering restructures
-        (every leaf's per-element component moves into one shared
-        bound transform; the combinator skeleton then consumes
-        precomputed fields). not/anyOf/allOf/oneOf over items,
-        contains, min/maxItems, and duplicate leaves that must share a
-        field."""
-        specs = [
-            {"not": {"contains": {"type": "integer", "minimum": 5}}},
-            {"anyOf": [
-                {"items": {"type": "integer"}},
-                {"contains": {"type": "string"}},
-            ]},
-            {"allOf": [
-                {"items": {"type": "number", "minimum": 0}},
-                {"maxItems": 2},
-                {"minItems": 1},
-            ]},
-            {"oneOf": [
-                {"contains": {"const": 1}},
-                {"contains": {"const": "x"}},
-            ]},
-            # duplicate leaf nodes -> one shared struct field
-            {"allOf": [
-                {"contains": {"type": "integer", "minimum": 0}},
-                {"anyOf": [
-                    {"contains": {"type": "integer", "minimum": 0}},
-                    {"minItems": 3},
-                ]},
-            ]},
-            {"not": {"items": {"type": "integer"}}},
-            {"items": [{"type": "integer"}, {"type": "string"}],
-             "additionalItems": {"type": "boolean"}},
-        ]
-        docs = [
-            "[]", "[1]", "[1, 2, 3]", "[5, 6]", '["x"]', '[1, "x"]',
-            '[1, 1]', '[0.5, -2]', '[1, 1.0]', '[true, false]',
-            '[1, "a", true]', '[[1], [1]]', '[{"a": 1}, {"a": 1}]',
-            '[null, null]', "[2.5]", '[1, "x", true, true]',
-            "5", '"abc"', "null", "{}", '{"a": [1]}',
-        ]
-        for schema in specs:
-            spec = compile_schema(schema)
-            fast = try_lower_full(spec)
-            assert fast is not None, schema
-            pyv = compile_python(spec.root, spec.defs)
-            df = spark.createDataFrame(
-                [(str(i), d) for i, d in enumerate(docs)],
-                ["doc_id", "body"],
-            )
-            got = _variant_valid(df, fast)
-            for i, d in enumerate(docs):
-                assert got[str(i)] == pyv(json.loads(d)), (schema, d)
 
     def test_fuzz_random_specs_match_pyeval(self, spark):
         """Seeded fuzz: random supported-spec shapes x random documents
@@ -291,30 +261,9 @@ class TestFastPathParity:
                 {"type": "string", "pattern": rng.choice(["^a", "[0-9]$", "x"])},
                 {"type": "boolean"},
                 {"enum": rng.sample([1, 2.5, "x", "y", True, None], 3)},
-                {"type": "array", "minItems": rng.randint(0, 2),
-                 "maxItems": rng.randint(2, 4)},
-                # round-3 array keywords on the fast path
-                {"type": "array",
-                 "items": rng.choice([
-                     {"type": "integer"},
-                     {"type": "string", "maxLength": 4},
-                     {"type": "number", "minimum": 0},
-                 ]),
-                 "uniqueItems": rng.random() < 0.5},
-                {"uniqueItems": True},
-                {"contains": rng.choice([
-                    {"type": "integer", "minimum": 0},
-                    {"type": "string", "pattern": "^a"},
-                    {"const": rng.choice([1, "x", True])},
-                ])},
-                {"items": [{"type": "integer"}, {"type": "string"}],
-                 "additionalItems": rng.choice(
-                     [True, False, {"type": "boolean"}])},
-                {"type": "array",
-                 "items": {"type": "object", "required": ["a"],
-                           "properties": {"a": {"type": "integer"}},
-                           "additionalProperties":
-                               rng.random() < 0.5}},
+                # array keywords decline; a plain type check lowers
+                {"type": rng.choice(["array", ["array", "null"]])},
+                {"const": rng.choice([[1, 2], {"a": 1}, [0.0]])},
             ])
 
         def obj_spec(depth):
@@ -371,7 +320,7 @@ class TestFastPathParity:
         for trial in range(20):
             schema = obj_spec(1)
             spec = compile_schema(schema)
-            fast = try_lower_full(spec)
+            fast = try_lower_full(spec, F.col("body"))
             if fast is None:
                 continue
             pyv = compile_python(spec.root, spec.defs)
@@ -423,6 +372,43 @@ class TestFastPathParity:
         assert verd == {"0": True, "1": False, "2": False, "3": False,
                         "4": False}
 
+    def test_rows_route_by_spec_shape(self, spark):
+        """frame/violations() rows stay on variant Columns only for
+        specs without array keywords or cyclic refs: the benchmark's
+        array spec (without uniqueItems) and its depth-9 recursive
+        spec each put exactly one ArrowEvalPython node (the explainer
+        UDF) in frame, while the flat and violation-row specs put
+        none. Of the seven val_json_* specs, exactly five lower."""
+        from jvst_spark import queries as q
+
+        array_spec = json.loads(json.dumps(q._ARRAY_SPEC))
+        del array_spec["properties"]["tags"]["uniqueItems"]
+        df = spark.createDataFrame([("0", "{}")], ["doc_id", "body"])
+        for schema, depth, n_py in [
+            (array_spec, None, 1),
+            (q._RECURSIVE_SPEC, 9, 1),
+            (PROPS_SPEC, None, 0),
+            (q._JSON_VIO_SPEC, None, 0),
+        ]:
+            res = ValidationPlan(compile_schema(schema)).apply_json(
+                df, "body", max_ref_depth=depth
+            )
+            pl = res.frame._jdf.queryExecution().executedPlan().toString()
+            assert pl.count("ArrowEvalPython") == n_py, (schema, pl)
+            assert "BatchEvalPython" not in pl
+        lowered = {
+            name: _lowers(compile_schema(getattr(q, name)))
+            for name in ("_PROPS_SPEC", "_NESTED_SPEC", "_ARRAY_SPEC",
+                         "_JSON_VIO_SPEC", "_JSON_DEPS_SPEC",
+                         "_RECURSIVE_SPEC", "_DYNPROPS_SPEC")
+        }
+        assert lowered == {
+            "_PROPS_SPEC": True, "_NESTED_SPEC": True,
+            "_ARRAY_SPEC": False, "_JSON_VIO_SPEC": True,
+            "_JSON_DEPS_SPEC": True, "_RECURSIVE_SPEC": False,
+            "_DYNPROPS_SPEC": True,
+        }
+
     def test_unique_negative_zero_agrees_on_every_view(self, spark):
         """Decimal-form -0.0 loses its sign inside parse_json (variant
         DECIMAL has no -0), so uniqueItems stays off the variant
@@ -440,7 +426,7 @@ class TestFastPathParity:
         ]
         for schema, txt, valid in cases:
             spec = compile_schema(schema)
-            assert try_lower_full(spec) is None, schema
+            assert not _lowers(spec), schema
             df = spark.createDataFrame([("d", txt)], ["doc_id", "body"])
             res = ValidationPlan(spec).apply_json(df, "body")
             (verdict,) = res.verdicts().collect()
@@ -480,7 +466,7 @@ class TestFastPathParity:
         }
 
 
-def _pyeval_violations(spec, txt):
+def _pyeval_violations(spec, txt, max_ref_depth=None):
     """Reference behavior of the dynamic path on one document: the
     exact wrapper semantics of plan.apply_json's pandas-UDF branch
     (INVALID_JSON on null/malformed/dup-keys, explain rows otherwise,
@@ -496,8 +482,8 @@ def _pyeval_violations(spec, txt):
         )
     except (ValueError, RecursionError):
         return [(E.INVALID_JSON, "$")]
-    pyv = compile_python(spec.root, spec.defs)
-    ex = compile_explain(spec.root, spec.defs)
+    pyv = compile_python(spec.root, spec.defs, max_ref_depth)
+    ex = compile_explain(spec.root, spec.defs, max_ref_depth)
     try:
         if pyv(doc):
             return []
@@ -610,10 +596,19 @@ class TestExplainLowering:
             '[{"id": 1, "zz": 2}]', "[1]", '["a", {"id": 1}]',
             '[{"id": 1.5}]', "{}", "5", "null",
         ]
-        assert try_lower_full(compile_schema(schema)) is not None
+        # array keywords put the rows on the explainer UDF
+        assert not _lowers(compile_schema(schema))
         self._check(spark, schema, docs)
-        # uniqueItems moves the rows onto the explainer UDF
         self._check(spark, {**schema, "uniqueItems": True}, docs)
+
+    def test_array_type_arm_explain_parity(self, spark):
+        schema = {"type": "object", "properties": {
+            "t": {"type": "array"}, "u": {"type": ["array", "string"]}}}
+        assert _lowers(compile_schema(schema))
+        docs = ['{"t": []}', '{"t": [1, "x"]}', '{"t": 1}', '{"t": {}}',
+                '{"u": "s"}', '{"u": [1]}', '{"u": 2}', '{"t": 1, "u": 2}',
+                "[]", "{}"]
+        self._check(spark, schema, docs)
 
     def test_positional_items_explain_parity(self, spark):
         schema = {
@@ -656,7 +651,9 @@ class TestExplainLowering:
     def test_conformance_corpus_explain_parity(self, spark):
         """Every lowerable schema in the conformance corpus: the JVM
         explain rows equal pyeval's, (code, path) for (code, path), in
-        order, on every document."""
+        order, on every document. The lowered Column is read directly
+        (apply_json's frame projects the same struct), so each schema
+        is built once."""
         by_schema = {}
         for suite, schema, desc, doc, expected in CONFORMANCE_CASES:
             key = json.dumps(schema, sort_keys=True)
@@ -667,17 +664,17 @@ class TestExplainLowering:
         mismatches = []
         for key, (schema, cases) in by_schema.items():
             spec = compile_schema(schema)
-            if try_lower_full(spec) is None:
+            packed = try_lower_full(spec, F.col("body"))
+            if packed is None:
                 continue
             n_lowered += 1
-            plan = ValidationPlan(spec)
             df = spark.createDataFrame(cases, ["doc_id", "body"])
             got = {
                 r["doc_id"]: (
-                    r["valid"],
-                    [(v["code"], v["path"]) for v in r["_violations"]],
+                    r["r"]["valid"],
+                    [(v["code"], v["path"]) for v in r["r"]["vios"]],
                 )
-                for r in plan.apply_json(df, "body").frame.collect()
+                for r in df.select("doc_id", packed.alias("r")).collect()
             }
             for cid, txt in cases:
                 want = _pyeval_violations(spec, txt)
@@ -709,7 +706,8 @@ class TestExplainLowering:
         """Round-4: acyclic $refs inline into the fast path (the
         reference's VM CALL frames have no columnar analogue, so
         inlining is the lowering). Verdicts AND violations match
-        pyeval; cyclic refs still fall back."""
+        pyeval; cyclic refs fall back, and so does a ref under an
+        array keyword."""
         specs = [
             {"$ref": "#/definitions/pos",
              "definitions": {"pos": {"type": "integer", "minimum": 1}}},
@@ -719,14 +717,16 @@ class TestExplainLowering:
             {"$ref": "#/definitions/a",
              "definitions": {"a": {"$ref": "#/definitions/b"},
                              "b": {"maximum": 5}}},
-            {"items": {"$ref": "#/definitions/e"},
-             "definitions": {"e": {"type": "integer"}}},
         ]
+        under_items = {"items": {"$ref": "#/definitions/e"},
+                       "definitions": {"e": {"type": "integer"}}}
         docs = ["1", "0", "-3", '"x"', "{}", '{"a": "xy"}', '{"a": "x"}',
                 "6", "5", "null", "[1, 2]", '[1, "x"]']
         for schema in specs:
-            assert try_lower_full(compile_schema(schema)) is not None, schema
+            assert _lowers(compile_schema(schema)), schema
             self._check(spark, schema, docs)
+        assert not _lowers(compile_schema(under_items))
+        self._check(spark, under_items, docs)
 
     def test_bracket_addressable_keys_lower_with_parity(self, spark):
         """Round-4: non-identifier prop names reach the fast path via
@@ -743,7 +743,7 @@ class TestExplainLowering:
             },
             "additionalProperties": False,
         }
-        assert try_lower_full(compile_schema(schema)) is not None
+        assert _lowers(compile_schema(schema))
         docs = ["{}", '{"a b": 1}', '{"a b": 1.5}',
                 '{"a b": 2, "c-d": -1}', '{"a b": 2, "c-d": 3}',
                 '{"a b": 2, "zz": 1}', '{"a  b": 2}',
@@ -792,7 +792,7 @@ class TestExplainLowering:
             '{"obj1": 5}', "[3]", "null", "5", "not json",
         ]
         for schema in specs:
-            assert try_lower_full(compile_schema(schema)) is not None
+            assert _lowers(compile_schema(schema))
             self._check(spark, schema, docs)
 
     def test_nested_dynamic_multi_violation_order_caveat(self, spark):
@@ -829,102 +829,30 @@ class TestExplainLowering:
             False, _pyeval_violations(spec, one)
         )
 
-    def test_cyclic_ref_bounded_unroll_parity_and_cut(self, spark):
-        """Round-5: a CYCLIC $ref spec opts into the variant fast path
-        via max_ref_depth (bounded unrolling, the §7.3 plan). Within
-        the bound, verdicts AND violation rows match pyeval's true
-        recursion exactly; a document whose structure re-enters the
-        cycle beyond the bound is rejected with
-        INVALID_UNEXPECTED_TOKEN at the cut path. Without
-        max_ref_depth the cyclic spec still falls back to pyeval."""
-        schema = {
-            "definitions": {
-                "node": {
-                    "anyOf": [
-                        {"type": "null"},
-                        {
-                            "type": "object",
-                            "required": ["v"],
-                            "properties": {
-                                "v": {"type": "integer", "minimum": 0},
-                                "next": {"$ref": "#/definitions/node"},
-                            },
-                            "additionalProperties": False,
-                        },
-                    ]
-                }
-            },
-            "$ref": "#/definitions/node",
+    def test_max_ref_depth_cut_on_every_view(self, spark):
+        """A cyclic $ref spec never lowers to variant Columns, so
+        apply_json(max_ref_depth=D) cuts it through the compiled
+        Python's per-path re-entry counter: the (D+1)-th re-entry reads
+        as Invalid, with INVALID_UNEXPECTED_TOKEN at the cut path. For
+        documents within, at and beyond the cut — including a cut under
+        `not` and under `oneOf`, where the cut turns a rejection into
+        an acceptance — verdicts(), frame and violations() all equal
+        compile_explain(..., D)."""
+        chain_node = {
+            "anyOf": [
+                {"type": "null"},
+                {
+                    "type": "object",
+                    "required": ["v"],
+                    "properties": {
+                        "v": {"type": "integer", "minimum": 0},
+                        "next": {"$ref": "#/definitions/node"},
+                    },
+                    "additionalProperties": False,
+                },
+            ]
         }
-        spec = compile_schema(schema)
-        assert try_lower_full(spec) is None  # cycles stay off by default
-        assert try_lower_full(spec, max_ref_depth=6) is not None
-
-        def chain(k, tail="null"):
-            return ('{"v": 1, "next": ' * k) + tail + "}" * k
-
-        # k-level chain + null terminator = k+1 ref expansions; with
-        # D=6 chains of up to 5 levels validate, 6+ hit the cut
-        within = (
-            [chain(k) for k in range(6)]
-            + ['{"v": 5}', '{"v": -2, "next": null}',
-               '{"v": 1, "zz": 2, "next": null}',
-               '{"next": null}', '{"v": "x"}', "[1]", "null", "not json"]
-        )
-        plan = ValidationPlan(spec)
-        df = spark.createDataFrame(
-            [(str(i), d) for i, d in enumerate(within)], ["doc_id", "body"]
-        )
-        res = plan.apply_json(df, "body", max_ref_depth=6)
-        got = {
-            int(r["doc_id"]): (
-                r["valid"],
-                [(v["code"], v["path"]) for v in r["_violations"]],
-            )
-            for r in res.frame.collect()
-        }
-        for i, d in enumerate(within):
-            want = _pyeval_violations(spec, d)
-            assert got[i] == (len(want) == 0, want), (d, got[i], want)
-
-        # no Python node anywhere in the unrolled plan
-        pl = res.frame._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in pl and "ArrowEvalPython" not in pl
-
-        # the cut: 6-level chain is valid under true recursion (pyeval)
-        # but rejected by the unrolled plan at the cut path
-        deep = spark.createDataFrame(
-            [("c6", chain(6)), ("c9", chain(9))], ["doc_id", "body"]
-        )
-        cut = {
-            r["doc_id"]: (
-                r["valid"],
-                [(v["code"], v["path"]) for v in r["_violations"]],
-            )
-            for r in plan.apply_json(
-                deep, "body", max_ref_depth=6
-            ).frame.collect()
-        }
-        cut_path = "$" + ".next" * 6
-        assert cut["c6"] == (
-            False, [(E.INVALID_UNEXPECTED_TOKEN, cut_path)]
-        )
-        assert cut["c9"] == (
-            False, [(E.INVALID_UNEXPECTED_TOKEN, cut_path)]
-        )
-        assert _pyeval_violations(spec, chain(6)) == []  # pyeval: valid
-
-    def test_cut_polarity_guard_and_pyeval_bounded_fallback(self, spark):
-        """Review finding: Invalid-at-cut is fail-closed only under
-        monotone combinators. A cyclic ref whose cut would land below
-        not/oneOf refuses to unroll (try_lower_full None) and the
-        pyeval fallback HONORS max_ref_depth with the same dynamic cut
-        semantics — never a silent switch to true recursion."""
-        import json as _json
-
-        from jvst_spark.compiler.pyeval import compile_python
-
-        node_def = {
+        loose_node = {
             "anyOf": [
                 {"type": "null"},
                 {"type": "object",
@@ -932,53 +860,96 @@ class TestExplainLowering:
             ]
         }
 
-        def chain(k):
-            return _json.loads(
-                ('{"next": ' * k) + "null" + "}" * k if k else "null"
-            )
+        def chain(k, tail="null"):
+            return ('{"v": 1, "next": ' * k) + tail + "}" * k
 
-        # monotone cycle: unrolls fine
+        def loose(k):
+            return ('{"next": ' * k) + "null" + "}" * k
+
         mono = compile_schema(
-            {"definitions": {"node": node_def},
+            {"definitions": {"node": chain_node},
              "$ref": "#/definitions/node"}
         )
-        assert try_lower_full(mono, max_ref_depth=4) is not None
-
-        # cut under `not`: refuses to unroll at ANY depth
         neg = compile_schema(
-            {"definitions": {"node": node_def},
+            {"definitions": {"node": loose_node},
              "not": {"$ref": "#/definitions/node"}}
         )
-        assert try_lower_full(neg, max_ref_depth=4) is None
+        one = compile_schema(
+            {"definitions": {"node": loose_node},
+             "oneOf": [{"$ref": "#/definitions/node"},
+                       {"required": ["w"]}]}
+        )
 
-        # pyeval honors the bound: the dynamic cut matches the unroll
-        # definition (the (D+1)-th re-entry evaluates as Invalid), so
-        # under `not` a beyond-depth doc becomes VALID — the defined
-        # composition, not true recursion (which would reject nothing
-        # here and accept everything)
+        # the pyeval halves: a k-level chain + null terminator is k+1
+        # ref expansions, so with D=6 chains of up to 5 levels validate
+        # as true recursion does, and the 6-level chain is cut at its
+        # seventh expansion
+        cut_path = "$" + ".next" * 6
+        assert _pyeval_violations(mono, chain(6)) == []
+        assert _pyeval_violations(mono, chain(6), 6) == [
+            (UNEXPECTED, cut_path)
+        ]
+        assert _pyeval_violations(mono, chain(9), 6) == [
+            (UNEXPECTED, cut_path)
+        ]
+        # under `not` the cut is the defined composition, not true
+        # recursion: the inner cut reads False, so `not` accepts
         bounded = compile_python(neg.root, neg.defs, max_ref_depth=4)
         unbounded = compile_python(neg.root, neg.defs)
-        deep = chain(10)
-        assert bounded(deep) is True  # inner cut False -> not -> True
-        assert unbounded(deep) is False  # true recursion: inner valid
-        assert bounded(chain(2)) is False  # within bound: same as true
+        assert bounded(json.loads(loose(10))) is True
+        assert unbounded(json.loads(loose(10))) is False
+        assert bounded(json.loads(loose(2))) is False  # within the bound
 
-        # monotone spec: pyeval-with-depth == the unrolled fast path,
-        # including beyond the cut
-        plan = ValidationPlan(mono)
-        docs = [_json.dumps(chain(k))[0:] for k in (0, 2, 3, 4, 7)]
-        df = spark.createDataFrame(
-            [(str(i), d) for i, d in enumerate(docs)], ["doc_id", "body"]
-        )
-        fast = {
-            r["doc_id"]: r["valid"]
-            for r in plan.apply_json(
-                df, "body", max_ref_depth=4
-            ).verdicts().collect()
-        }
-        bmono = compile_python(mono.root, mono.defs, max_ref_depth=4)
-        for i, d in enumerate(docs):
-            assert fast[str(i)] == bmono(_json.loads(d)), d
+        cases = [
+            (mono, 6,
+             [chain(k) for k in range(10)]
+             + [chain(7, '{"v": -1}'), chain(2, '{"v": -1}'),
+                '{"v": 5}', '{"v": -2, "next": null}',
+                '{"v": 1, "zz": 2, "next": null}', '{"next": null}',
+                '{"v": "x"}', "[1]", "null", "not json"]),
+            (neg, 4, [loose(k) for k in range(8)] + ["5", "[1]", "{"]),
+            (one, 4,
+             [loose(k) for k in range(8)]
+             + ['{"w": 1}', '{"w": 1, "next": null}',
+                '{"w": 1, "next": ' + loose(5) + "}", "5"]),
+        ]
+        for spec, depth, docs in cases:
+            assert not _lowers(spec)
+            df = spark.createDataFrame(
+                [(str(i), d) for i, d in enumerate(docs)],
+                ["doc_id", "body"],
+            )
+            res = ValidationPlan(spec).apply_json(
+                df, "body", max_ref_depth=depth
+            )
+            verdicts = {
+                r["doc_id"]: r["valid"] for r in res.verdicts().collect()
+            }
+            frame = {
+                r["doc_id"]: (
+                    r["valid"],
+                    [(v["code"], v["path"]) for v in r["_violations"]],
+                )
+                for r in res.frame.collect()
+            }
+            rows = {}
+            for r in res.violations().collect():
+                rows.setdefault(r["doc_id"], []).append(
+                    (r["code"], r["path"])
+                )
+            for i, d in enumerate(docs):
+                want = _pyeval_violations(spec, d, depth)
+                key = str(i)
+                assert verdicts[key] == (not want), (d, verdicts[key])
+                assert frame[key] == (not want, want), (d, frame[key])
+                assert sorted(rows.get(key, [])) == sorted(want), d
+            # the cut is exercised: some document beyond it changes
+            # verdict against true recursion
+            assert any(
+                (not _pyeval_violations(spec, d, depth))
+                != (not _pyeval_violations(spec, d))
+                for d in docs
+            )
 
     def test_fuzz_explain_matches_pyeval(self, spark):
         """Seeded fuzz for the VIOLATION lowering: random supported
@@ -1000,16 +971,8 @@ class TestExplainLowering:
                 {"type": "string", "pattern": rng.choice(["^a", "[0-9]$"])},
                 {"type": "boolean"},
                 {"enum": rng.sample([1, 2.5, "x", "y", True, None], 3)},
-                {"type": "array", "minItems": rng.randint(0, 2),
-                 "maxItems": rng.randint(2, 4),
-                 "items": rng.choice([
-                     {"type": "integer"},
-                     {"type": "string", "maxLength": 4},
-                 ]),
-                 "uniqueItems": rng.random() < 0.5},
-                {"contains": {"type": "integer", "minimum": 0}},
-                {"items": [{"type": "integer"}, {"type": "string"}],
-                 "additionalItems": rng.choice([True, False])},
+                # array keywords decline; a plain type check lowers
+                {"type": rng.choice(["array", ["array", "null"]])},
                 {"not": {"type": "integer"}},
                 {"anyOf": [{"type": "integer"}, {"minLength": 2}]},
             ])
@@ -1053,7 +1016,7 @@ class TestExplainLowering:
         for trial in range(15):
             schema = obj_spec(1)
             spec = compile_schema(schema)
-            if try_lower_full(spec) is None:
+            if not _lowers(spec):
                 continue
             n_checked += 1
             docs = [json.dumps(value(2)) for _ in range(25)]
@@ -1142,7 +1105,7 @@ class TestExplainLowering:
         for trial in range(12):
             schema = dyn_spec()
             spec = compile_schema(schema)
-            if try_lower_full(spec) is None:
+            if not _lowers(spec):
                 continue
             n_checked += 1
             docs = [json.dumps(value()) for _ in range(20)]
@@ -1198,7 +1161,7 @@ class TestExplainLowering:
                 '{"foo": 1, "bar": 2}', '{"x": 1}', '{"tmp_y": 1}',
                 '{"x": 1, "tmp_": 2}', '{"zz": 1}', "1", "[]", "null"]
         for schema in specs:
-            assert try_lower_full(compile_schema(schema)) is not None, schema
+            assert _lowers(compile_schema(schema)), schema
             self._check(spark, schema, docs)
 
     def test_adversarial_depth_and_size_never_crash(self, spark):
@@ -1269,8 +1232,8 @@ class TestExplainLowering:
                 )
 
     def test_unsupported_spec_still_uses_pyeval(self, spark):
-        """Specs outside the variant subset (a cyclic $ref without an
-        unroll depth, uniqueItems) keep the authoritative pandas-UDF
+        """Specs outside the variant subset (a cyclic $ref, array
+        keywords) keep the authoritative pandas-UDF
         path: violations from the explainer in one Arrow-batched node,
         verdicts from the validator."""
         schema = {

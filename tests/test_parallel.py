@@ -15,10 +15,6 @@ class TestEnsureMinParallelism:
         )
         assert out.count() == 100
 
-    def test_explicit_min_parts(self, spark):
-        df = spark.range(100).coalesce(1)
-        assert ensure_min_parallelism(df, 3).rdd.getNumPartitions() == 3
-
     def test_wide_input_is_untouched(self, spark):
         wide = spark.range(100).repartition(
             spark.sparkContext.defaultParallelism + 4

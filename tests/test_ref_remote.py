@@ -295,6 +295,8 @@ class TestRemoteRefFastPath:
         inliner), with verdict+violation parity against pyeval."""
         import json
 
+        from pyspark.sql import functions as F
+
         from jvst_spark.compiler.json_builtin import try_lower_full
         from jvst_spark.compiler.plan import ValidationPlan
 
@@ -308,7 +310,7 @@ class TestRemoteRefFastPath:
                 '{"n": 1}', '{"n": "x"}', "{}"]
         for schema in schemas:
             spec = compile_schema(schema, REGISTRY)
-            assert try_lower_full(spec) is not None, schema
+            assert try_lower_full(spec, F.col("body")) is not None, schema
             pyv = compile_python(spec.root, spec.defs)
             plan = ValidationPlan(spec)
             df = spark.createDataFrame(
@@ -322,7 +324,9 @@ class TestRemoteRefFastPath:
             for i, d in enumerate(docs):
                 assert got[i] == pyv(json.loads(d)), (schema, d)
 
-    def test_cyclic_cross_doc_refs_fall_back(self):
+    def test_cyclic_cross_doc_refs_fall_back(self, spark):
+        from pyspark.sql import functions as F
+
         from jvst_spark.compiler.json_builtin import try_lower_full
 
         # mutual recursion ACROSS documents: a -> b -> a
@@ -334,7 +338,7 @@ class TestRemoteRefFastPath:
             "http://x/b.json": {"$ref": "http://x/a.json"},
         }
         spec = compile_schema({"$ref": "http://x/a.json"}, registry)
-        assert try_lower_full(spec) is None
+        assert try_lower_full(spec, F.col("body")) is None
 
 
 class TestBaseUri:
