@@ -1,11 +1,13 @@
 """Lowering stages: ConstraintNode DAG -> executable form.
 
-Two backends:
+- arrow_backend: DAG x Spark DataType -> pyarrow kernels, for
+  statically-typed rows. apply_typed's one engine: verdicts and coded
+  violation rows from one mapInArrow stage.
+- typed: DAG x Spark DataType -> a validity Column, for a verdict
+  inside a Spark expression (valid_expr, val_spans_unique).
 - pyeval: DAG -> Python closures, for dynamic (schemaless) JSON
   documents. Runs inside Arrow-batched pandas UDFs; the per-document
   analogue of jvst's VM run (src/validate_vm.c:1136-1592).
-- typed: DAG x Spark DataType -> pyspark.sql.Column expressions, for
-  statically-typed columns. The scale path: pure JVM-side, Catalyst-
-  optimized, whole-stage-codegen'd; jvst's entire interpreter dissolves
-  into vectorized expressions.
+- json_builtin: DAG -> variant Columns, the dynamic-JSON violation
+  rows of the specs it lowers.
 """

@@ -1,17 +1,15 @@
 """Arrow-kernel execution backend: ConstraintNode DAG -> pyarrow
 compute over RecordBatches (df.mapInArrow).
 
-ValidationPlan.apply_typed's default route for typed rows. Why: higher-
-order array functions keep the Column path out of whole-stage codegen
-(interpreted eval ~300ns/predicate). Arrow kernels run the same
-predicates as C++ vector ops (RE2 regex, SIMD comparisons) over the
-columnar buffers Spark already ships to Python workers — list columns
-flatten ZERO-copy (values child + offsets), per-document reduction is
-one numpy cumsum pass.
+ValidationPlan.apply_typed's one engine for typed rows: verdicts and
+violation rows of every row come out of one mapInArrow stage. The
+kernels run the predicates as C++ vector ops (RE2 regex, SIMD
+comparisons) over the columnar buffers Spark already ships to Python
+workers — list columns flatten ZERO-copy (values child + offsets),
+per-document reduction is one numpy cumsum pass.
 
-Supported subset (supports() reports honestly; apply_typed falls
-back to the Column lowering otherwise): Switch/And/Or/Xor/Not over
-struct/map/array/string/number/boolean columns, NumRange/NumInteger/
+Coverage: Switch/And/Or/Xor/Not over struct/map/array/string/number
+(integral, float, decimal)/boolean columns, NumRange/NumInteger/
 NumMultipleOf/StrMatch/StrLength/ObjRequired/PropRange/ObjPropSet/
 ObjPropNames (struct AND map — map entries flatten like any list:
 keys child + values child + one cumsum reduction)/ArrItems(single AND
@@ -19,15 +17,16 @@ positional+additionalItems — per-index gather, tail via position
 mask)/ArrContains/ItemRange/EnumMatch(scalars, arrays, objects —
 composite values via kernel-space canonical serialization in the enum
 regime)/Ref (incl. cyclic — recursion bounded by the column's
-DataType exactly as the typed-Column path bounds it, same 64-hop
-budget; a cycle that never narrows the dtype raises Unsupported, as
-the Column path raises SchemaError)/ArrUnique(scalar elements — lexsort dup-scan in
-double bit-pattern space; composite elements — canonical strings +
+DataType, 64-hop budget)/ArrUnique(scalar elements — lexsort dup-scan
+in double bit-pattern space; composite elements — canonical strings +
 per-segment sorted adjacent-dup scan; UEM semantics). Non-string
-(integral/boolean) map keys validate as their string rendering via a
-map-to-map key cast (round 5 — parity with the Column path's
-transform_keys normalization; float keys stay excluded, their
-rendering differs across backends).
+(integral/boolean) map keys validate as their string rendering, cast
+where a node reads keys; float keys are declined wherever a key is
+read (Arrow renders 1.0 as "1", Spark as "1.0").
+
+What the kernels decline — a non-narrowing ref cycle, the ref budget,
+a float map key that is read, a column type outside the data model —
+raises Unsupported, a SchemaError, before any Spark job runs.
 
 Dialect note: pc.match_substring_regex is RE2 — no backreferences or
 lookaround (same family as the reference's libfsm DFAs, which also
@@ -49,6 +48,7 @@ from pyspark.sql.types import (
     BooleanType,
     ByteType,
     DataType,
+    DecimalType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -60,6 +60,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from jvst_spark import errors as E
 from jvst_spark._pyworker import install
 from jvst_spark.spec import redialect
 from jvst_spark.spec.nodes import (
@@ -87,8 +88,13 @@ from jvst_spark.spec.nodes import (
     Valid,
     Xor,
 )
+from jvst_spark.spec.translate import SchemaError
+from jvst_spark.compiler.typed import _arm_of
 
-_NUMERIC = (ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
+_NUMERIC = (
+    ByteType, ShortType, IntegerType, LongType,
+    FloatType, DoubleType, DecimalType,
+)
 # non-string map keys the backend validates as their string rendering
 _CASTABLE_KEYS = (ByteType, ShortType, IntegerType, LongType, BooleanType)
 
@@ -99,8 +105,8 @@ Ev = Callable[[pa.Array], np.ndarray]
 
 def _as_f64(arr: pa.Array) -> pa.Array:
     """Numeric array -> float64 in C-double space (precision-lossy by
-    design: 2^53+1 == 2^53, matching the Column path's cast("double")
-    and pyeval's float()). Arrow's default cast is CHECKED and raises
+    design: 2^53+1 == 2^53, matching typed.py's cast("double") and
+    pyeval's float()). Arrow's default cast is CHECKED and raises
     ArrowInvalid on int64 beyond 2^53 — safe=False restores the
     unchecked double-space semantics all backends share."""
     return pc.cast(arr, pa.float64(), safe=False)
@@ -139,13 +145,24 @@ def _offsets(arr: pa.ListArray) -> tuple[np.ndarray, pa.Array]:
 def _map_parts(arr) -> tuple[np.ndarray, pa.Array, pa.Array]:
     """(offsets, flat keys, flat values) of a MapArray — a map column
     is list<struct<key,value>>, so the entries flatten zero-copy like
-    any list and per-document reduction stays one cumsum pass."""
+    any list and per-document reduction stays one cumsum pass.
+    Non-string keys come back as their string rendering (int64 1 ->
+    "1", bool -> "true", as Spark's CAST renders them): a map models a
+    JSON object, whose keys are strings. Only key-reading nodes call
+    this, after _map_keys_ok."""
     off, entries = _offsets(arr)
-    return off, entries.field(0), entries.field(1)
+    keys = entries.field(0)
+    if not pa.types.is_string(keys.type):
+        keys = pc.cast(keys, pa.string())
+    return off, keys, entries.field(1)
 
 
-class Unsupported(Exception):
-    pass
+def _none(a) -> np.ndarray:
+    return np.zeros(len(a), dtype=bool)
+
+
+class Unsupported(SchemaError):
+    """A spec or column type the kernels cannot validate."""
 
 
 _NAN_BITS = 0x7FF8000000000000
@@ -193,68 +210,38 @@ def _canon_py(value, neg_zero_distinct: bool) -> str:
     raise Unsupported(f"enum literal {type(value).__name__}")
 
 
-def supports(node: Node, dtype: DataType, defs: Optional[dict] = None) -> bool:
-    try:
-        _Compiler(defs or {}).compile(node, dtype, probe=True)
-        return True
-    except Unsupported:
-        return False
-
-
 class _Compiler:
     def __init__(self, defs: Dict[str, Node]):
         self.defs = defs
         self._ref_depth = 0
         # (uri, id(dtype)) -> (dtype, Ev): evaluators take the array
-        # as an argument (unlike the Column path, whose expressions
-        # embed the column path), so one compile per (def, dtype) is
-        # reusable everywhere that pair recurs — without this, a def
-        # with TWO self-ref properties over a DAG-shared dtype walks
-        # 2^depth paths (review finding). The dtype is stored to pin
-        # the id() for the compiler's lifetime.
+        # as an argument, so one compile per (def, dtype) is reusable
+        # everywhere that pair recurs — without this, a def with TWO
+        # self-ref properties over a DAG-shared dtype walks 2^depth
+        # paths. The dtype is stored to pin the id() for the
+        # compiler's lifetime.
         self._ref_memo: dict = {}
         self._ref_stack: set = set()  # in-progress: hit = true cycle
 
     @staticmethod
     def _map_keys_ok(dtype) -> None:
-        if not isinstance(dtype.keyType, StringType):
-            raise Unsupported("map with non-string keys")
+        """Keys a node reads must render as Spark renders them: string,
+        integral and boolean keys do (typed._stringify_map_keys casts
+        the same set); float keys do not ("1.0" in Spark, "1" in
+        Arrow). Called by key-reading nodes only, so size-only and
+        constant nodes still compile over any key type."""
+        if not isinstance(dtype.keyType, (StringType, *_CASTABLE_KEYS)):
+            raise Unsupported(
+                f"map key type {dtype.keyType.simpleString()} is read"
+            )
 
-    def compile(self, node: Node, dtype: DataType, probe: bool = False) -> Ev:
-        """Build an evaluator; with probe=True only validates support."""
+    def compile(self, node: Node, dtype: DataType) -> Ev:
+        """Build an evaluator; raises Unsupported on what the kernels
+        decline."""
         if isinstance(node, Valid):
             return lambda a: np.ones(len(a), dtype=bool)
         if isinstance(node, Invalid):
-            return lambda a: np.zeros(len(a), dtype=bool)
-        # round-5: non-string map keys — a map models a JSON object, so
-        # keys validate as their string rendering (parity with the
-        # Column path's transform_keys cast in typed._stringify_map_keys;
-        # Arrow's map-to-map cast renders int64 1 -> "1", bool -> "true",
-        # same as Spark's CAST). Integral/boolean keys only: float keys
-        # print differently across backends ("1.0" vs "1") — and the
-        # exclusion applies only to nodes that actually read the map
-        # (Valid/Invalid returned above; review finding). Placed after
-        # the constant fast-outs, the per-batch cast also never runs
-        # for constant evaluators.
-        if isinstance(dtype, MapType) and not isinstance(
-            dtype.keyType, StringType
-        ):
-            if not isinstance(dtype.keyType, _CASTABLE_KEYS):
-                raise Unsupported(
-                    f"map key type {dtype.keyType.simpleString()}"
-                )
-            sdt = MapType(
-                StringType(), dtype.valueType, dtype.valueContainsNull
-            )
-            inner = self.compile(node, sdt, probe=probe)
-            if probe:
-                return inner
-
-            def cast_keys(a: pa.Array, inner=inner) -> np.ndarray:
-                target = pa.map_(pa.string(), a.type.item_type)
-                return inner(pc.cast(a, target))
-
-            return cast_keys
+            return _none
         if isinstance(node, Switch):
             return self._switch(node, dtype)
         if isinstance(node, And):
@@ -296,10 +283,9 @@ class _Compiler:
             # cyclic refs terminate because each hop through a
             # container narrows the DataType (finite); a re-entry at
             # the SAME (uri, dtype) while that pair is still compiling
-            # is a non-narrowing cycle (e.g. allOf self-ref) — exactly
-            # what the Column path rejects with SchemaError. The depth
-            # budget (same 64 as typed.py's _ref_budget, so no spec
-            # the Column path lowers falls back here) stays as the
+            # is a non-narrowing cycle (e.g. allOf self-ref), which
+            # cannot be validated over a finite type. The depth budget
+            # (the same 64 as typed.py's _ref_budget) stays as the
             # backstop for mutual-ref chains.
             key = (node.uri, id(dtype))
             hit = self._ref_memo.get(key)
@@ -322,7 +308,7 @@ class _Compiler:
 
         if isinstance(node, NumRange):
             if not isinstance(dtype, _NUMERIC):
-                return lambda a: np.zeros(len(a), dtype=bool)
+                return _none
 
             def num_range(a, n=node):
                 v = _as_f64(a)
@@ -338,8 +324,8 @@ class _Compiler:
             return num_range
         if isinstance(node, NumInteger):
             if not isinstance(dtype, _NUMERIC):
-                return lambda a: np.zeros(len(a), dtype=bool)
-            if not isinstance(dtype, (FloatType, DoubleType)):
+                return _none
+            if not isinstance(dtype, (FloatType, DoubleType, DecimalType)):
                 return lambda a: pc.is_valid(a).to_numpy(zero_copy_only=False)
 
             def is_int(a):
@@ -350,7 +336,7 @@ class _Compiler:
             return is_int
         if isinstance(node, NumMultipleOf):
             if not isinstance(dtype, _NUMERIC):
-                return lambda a: np.zeros(len(a), dtype=bool)
+                return _none
             d = node.divisor
 
             def mult(a, d=d):
@@ -362,7 +348,7 @@ class _Compiler:
             return mult
         if isinstance(node, StrMatch):
             if not isinstance(dtype, StringType):
-                return lambda a: np.zeros(len(a), dtype=bool)
+                return _none
             # ECMA pattern -> RE2 dialect (uniform across backends,
             # see spec/redialect.py); probe RE2 at compile time
             pat = redialect.translate(node.pattern, "re2")
@@ -372,7 +358,7 @@ class _Compiler:
             )
         if isinstance(node, StrLength):
             if not isinstance(dtype, StringType):
-                return lambda a: np.zeros(len(a), dtype=bool)
+                return _none
 
             def strlen(a, n=node):
                 ln = pc.utf8_length(a)
@@ -391,15 +377,15 @@ class _Compiler:
                     out = np.ones(len(a), dtype=bool)
                     for k in keys_req:
                         # key PRESENCE, even with a null value — map
-                        # semantics match typed's map_contains_key,
-                        # not the struct path's isNotNull
+                        # semantics (typed's map_contains_key), not
+                        # the struct path's isNotNull
                         hit = _np_bool(pc.equal(keys, k), len(keys))
                         out &= _seg_any(hit, off)
                     return out
 
                 return req_map
             if not isinstance(dtype, StructType):
-                raise Unsupported("required on non-struct")
+                return _none
             names = set(dtype.fieldNames())
 
             def req(a, keys=node.keys, names=names):
@@ -415,10 +401,10 @@ class _Compiler:
             return req
         if isinstance(node, PropRange):
             if isinstance(dtype, MapType):
-                self._map_keys_ok(dtype)
+                # counts entries only: any key type
 
                 def prange_map(a, n=node):
-                    off, _, _ = _map_parts(a)
+                    off, _ = _offsets(a)
                     ln = off[1:] - off[:-1]
                     ok = ln >= n.lo
                     if n.hi is not None:
@@ -427,7 +413,7 @@ class _Compiler:
 
                 return prange_map
             if not isinstance(dtype, StructType):
-                raise Unsupported("propRange on non-struct")
+                return _none
             fields = dtype.fieldNames()
 
             def prange(a, n=node, fields=fields):
@@ -491,7 +477,7 @@ class _Compiler:
 
                 return propset_map
             if not isinstance(dtype, StructType):
-                raise Unsupported("propset on non-struct")
+                return _none
             parts = []  # (field_name, field_dtype, sub evaluator)
             props = dict(node.props)
             for f in dtype.fields:
@@ -526,7 +512,7 @@ class _Compiler:
 
                 return propnames_map
             if not isinstance(dtype, StructType):
-                raise Unsupported("propNames on non-struct")
+                return _none
             from jvst_spark.compiler.pyeval import compile_python
 
             ok_name = compile_python(node.name_schema, self.defs)
@@ -543,7 +529,7 @@ class _Compiler:
             return propnames
         if isinstance(node, ArrItems):
             if not isinstance(dtype, ArrayType):
-                raise Unsupported("items on non-array")
+                return _none
             pos_evs = [
                 self.compile(p, dtype.elementType) for p in node.positional
             ]
@@ -596,7 +582,7 @@ class _Compiler:
             return items_pos
         if isinstance(node, ArrContains):
             if not isinstance(dtype, ArrayType):
-                raise Unsupported("contains on non-array")
+                return _none
             elem_ev = self.compile(node.schema, dtype.elementType)
 
             def contains(a, elem_ev=elem_ev):
@@ -608,7 +594,7 @@ class _Compiler:
             return contains
         if isinstance(node, ItemRange):
             if not isinstance(dtype, ArrayType):
-                raise Unsupported("itemRange on non-array")
+                return _none
 
             def irange(a, n=node):
                 off, _ = _offsets(a)
@@ -628,7 +614,7 @@ class _Compiler:
                     if isinstance(v, (int, float)) and not isinstance(v, bool)
                 ]
                 if not nums:
-                    return lambda a: np.zeros(len(a), dtype=bool)
+                    return _none
                 # +0.0 normalizes -0.0 on both sides (enum is the
                 # reference's NUM_RANGE double compare; Arrow is_in
                 # hashes, so don't rely on its zero semantics)
@@ -643,7 +629,7 @@ class _Compiler:
             if isinstance(dtype, StringType):
                 strs = [v for v in vals if isinstance(v, str)]
                 if not strs:
-                    return lambda a: np.zeros(len(a), dtype=bool)
+                    return _none
                 return lambda a, strs=strs: _np_bool(
                     pc.is_in(a, value_set=pa.array(strs, type=pa.string())),
                     len(a),
@@ -651,7 +637,7 @@ class _Compiler:
             if isinstance(dtype, BooleanType):
                 bools = [v for v in vals if isinstance(v, bool)]
                 if not bools:
-                    return lambda a: np.zeros(len(a), dtype=bool)
+                    return _none
                 return lambda a, bools=bools: _np_bool(
                     pc.is_in(a, value_set=pa.array(bools)), len(a)
                 )
@@ -680,7 +666,7 @@ class _Compiler:
                     dtype=object,
                 )
                 if lits.size == 0:
-                    return lambda a: np.zeros(len(a), dtype=bool)
+                    return _none
 
                 def enum_comp(a, canon=canon, lits=lits):
                     c = np.asarray(canon(a).to_pylist(), dtype=object)
@@ -690,9 +676,9 @@ class _Compiler:
                 return enum_comp
             raise Unsupported("composite enum in arrow backend")
         if isinstance(node, ArrUnique):
-            et = getattr(dtype, "elementType", None)
             if not isinstance(dtype, ArrayType):
-                raise Unsupported("uniqueItems on non-array")
+                return _none
+            et = dtype.elementType
             if not isinstance(et, (_NUMERIC, StringType, BooleanType)):
                 # composite elements (round-4): canonical strings in
                 # kernel space (UEM regime: raw double bit patterns,
@@ -958,7 +944,7 @@ class _Compiler:
             if isinstance(v, list) and all(arm_ok(x) for x in v)
         ]
         if not cands:
-            return lambda a: np.zeros(len(a), dtype=bool)
+            return _none
 
         def run(a, cands=cands, numeric=numeric, boolean=boolean):
             off, values = _offsets(a)
@@ -1020,8 +1006,6 @@ class _Compiler:
         if isinstance(dtype, NullType):
             ok = not isinstance(node.arm("null"), Invalid)
             return lambda a: np.full(len(a), ok, dtype=bool)
-        from jvst_spark.compiler.typed import _arm_of
-
         arm = _arm_of(dtype)
         body = self.compile(node.arm(arm), dtype)
         null_ok = not isinstance(node.arm("null"), Invalid)
@@ -1036,13 +1020,26 @@ class _Compiler:
         return switch
 
 
-# ---- violation rows (round-4) --------------------------------------
+# ---- violation rows -------------------------------------------------
 #
-# The Arrow backend's check decomposition mirrors typed._decompose
-# EXACTLY (same codes, same paths incl. "$[*]" array-leaf stars, same
-# null-guard semantics) so all three backends produce identical
-# violation rows for the same input — verified by running the same
-# DuckDB oracle (_VIOLATIONS_SQL) against both.
+# One coded check per leaf, in canonical DAG order: the same codes and
+# paths ("$[*]" marks an array-element leaf) the DuckDB oracle
+# (queries._VIOLATIONS_SQL) spells out for the flagship spec.
+
+# code vocabulary: src/validate_ir.h:134-163
+_LEAF_CODES = {
+    NumRange: E.INVALID_NUMBER,
+    NumInteger: E.INVALID_NOT_INTEGER,
+    NumMultipleOf: E.INVALID_NOT_MULTIPLE,
+    StrMatch: E.INVALID_MATCH_CASE,
+    EnumMatch: E.INVALID_MATCH_CASE,
+    ObjRequired: E.INVALID_MISSING_REQUIRED_PROPERTIES,
+    ObjPropNames: E.INVALID_BAD_PROPERTY_NAME,
+    ArrContains: E.INVALID_UNSATISFIED_CONTAINS,
+    ArrUnique: E.INVALID_NOT_UNIQUE,
+    ObjPropSet: E.INVALID_MATCH_CASE,
+    ArrItems: E.INVALID_MATCH_CASE,
+}
 
 
 def _np_valid(a) -> np.ndarray:
@@ -1051,18 +1048,15 @@ def _np_valid(a) -> np.ndarray:
 
 def _adecompose(comp: "_Compiler", node: Node, dtype: DataType, path: str):
     """Flatten into [(code, path, ev)] where ev: LOCAL arrow array ->
-    np bool pass-mask. Null guards compose by wrapping at each level
-    (struct-field null / switch-value null => forced pass, exactly
-    typed's `_guard(null_guard | col.isNull(), ...)`)."""
-    from jvst_spark import errors as E
-    from jvst_spark.compiler.typed import _LEAF_CODES, _arm_of
-
+    np bool pass-mask. Null guards compose by wrapping at each level:
+    a null struct field (an absent key) or a null value under a Switch
+    (its null arm decides) forces a pass."""
     out: list = []
     if isinstance(node, Valid):
         return out
     if isinstance(node, Invalid):
         code = node.code or E.INVALID_UNEXPECTED_TOKEN
-        out.append((code, path, lambda a: np.zeros(len(a), dtype=bool)))
+        out.append((code, path, _none))
         return out
     if isinstance(node, And):
         for t in node.terms:
@@ -1125,16 +1119,10 @@ def _adecompose(comp: "_Compiler", node: Node, dtype: DataType, path: str):
                 return cnt
 
         else:
-            # counts entries only: castable keys need no cast here,
-            # but the rule must match compile()'s so supports() holds
-            # exactly when this decomposition does
-            if not isinstance(dtype.keyType, (StringType, *_CASTABLE_KEYS)):
-                raise Unsupported(
-                    f"map key type {dtype.keyType.simpleString()}"
-                )
+            # counts entries only: any key type
 
             def nprops(a):
-                off, _, _ = _map_parts(a)
+                off, _ = _offsets(a)
                 return off[1:] - off[:-1]
 
         if node.lo > 0:
@@ -1188,21 +1176,15 @@ def _adecompose(comp: "_Compiler", node: Node, dtype: DataType, path: str):
                     else np.ones(0, dtype=bool)
                 )
                 # null array -> check fails here; the enclosing
-                # switch's null wrap rescues it (typed: forall(null)
-                # -> null -> fires unless guarded)
+                # switch's null wrap rescues it
                 return _seg_all(~inner, off) & _np_valid(a)
 
             out.append((code, f"{path}[*]" + p[1:], forall_wrap))
         return out
     if isinstance(node, (Or, Xor, Not)):
-        from jvst_spark import errors as E2
-
-        ev = comp.compile(node, dtype)
-        out.append((E2.INVALID_SPLIT_CONDITION, path, ev))
+        out.append((E.INVALID_SPLIT_CONDITION, path, comp.compile(node, dtype)))
         return out
     code = _LEAF_CODES.get(type(node), E.INVALID_UNEXPECTED_TOKEN)
-    if isinstance(node, ArrItems):
-        code = E.INVALID_MATCH_CASE
     out.append((code, path, comp.compile(node, dtype)))
     return out
 
@@ -1216,14 +1198,12 @@ def compile_arrow_validate(
     """Batch fn for df.mapInArrow: RecordBatch -> (doc_id, valid,
     _violations list<struct<code,path,message>>) — the full validation
     output (not just verdicts) from Arrow kernels."""
-    from jvst_spark.errors import invalid_msg
-
     comp = _Compiler(defs or {})
     checks = _adecompose(comp, root, row_type, "$")
     codes = np.array([c for c, _, _ in checks], dtype=np.int32)
     paths = np.array([p for _, p, _ in checks], dtype=object)
     msgs = np.array(
-        [invalid_msg(int(c)) for c in codes], dtype=object
+        [E.invalid_msg(int(c)) for c in codes], dtype=object
     )
     vio_t = pa.list_(
         pa.struct(
@@ -1274,10 +1254,10 @@ def compile_arrow_validate(
 
 
 def arrow_validate(plan, df, id_col: str = "doc_id"):
-    """Full validation frame (doc_id, valid, _violations) via the Arrow
-    backend — row-identical to the Column lowering's output columns.
-    Raises Unsupported, before touching Spark, when the spec needs the
-    Column path (apply_typed's route test)."""
+    """Full validation frame (doc_id, valid, _violations) of every row
+    of df, from one mapInArrow stage. The program compiles on the
+    driver first, so a spec or column type the kernels decline raises
+    Unsupported (a SchemaError) before any Spark job runs."""
     row_type = StructType([df.schema[c] for c in df.columns])
     run = compile_arrow_validate(
         plan.spec.root, row_type, id_col, plan.spec.defs

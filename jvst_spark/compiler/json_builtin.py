@@ -137,13 +137,18 @@ class _Unsupported(Exception):
 _INLINE_BUDGET = 10_000
 
 
-def _inline_refs(node: Node, defs: dict) -> Node:
+def _inline_refs(
+    node: Node, defs: dict, max_ref_depth: Optional[int] = None
+) -> Node:
     """Expand acyclic $refs into the tree so ref'd specs reach the JVM
     fast path (the reference compiles refs to VM CALL frames,
     src/validate_vm.c:1449-1468 — a columnar plan has no call stack,
     so inlining is the equivalent). A cycle raises _Unsupported: the
     explainer UDF's memoized closures run it, and apply_json's
-    max_ref_depth cut with them.
+    max_ref_depth cut with them. So does any ref that cut would reach:
+    pyeval cuts the (D+1)-th nested entry of a ref, which for an
+    acyclic ref (entered at most once per path) means every ref when
+    D = 0 — inlining it would validate past the cut the verdicts apply.
 
     Bounded: a diamond-shaped ref DAG (each def referencing the
     previous twice) doubles per level, and downstream lowering walks
@@ -167,6 +172,8 @@ def _inline_refs(node: Node, defs: dict) -> Node:
         if isinstance(node, Ref):
             if node.uri in stack:
                 raise _Unsupported("cyclic ref")
+            if max_ref_depth == 0:
+                raise _Unsupported("ref cut at max_ref_depth=0")
             if node.uri not in defs:
                 raise _Unsupported("unresolved ref")
             return walk(defs[node.uri], stack + (node.uri,))
@@ -1125,10 +1132,13 @@ def _explain_value(node: Node, val: _Value, path: Column) -> Column:
     )
 
 
-def try_lower_full(spec, doc: Column) -> Optional[Column]:
+def try_lower_full(
+    spec, doc: Column, max_ref_depth: Optional[int] = None
+) -> Optional[Column]:
     """CompiledSpec + JSON text Column -> exploded
     struct<valid:boolean, vios:array<struct<code,path,message>>>, or
-    None when the spec falls outside the subset (module docstring).
+    None when the spec falls outside the subset (module docstring) or
+    holds a ref that apply_json's `max_ref_depth` would cut.
     Building the Column is the support check: every lowering function
     raises _Unsupported at a leaf it cannot lower, so this needs an
     active SparkSession and is called once per compiled route.
@@ -1170,7 +1180,11 @@ def try_lower_full(spec, doc: Column) -> Optional[Column]:
         return F.element_at(F.transform(F.array(valid_e), inner), 1)
 
     try:
-        root = _inline_refs(spec.root, spec.defs) if spec.defs else spec.root
+        root = (
+            _inline_refs(spec.root, spec.defs, max_ref_depth)
+            if spec.defs
+            else spec.root
+        )
         return F.explode(F.transform(F.array(F.try_parse_json(doc)), outer))
     except _Unsupported:
         return None

@@ -1,10 +1,11 @@
 """ValidationPlan: compiled schema -> executable Spark validation job.
 
 The analogue of jvst's jvst_vm_program (src/validate_vm.h:334-348) — but
-instead of packed uint32 opcodes, the "program" is a set of named,
-coded, vectorized Column predicates plus (for dynamic JSON) a compiled
-Python closure shipped inside an Arrow-batched pandas UDF. Catalyst +
-Tungsten replace the opcode dispatch loop (src/validate_vm.c:1136-1592).
+instead of packed uint32 opcodes, the "program" is a list of coded
+Arrow-kernel checks run in one mapInArrow stage (typed rows) or a
+compiled Python closure shipped inside an Arrow-batched pandas UDF plus
+vectorized variant Columns (dynamic JSON). Vectorized kernels replace
+the opcode dispatch loop (src/validate_vm.c:1136-1592).
 
 Outputs (FIXTURES.md §6 shapes):
     verdicts   (doc_id, partition_id int, valid boolean)
@@ -33,8 +34,9 @@ from pyspark.sql.types import (
 
 from jvst_spark import errors as E
 from jvst_spark._pyworker import install
+from jvst_spark.compiler.arrow_backend import arrow_validate
 from jvst_spark.compiler.pyeval import compile_explain, compile_python
-from jvst_spark.compiler.typed import build_violation_program, lower_typed
+from jvst_spark.compiler.typed import lower_typed
 from jvst_spark.spec.canonify import canonify
 from jvst_spark.spec.nodes import Node
 from jvst_spark.spec.translate import translate_with_defs
@@ -124,9 +126,9 @@ class ValidationPlan:
     """A compiled schema bound to a row shape, ready to run.
 
     Typed mode (`apply_typed`): the whole row is validated as a JSON
-    object whose keys are its columns — Arrow kernels in one
-    mapInArrow stage where they cover the spec, pure Column
-    expressions otherwise (the 100 TB path).
+    object whose keys are its columns, by the Arrow kernels in one
+    mapInArrow stage (the 100 TB path). `valid_expr` is the verdict
+    alone as a Column expression, for use inside other expressions.
 
     Dynamic mode (`apply_json`): a string column holding arbitrary
     JSON — verdicts from the compiled Python closure in an
@@ -154,29 +156,19 @@ class ValidationPlan:
     ) -> "ValidationResult":
         """Validate each row (as an object of its columns) -> results.
 
-        One route per input, chosen from the spec and df's schema
-        alone: when the Arrow kernels cover the spec over this row type
-        (the program compiles, see `arrow_backend.supports`), rows run
-        through them in one mapInArrow stage; otherwise — a spec or a
-        column type the kernels decline, e.g. float map keys — the
-        all-JVM Column lowering runs (`_apply_column`). Both emit the
-        same rows, verdicts and violations alike (parity pinned in
-        test_arrow_backend). Flagship spans, 4 cores: Arrow 1.68x
-        faster at 960k docs, 1.40x at 240k, a tie at 60k.
+        One engine: the Arrow kernels compute verdicts and violation
+        rows together in one mapInArrow stage (arrow_backend). The
+        program compiles on the driver, so a spec or column type the
+        kernels decline — a non-narrowing $ref cycle, more than 64
+        nested refs, a float map key that a keyword reads, a column
+        type outside the data model — raises SchemaError here, before
+        any job runs.
 
         partition_id is the partition of the validation stage; use
         metrics_by with a content-derived key for reproducible
         rollups.
         """
-        from jvst_spark.compiler.arrow_backend import (
-            Unsupported,
-            arrow_validate,
-        )
-
-        try:
-            frame = arrow_validate(self, df, id_col=id_col)
-        except Unsupported:
-            return self._apply_column(df, id_col)
+        frame = arrow_validate(self, df, id_col=id_col)
         return ValidationResult(
             frame.select(
                 "doc_id",
@@ -186,119 +178,12 @@ class ValidationPlan:
             )
         )
 
-    def _apply_column(self, df: DataFrame, id_col: str) -> "ValidationResult":
-        """The Column lowering of apply_typed: one pass over the data,
-        verdicts and the violations array computed in the same
-        projection; violations explode lazily only if the caller reads
-        them."""
-        from jvst_spark.ops._parallel import ensure_min_parallelism
-
-        # the validation projection is CPU-bound, not IO-bound: a
-        # small single-file input (1-2 size-based splits) would pin
-        # the whole job on 1-2 cores; no-op on wide inputs
-        df = ensure_min_parallelism(df)
-        cols = df.columns
-        row_type = StructType([df.schema[c] for c in cols])
-
-        # Compile-once cache: lowering the flagship program costs
-        # ~5,200 py4j round trips (~1.1s of driver time per build,
-        # profiled) yet depends only on (spec, column list, row type).
-        # Columns are immutable unresolved expression trees, reusable
-        # across DataFrames — but they hold py4j refs into one JVM, so
-        # the cache lives ON the SparkSession (dies with it; a new
-        # session rebuilds). This is the reference's compile-once /
-        # run-per-document split (src/main.c:372-417) applied to the
-        # driver.
-        spark = df.sparkSession
-        cache = getattr(spark, "_jvst_typed_expr_cache", None)
-        if cache is None:
-            cache = {}
-            spark._jvst_typed_expr_cache = cache
-        key = (
-            repr(self.spec.root),
-            repr(sorted(self.spec.defs.items())),
-            tuple(cols),
-            row_type.json(),
-        )
-        packed = cache.get(key)
-        if packed is not None:
-            return ValidationResult(self._project(df, id_col, packed))
-
-        row_col = F.struct(*[F.col(c).alias(c) for c in cols])
-        simples, groups = build_violation_program(
-            self.spec.root, row_type, row_col, "$", self.spec.defs
-        )
-
-        parts = []
-        if simples:
-            parts.append(
-                F.filter(
-                    F.array(
-                        *[
-                            F.when(
-                                ~F.coalesce(c.expr, F.lit(False)),
-                                F.struct(
-                                    F.lit(c.code).cast("int").alias("code"),
-                                    F.lit(c.path).alias("path"),
-                                    F.lit(c.message()).alias("message"),
-                                ),
-                            )
-                            for c in simples
-                        ]
-                    ),
-                    lambda x: x.isNotNull(),
-                )
-            )
-        parts.extend(groups)
-        if not parts:
-            base = df.select(
-                F.col(id_col).alias("doc_id"),
-                F.spark_partition_id().alias("partition_id"),
-                F.lit(True).alias("valid"),
-                F.array()
-                .cast("array<struct<code:int,path:string,message:string>>")
-                .alias("_violations"),
-            )
-            return ValidationResult(base)
-
-        vio_arr = parts[0] if len(parts) == 1 else F.concat(*parts)
-        # Two-tier evaluation (the perf-critical layout, measured at
-        # 500k docs x ~50 spans): `valid` is ONE fused boolean pass
-        # over the row (~2.7s/500k docs); the violation-row program —
-        # inherently heavier (struct/array construction) — sits in the
-        # lazy ELSE branch of a CASE WHEN, so only INVALID rows pay for
-        # it. Valid-dominated corpora (the 100 TB case) run at the
-        # boolean pass's speed. Naive per-check layout: 165s; fused
-        # always-on: 26s; this gate: ~seconds.
-        fast_valid = lower_typed(
-            self.spec.root, row_type, row_col, self.spec.defs
-        )
-        empty = F.array().cast(
-            "array<struct<code:int,path:string,message:string>>"
-        )
-        # transform(single-element array) is a let-binding (fast_valid
-        # evaluated once); explode is a Generate boundary (the struct is
-        # materialized once, downstream field reads are attribute refs)
-        packed = F.explode(
-            F.transform(
-                F.array(F.coalesce(fast_valid, F.lit(False))),
-                lambda v: F.struct(
-                    v.alias("valid"),
-                    F.when(v, empty).otherwise(vio_arr).alias("vios"),
-                ),
-            )
-        )
-        # stage the projection: the packed expression references source
-        # columns, so aliasing id_col in the same select would shadow
-        # them (lateral column alias resolution)
-        cache[key] = packed
-        return ValidationResult(self._project(df, id_col, packed))
-
     @staticmethod
     def _project(df: DataFrame, id_col: str, packed) -> DataFrame:
-        """Two-stage projection around the cached `packed` expression
-        (staged so aliasing id_col cannot shadow the source columns
-        packed references — lateral column alias resolution)."""
+        """Two-stage projection around apply_json's cached `packed`
+        expression (staged so aliasing id_col cannot shadow the source
+        columns packed references — lateral column alias
+        resolution)."""
         return df.select(
             F.col(id_col).alias("__jvst_id"),
             F.spark_partition_id().alias("__jvst_pid"),
@@ -346,7 +231,9 @@ class ValidationPlan:
         null terminator exercises its ref k+1 times — so choose D
         above the data's max expansion count; documents within the
         bound validate exactly as true recursion would. Cyclic specs
-        never lower to variant Columns, so every view applies the cut
+        never lower to variant Columns, nor, at D = 0, does a spec with
+        any $ref left (D = 0 cuts even an acyclic ref's first entry),
+        so every view applies the cut
         through the compiled Python's per-path re-entry counter (under
         not/oneOf too, where a cut subtree reads as Invalid before the
         negation). Default None = unbounded recursion.
@@ -362,10 +249,11 @@ class ValidationPlan:
         # splits runs 2 of N cores; no-op on wide inputs
         df = ensure_min_parallelism(df)
 
-        # compile-once cache (same scheme as apply_typed: ~1.1s of
-        # py4j chatter per build, expressions depend only on
-        # (spec, json_col, max_ref_depth), session-scoped so JVM refs
-        # never go stale)
+        # compile-once cache: ~1.1s of py4j chatter per build, yet the
+        # expressions depend only on (spec, json_col, max_ref_depth);
+        # Columns hold py4j refs into one JVM, so the cache lives on
+        # the session and dies with it (the reference's compile-once /
+        # run-per-document split, src/main.c:372-417)
         spark = df.sparkSession
         cache = getattr(spark, "_jvst_json_expr_cache", None)
         if cache is None:
@@ -408,11 +296,11 @@ class ValidationPlan:
         valid = valid_udf(doc).alias("valid")
 
         # violation rows: the variant Columns when the spec lowers —
-        # two-tier packing as in apply_typed, violations evaluate only
-        # in the lazy ELSE for invalid rows (the reference's output IS
+        # two-tier packing, violations evaluate only in the lazy ELSE
+        # for invalid rows (the reference's output IS
         # coded violations, src/validate_ir.h:134-163, so the 100 TB
         # violations path stays vectorized)
-        packed = try_lower_full(self.spec, doc)
+        packed = try_lower_full(self.spec, doc, max_ref_depth)
         if packed is not None:
             return packed, valid
 

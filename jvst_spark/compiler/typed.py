@@ -1,6 +1,6 @@
-"""typed: ConstraintNode DAG x Spark DataType -> pyspark Column exprs.
+"""typed: ConstraintNode DAG x Spark DataType -> a validity Column.
 
-The scale path. For statically-typed columns the reference's entire
+For statically-typed columns the reference's entire
 execution engine dissolves: the 10-way token-type SWITCH
 (src/validate_ir.c:4231-4259) constant-folds to the column's static
 type, counters (src/validate_vm.c:1409-1424) become F.size(), the
@@ -16,20 +16,19 @@ NULL struct *field* inside an object is an ABSENT key (see
 SURVEY.md §1.2). MapType columns model open objects; StructType columns
 model closed ones.
 
-Two products:
-- lower_typed(node, dtype, col)    -> Column (validity boolean)
-- build_violation_program(node, dtype, col) -> coded checks (granular
-  violations, deterministic canonical order — the violation-row
-  constructor)
+One product, lower_typed(node, dtype, col) -> Column (validity
+boolean), for callers that need a verdict INSIDE a Spark expression:
+ValidationPlan.valid_expr (streaming violation-rate windows) and the
+val_spans_unique query. Validating whole rows — verdicts and violation
+rows — is apply_typed's, on the Arrow kernels (arrow_backend.py).
 """
 
 from __future__ import annotations
 
 import json
 import math
-from dataclasses import dataclass
 from functools import reduce
-from typing import List, Optional
+from typing import Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -50,7 +49,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from jvst_spark import errors as E
 from jvst_spark.spec import redialect
 from jvst_spark.compiler.pyeval import compile_python
 from jvst_spark.spec.nodes import (
@@ -334,7 +332,7 @@ class _Lowerer:
                 )
             return reduce(lambda a, b: a & b, conds) if conds else _T()
         if isinstance(node, NumInteger):
-            if isinstance(dtype, (FloatType, DoubleType)):
+            if isinstance(dtype, (FloatType, DoubleType, DecimalType)):
                 return _is_integer_dbl(col.cast("double"))
             return _T() if isinstance(dtype, _NUMERIC) else _F()
         if isinstance(node, NumMultipleOf):
@@ -665,346 +663,3 @@ def lower_typed(
 ) -> Column:
     """Public entry: validity Column for a typed column."""
     return _Lowerer(defs).lower(node, dtype, col)
-
-
-# ---------------------------------------------------------------------
-# violation-check decomposition
-# ---------------------------------------------------------------------
-
-
-@dataclass
-class Check:
-    """One named, coded validity predicate (True == pass). The unit of
-    violation-row construction; code vocabulary mirrors
-    src/validate_ir.h:134-163."""
-
-    code: int
-    path: str
-    expr: Column
-
-    def message(self) -> str:
-        return E.invalid_msg(self.code)
-
-
-def build_violation_program(
-    node: Node,
-    dtype: DataType,
-    col: Column,
-    path: str = "$",
-    defs: Optional[dict] = None,
-):
-    """Fused violation-row program: every leaf predicate evaluated
-    EXACTLY once (the perf-critical property — the naive per-check
-    layout re-traverses each array once per check and once more for
-    `valid`, a ~60x slowdown measured at 500k docs).
-
-    Returns (simples, groups):
-    - simples: List[Check] — scalar checks, one expression each
-    - groups:  List[Column] — per-array fused expressions, each an
-      array<struct<code,path,message>> produced by ONE transform pass
-      computing per-element failure-index sets.
-    """
-    lw = _Lowerer(defs)
-    simples: List[Check] = []
-    groups: List[Column] = []
-    _emit(lw, node, dtype, col, path, simples, groups, None)
-    return simples, groups
-
-
-_GROUP_ELEM_T = "array<struct<code:int,path:string,message:string>>"
-
-
-def _emit(
-    lw: _Lowerer,
-    node: Node,
-    dtype: DataType,
-    col: Column,
-    path: str,
-    simples: List[Check],
-    groups: List[Column],
-    null_guard: Optional[Column],
-) -> None:
-    if isinstance(node, Valid):
-        return
-    if isinstance(node, And):
-        for t in node.terms:
-            _emit(lw, t, dtype, col, path, simples, groups, null_guard)
-        return
-    if isinstance(node, Switch) and not isinstance(dtype, NullType):
-        arm_node = node.arm(_arm_of(dtype))
-        if isinstance(node.arm("null"), Invalid):
-            simples.append(
-                Check(
-                    E.INVALID_UNEXPECTED_TOKEN,
-                    path,
-                    _guard(null_guard, col.isNotNull()),
-                )
-            )
-        ng = col.isNull() if null_guard is None else (null_guard | col.isNull())
-        _emit(lw, arm_node, dtype, col, path, simples, groups, ng)
-        return
-    if isinstance(node, ObjPropSet) and isinstance(dtype, StructType):
-
-        props = dict(node.props)
-        for f in dtype.fields:
-            applying = []
-            if f.name in props:
-                applying.append(props[f.name])
-            for pat, pn in node.patterns:
-                if redialect.search(pat, f.name):
-                    applying.append(pn)
-            if not applying and not isinstance(node.additional, Valid):
-                applying.append(node.additional)
-            fcol = col[f.name]
-            ng = (
-                fcol.isNull()
-                if null_guard is None
-                else (null_guard | fcol.isNull())
-            )
-            for sub in applying:
-                _emit(
-                    lw, sub, f.dataType, fcol, f"{path}.{f.name}",
-                    simples, groups, ng,
-                )
-        return
-    if (
-        isinstance(node, ArrItems)
-        and isinstance(dtype, ArrayType)
-        and not node.positional
-    ):
-        et = dtype.elementType
-        probe: List[Check] = []
-        _decompose(
-            lw, node.additional, et, F.lit(None).cast(et), "$", probe, None
-        )
-        if not probe:
-            return
-        if len(probe) > 62:  # bitmask capacity; fall back to plain checks
-            _decompose(lw, node, dtype, col, path, simples, null_guard)
-            return
-
-        def elem_mask(x: Column) -> Column:
-            # per-element failure bitmask: pure integer ops, zero
-            # allocation — bit k set iff element fails check k
-            sub: List[Check] = []
-            _decompose(lw, node.additional, et, x, "$", sub, None)
-            m = F.lit(0).cast("long")
-            for i, c in enumerate(sub):
-                m = m + F.when(~_nz(c.expr), F.lit(1 << i)).otherwise(
-                    F.lit(0)
-                ).cast("long")
-            return m
-
-        doc_mask = F.aggregate(
-            F.transform(col, elem_mask),
-            F.lit(0).cast("long"),
-            lambda acc, m: acc.bitwiseOR(m),
-        )
-
-        def entries_from(m: Column) -> Column:
-            return F.filter(
-                F.array(
-                    *[
-                        F.when(
-                            m.bitwiseAND(F.lit(1 << k)) != 0,
-                            F.struct(
-                                F.lit(pc.code).cast("int").alias("code"),
-                                F.lit(f"{path}[*]" + pc.path[1:]).alias(
-                                    "path"
-                                ),
-                                F.lit(pc.message()).alias("message"),
-                            ),
-                        )
-                        for k, pc in enumerate(probe)
-                    ]
-                ),
-                lambda x: x.isNotNull(),
-            )
-
-        # single-element-array transform = let-binding: the expensive
-        # doc_mask aggregate is evaluated exactly once
-        group = F.element_at(F.transform(F.array(doc_mask), entries_from), 1)
-        skip = col.isNull() if null_guard is None else (null_guard | col.isNull())
-        groups.append(
-            F.when(skip, F.array().cast(_GROUP_ELEM_T)).otherwise(group)
-        )
-        return
-    # everything else: delegate to the per-check decomposition (scalar
-    # leaves, composite combinators, map-typed propsets, positional
-    # items) — each produces simple one-expression checks
-    _decompose(lw, node, dtype, col, path, simples, null_guard)
-
-
-_LEAF_CODES = {
-    NumRange: E.INVALID_NUMBER,
-    NumInteger: E.INVALID_NOT_INTEGER,
-    NumMultipleOf: E.INVALID_NOT_MULTIPLE,
-    StrMatch: E.INVALID_MATCH_CASE,
-    EnumMatch: E.INVALID_MATCH_CASE,
-    ObjRequired: E.INVALID_MISSING_REQUIRED_PROPERTIES,
-    ObjPropNames: E.INVALID_BAD_PROPERTY_NAME,
-    ArrContains: E.INVALID_UNSATISFIED_CONTAINS,
-    ArrUnique: E.INVALID_NOT_UNIQUE,
-    ObjPropSet: E.INVALID_MATCH_CASE,
-    ArrItems: E.INVALID_MATCH_CASE,
-}
-
-
-def _guard(null_guard: Optional[Column], expr: Column) -> Column:
-    if null_guard is None:
-        return expr
-    return F.when(null_guard, _T()).otherwise(expr)
-
-
-def _decompose(
-    lw: _Lowerer,
-    node: Node,
-    dtype: DataType,
-    col: Column,
-    path: str,
-    out: List[Check],
-    null_guard: Optional[Column],
-) -> None:
-    if isinstance(node, Valid):
-        return
-    if isinstance(node, Invalid):
-        out.append(
-            Check(node.code or E.INVALID_UNEXPECTED_TOKEN, path,
-                  _guard(null_guard, _F()))
-        )
-        return
-    if isinstance(node, And):
-        for t in node.terms:
-            _decompose(lw, t, dtype, col, path, out, null_guard)
-        return
-    if isinstance(node, Switch):
-        if isinstance(dtype, NullType):
-            _decompose(lw, node.arm("null"), dtype, col, path, out, null_guard)
-            return
-        arm_node = node.arm(_arm_of(dtype))
-        null_node = node.arm("null")
-        # value NULL at runtime: the null arm decides
-        if isinstance(null_node, Invalid):
-            out.append(
-                Check(
-                    E.INVALID_UNEXPECTED_TOKEN,
-                    path,
-                    _guard(null_guard, col.isNotNull()),
-                )
-            )
-        ng = col.isNull() if null_guard is None else (null_guard | col.isNull())
-        _decompose(lw, arm_node, dtype, col, path, out, ng)
-        return
-    if isinstance(node, StrLength) and isinstance(dtype, StringType):
-        n = F.length(col)
-        if node.lo > 0:
-            out.append(
-                Check(E.INVALID_LENGTH_TOO_SHORT, path,
-                      _guard(null_guard, n >= F.lit(node.lo)))
-            )
-        if node.hi is not None:
-            out.append(
-                Check(E.INVALID_LENGTH_TOO_LONG, path,
-                      _guard(null_guard, n <= F.lit(node.hi)))
-            )
-        return
-    if isinstance(node, ItemRange) and isinstance(dtype, ArrayType):
-        n = F.size(col)
-        if node.lo > 0:
-            out.append(
-                Check(E.INVALID_TOO_FEW_ITEMS, path,
-                      _guard(null_guard, n >= F.lit(node.lo)))
-            )
-        if node.hi is not None:
-            out.append(
-                Check(E.INVALID_TOO_MANY_ITEMS, path,
-                      _guard(null_guard, n <= F.lit(node.hi)))
-            )
-        return
-    if isinstance(node, PropRange) and isinstance(dtype, (StructType, MapType)):
-        n = (
-            lw._struct_nprops(col, dtype)
-            if isinstance(dtype, StructType)
-            else F.size(col)
-        )
-        if node.lo > 0:
-            out.append(
-                Check(E.INVALID_TOO_FEW_PROPS, path,
-                      _guard(null_guard, n >= F.lit(node.lo)))
-            )
-        if node.hi is not None:
-            out.append(
-                Check(E.INVALID_TOO_MANY_PROPS, path,
-                      _guard(null_guard, n <= F.lit(node.hi)))
-            )
-        return
-    if isinstance(node, ObjPropSet) and isinstance(dtype, StructType):
-        # closed object: recurse per field for granular paths
-
-        props = dict(node.props)
-        for f in dtype.fields:
-            applying = []
-            if f.name in props:
-                applying.append(props[f.name])
-            for pat, pn in node.patterns:
-                if redialect.search(pat, f.name):
-                    applying.append(pn)
-            if not applying and not isinstance(node.additional, Valid):
-                applying.append(node.additional)
-            fcol = col[f.name]
-            ng = (
-                fcol.isNull()
-                if null_guard is None
-                else (null_guard | fcol.isNull())
-            )
-            for sub in applying:
-                _decompose(
-                    lw, sub, f.dataType, fcol, f"{path}.{f.name}", out, ng
-                )
-        return
-    if (
-        isinstance(node, ArrItems)
-        and isinstance(dtype, ArrayType)
-        and not node.positional
-    ):
-        # single-schema items: decompose the element schema into leaf
-        # checks, each evaluated as one forall pass over the array —
-        # granular codes + "$[*]" paths instead of one composite check
-        et = dtype.elementType
-        probe: List[Check] = []
-        _decompose(
-            lw, node.additional, et, F.lit(None).cast(et), "$", probe, None
-        )
-        def kth_factory(k: int):
-            def kth(x: Column) -> Column:
-                sub: List[Check] = []
-                _decompose(lw, node.additional, et, x, "$", sub, None)
-                return _nz(sub[k].expr)
-
-            return kth
-
-        for k, pc in enumerate(probe):
-            out.append(
-                Check(
-                    pc.code,
-                    f"{path}[*]" + pc.path[1:],
-                    _guard(null_guard, F.forall(col, kth_factory(k))),
-                )
-            )
-        return
-    if isinstance(node, (Or, Xor, Not)):
-        out.append(
-            Check(
-                E.INVALID_SPLIT_CONDITION,
-                path,
-                _guard(null_guard, _nz(lw.lower(node, dtype, col))),
-            )
-        )
-        return
-    # leaf (or map-typed propset / array items): one coded check
-    code = _LEAF_CODES.get(type(node), E.INVALID_UNEXPECTED_TOKEN)
-    if isinstance(node, ArrItems):
-        code = E.INVALID_MATCH_CASE
-    out.append(
-        Check(code, path, _guard(null_guard, _nz(lw.lower(node, dtype, col))))
-    )

@@ -51,7 +51,7 @@ def _flagship_plan() -> ValidationPlan:
 # ---------------------------------------------------------------------
 
 # violations oracle: one row per failing CHECK per doc, mirroring
-# the typed violation program's canonical check list for FLAGSHIP_SPEC
+# the Arrow kernels' canonical check list for FLAGSHIP_SPEC
 # (codes from src/validate_ir.h:134-163). Checks that cannot fire on typed data
 # (type-mismatch arms) are omitted on both sides.
 _VIOLATIONS_SQL = f"""
@@ -119,9 +119,9 @@ def val_flagship_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("val_flagship_violations_arrow", _VIOLATIONS_SQL)
 def val_flagship_violations_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Twin of val_flagship_violations: the violation rows of the Arrow
-    route, whose check decomposition mirrors the Column lowering's
-    codes, paths and guards exactly, so both hash against one oracle."""
+    """Twin of val_flagship_violations, kept so the Arrow engine's
+    violation rows stay pinned by name; both hash against one
+    oracle."""
     return val_flagship_violations(spark, sf_dir)
 
 

@@ -1,19 +1,21 @@
-"""Arrow-kernel backend: parity with the Column path and pyeval."""
+"""Arrow-kernel backend, apply_typed's one engine: parity with pyeval
+and the DuckDB oracle."""
 
 import pyarrow as pa
 import pytest
-from pyspark.sql.types import StructType
 
+from jvst_spark import errors as E
 from jvst_spark.compiler.arrow_backend import (
     Unsupported,
     _Compiler,
     arrow_validate,
-    supports,
 )
 from jvst_spark.compiler.plan import ValidationPlan, compile_schema
 from jvst_spark.compiler.pyeval import compile_python
 from jvst_spark.io.spans import FLAGSHIP_SPEC, spans_from_documents
+from jvst_spark.spec.translate import SchemaError
 from tests.conftest import SF_DIR
+from tests.test_spark_validation import _strip_absent
 
 
 @pytest.fixture(scope="module")
@@ -22,12 +24,7 @@ def spans_df(spark):
 
 
 class TestArrowFlagship:
-    def test_supports_flagship(self, spans_df):
-        plan = ValidationPlan(compile_schema(FLAGSHIP_SPEC))
-        rt = StructType([spans_df.schema[c] for c in spans_df.columns])
-        assert supports(plan.spec.root, rt, plan.spec.defs)
-
-    def test_verdict_parity_with_column_path(self, spark, spans_df):
+    def test_verdicts_match_pyeval(self, spark, spans_df):
         plan = ValidationPlan(compile_schema(FLAGSHIP_SPEC))
         av = {
             r["doc_id"]: r["valid"]
@@ -35,41 +32,46 @@ class TestArrowFlagship:
             .select("doc_id", "valid")
             .collect()
         }
-        cv = {
-            r["doc_id"]: r["valid"]
-            for r in plan._apply_column(spans_df, "doc_id").verdicts().collect()
+        pyv = compile_python(plan.spec.root, plan.spec.defs)
+        want = {
+            r["doc_id"]: pyv(_strip_absent(r.asDict(recursive=True)))
+            for r in spans_df.collect()
         }
-        assert av == cv and len(av) == 500
+        assert av == want and len(av) == 500
+        assert True in av.values() and False in av.values()
 
-    def test_violation_parity_with_column_path(self, spark, spans_df):
-        """Round-4: arrow_validate's violation ROWS — codes, paths
-        (incl. '$[*]' array-leaf stars), messages, AND order — equal
-        the typed Column path's on every flagship doc."""
+    def test_violation_rows_match_duckdb_oracle(self, spark, spans_df):
+        """arrow_validate's violation ROWS — codes, paths (incl. '$[*]'
+        array-leaf stars) and messages — equal, as a multiset, the
+        DuckDB oracle's rows for the flagship spec (the query
+        val_flagship_violations hashes against the same SQL)."""
+        import duckdb
+
+        from jvst_spark.queries import _VIOLATIONS_SQL
+
         plan = ValidationPlan(compile_schema(FLAGSHIP_SPEC))
-        av = {
-            r["doc_id"]: (
-                r["valid"],
-                [(v["code"], v["path"], v["message"])
-                 for v in r["_violations"]],
-            )
+        got = sorted(
+            (r["doc_id"], v["code"], v["path"], v["message"])
             for r in arrow_validate(plan, spans_df).collect()
-        }
-        tv = {
-            r["doc_id"]: (
-                r["valid"],
-                [(v["code"], v["path"], v["message"])
-                 for v in r["_violations"]],
-            )
-            for r in plan._apply_column(spans_df, "doc_id").frame.collect()
-        }
-        assert av == tv and len(av) == 500
-        assert any(v[1] for v in av.values())  # violations present
+            for v in r["_violations"]
+        )
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS "
+            f"SELECT * FROM '{SF_DIR}/documents.parquet'"
+        )
+        want = sorted(
+            (doc_id, code, path, E.invalid_msg(code))
+            for doc_id, code, path in con.execute(_VIOLATIONS_SQL).fetchall()
+        )
+        assert got == want
+        assert len({g[1] for g in got}) >= 3  # several codes fire
 
 
 class TestTypedRoute:
-    """apply_typed picks its route from the spec and the input schema
-    alone: the Arrow kernels when supports() holds, the Column lowering
-    otherwise. Either way the rows equal the Column lowering's."""
+    """apply_typed has one engine: every plan holds exactly one
+    MapInArrow node and no other Python node; what the kernels decline
+    raises SchemaError before any job runs."""
 
     PY_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython",
                 "BatchEvalPython")
@@ -83,29 +85,26 @@ class TestTypedRoute:
             for r in frame.collect()
         )
 
-    def _check(self, plan, df, arrow):
-        row_type = StructType(df.schema.fields)
-        assert supports(plan.spec.root, row_type, plan.spec.defs) == arrow
+    def _frame(self, plan, df):
         frame = plan.apply_typed(df).frame
         text = frame._jdf.queryExecution().executedPlan().toString()
-        assert [n for n in self.PY_NODES if n in text] == (
-            ["MapInArrow"] if arrow else []
-        )
-        assert self._rows(frame) == self._rows(
-            plan._apply_column(df, "doc_id").frame
-        )
+        assert {n: text.count(n) for n in self.PY_NODES} == {
+            "MapInArrow": 1, "MapInPandas": 0, "ArrowEvalPython": 0,
+            "BatchEvalPython": 0,
+        }
+        return frame
 
-    def test_flagship_spans_take_the_arrow_route(self, spans_df):
+    def test_flagship_spans_run_one_map_in_arrow(self, spans_df):
         plan = ValidationPlan(compile_schema(FLAGSHIP_SPEC))
-        self._check(plan, spans_df, arrow=True)
+        assert len(self._rows(self._frame(plan, spans_df))) == 500
 
     @pytest.mark.parametrize(
-        "key_type, key, arrow",
-        # float keys render differently per backend: the kernels
-        # decline them; integral keys validate as their string form
-        [("double", float, False), ("bigint", int, True)],
+        "key_type, key",
+        # minProperties only sizes the map: it runs over any key type,
+        # float keys included
+        [("double", float), ("bigint", int)],
     )
-    def test_map_key_type_picks_the_route(self, spark, key_type, key, arrow):
+    def test_min_properties_over_any_map_key_type(self, spark, key_type, key):
         plan = ValidationPlan(compile_schema({
             "type": "object",
             "properties": {"m": {"type": "object", "minProperties": 1}},
@@ -115,10 +114,90 @@ class TestTypedRoute:
              (3, {key(2): "b", key(3): "c"})],
             f"doc_id bigint, m map<{key_type},string>",
         )
-        self._check(plan, df, arrow)
-        valid = {r["doc_id"]: r["valid"]
-                 for r in plan.apply_typed(df).verdicts().collect()}
-        assert valid == {0: False, 1: True, 2: True, 3: True}
+        few = (E.INVALID_TOO_FEW_PROPS, "$.m",
+               E.invalid_msg(E.INVALID_TOO_FEW_PROPS))
+        assert self._rows(self._frame(plan, df)) == [
+            (0, False, [few]), (1, True, []), (2, True, []), (3, True, []),
+        ]
+
+    @pytest.mark.parametrize(
+        "schema, ddl",
+        [
+            # a keyword that reads a float key: Arrow renders 1.0 as
+            # "1", Spark as "1.0"
+            ({"properties": {"m": {"required": ["1.0"]}}},
+             "doc_id bigint, m map<double,string>"),
+            # a $ref cycle that never narrows the column type
+            ({"$ref": "#/definitions/a",
+              "definitions": {"a": {"allOf": [
+                  {"minProperties": 0}, {"$ref": "#/definitions/a"}]}}},
+             "doc_id bigint, v bigint"),
+            # more than 64 nested refs: a 70-def ring
+            ({"$ref": "#/definitions/a0",
+              "definitions": {f"a{i}": {"allOf": [
+                  {"minProperties": 0},
+                  {"$ref": f"#/definitions/a{(i + 1) % 70}"}]}
+                  for i in range(70)}},
+             "doc_id bigint, v bigint"),
+            # a column type outside the data model, read by a keyword
+            ({"properties": {"d": {"type": "string"}}},
+             "doc_id bigint, d date"),
+        ],
+        ids=["float-key-read", "non-narrowing-cycle", "ref-budget",
+             "date-column"],
+    )
+    def test_declined_inputs_raise_schema_error(self, spark, schema, ddl):
+        plan = ValidationPlan(compile_schema(schema))
+        df = spark.createDataFrame([], ddl)
+        with pytest.raises(SchemaError):
+            plan.apply_typed(df)
+
+
+class TestDecimalColumns:
+    """A decimal(p,s) column is a JSON number: every numeric keyword
+    reads its value as a double, as pyeval reads float(value)."""
+
+    @pytest.mark.parametrize(
+        "schema",
+        [{"minimum": 0, "maximum": 5}, {"type": "integer"},
+         {"multipleOf": 0.5}, {"enum": [1.5]}],
+        ids=["range", "integer", "multipleOf", "enum"],
+    )
+    def test_decimal_verdicts_match_pyeval(self, spark, schema):
+        from decimal import Decimal
+
+        from pyspark.sql import functions as F
+
+        from jvst_spark.compiler.pyeval import compile_explain
+
+        plan = ValidationPlan(compile_schema({"properties": {"x": schema}}))
+        vals = [Decimal("1.50"), Decimal("9.00"), Decimal("-0.50"), None]
+        df = spark.createDataFrame(
+            list(enumerate(vals)), "doc_id bigint, x decimal(10,2)"
+        )
+        docs = {
+            i: {"doc_id": i} if v is None else {"doc_id": i, "x": float(v)}
+            for i, v in enumerate(vals)
+        }
+        pyv = compile_python(plan.spec.root, plan.spec.defs)
+        explain = compile_explain(plan.spec.root, plan.spec.defs)
+        want = {i: pyv(d) for i, d in docs.items()}
+
+        got = {
+            r["doc_id"]: (r["valid"],
+                          [(v["code"], v["path"]) for v in r["_violations"]])
+            for r in plan.apply_typed(df).frame.collect()
+        }
+        assert got == {
+            i: (want[i], [] if want[i] else explain(d))
+            for i, d in docs.items()
+        }
+        valid = F.coalesce(plan.valid_expr(df.schema), F.lit(False))
+        column = {
+            r["doc_id"]: r["v"]
+            for r in df.select("doc_id", valid.alias("v")).collect()
+        }
+        assert column == want
 
 
 class TestArrowKernelsDirect:
@@ -178,24 +257,6 @@ class TestArrowKernelsDirect:
                    [7.0, 4.0, 8.0, 3.0])
         self.check({"not": {"minimum": 3}}, "double", [1.0, 5.0])
 
-    def test_unsupported_fallback_reported(self, spark):
-        from pyspark.sql.types import _parse_datatype_string
-
-        # round-5: integral/boolean map keys now validate as their
-        # string rendering; FLOAT keys remain the honest exclusion
-        # (their rendering differs between Spark and Arrow casts)
-        spec = compile_schema({"type": "object", "minProperties": 1})
-        assert supports(
-            spec.root,
-            _parse_datatype_string("map<bigint,string>"),
-            spec.defs,
-        )
-        assert not supports(
-            spec.root,
-            _parse_datatype_string("map<double,string>"),
-            spec.defs,
-        )
-
 
 class TestArrowMapColumns:
     """Round-3: MapType (open objects) through the Arrow backend —
@@ -206,7 +267,6 @@ class TestArrowMapColumns:
 
         spec = compile_schema(schema)
         dt = MapType(StringType(), sp_value_type, True)
-        assert supports(spec.root, dt, spec.defs), schema
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         arr = pa.array(
             [None if r is None else list(r.items()) for r in rows],
@@ -298,7 +358,6 @@ class TestArrowMapColumns:
         dt = StructType(
             [StructField("meta", MapType(StringType(), LongType(), True))]
         )
-        assert supports(spec.root, dt, spec.defs)
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         docs = [{"meta": {"k": 1}}, {"meta": {"j": 1}},
                 {"meta": {"k": 1, "z": 2}}, {}]
@@ -313,7 +372,7 @@ class TestArrowMapColumns:
         pyv = compile_python(spec.root, spec.defs)
         assert got == [pyv(d) for d in docs]
 
-    def test_spark_roundtrip_parity_with_typed(self, spark):
+    def test_spark_roundtrip_parity_with_pyeval(self, spark):
         from pyspark.sql import functions as F
 
         schema = {
@@ -350,19 +409,21 @@ class TestArrowMapColumns:
             r["doc_id"]: r["valid"]
             for r in arrow_validate(wplan, df).select("doc_id", "valid").collect()
         }
-        cv = {
-            r["doc_id"]: r["valid"]
-            for r in wplan._apply_column(df, "doc_id").verdicts().collect()
+        pyv = compile_python(wplan.spec.root, wplan.spec.defs)
+        want = {
+            r["doc_id"]: pyv(r.asDict(recursive=True))
+            for r in df.collect()
         }
-        assert av == cv and len(av) == 200
+        assert av == want and len(av) == 200
         assert True in av.values() and False in av.values()
 
 
 class TestArrowNonStringMapKeys:
     """Round-5: non-string (integral/boolean) map keys validate as
     their string rendering — the JSON-object model (to_json renders
-    object keys as strings) — with Arrow/Column/pyeval agreement.
-    Float keys stay excluded on both backends (rendering differs)."""
+    object keys as strings) — with Arrow/lower_typed/pyeval agreement.
+    Float keys stay excluded wherever a keyword reads them (rendering
+    differs)."""
 
     def _expect(self, spec, rows):
         pyv = compile_python(spec.root, spec.defs)
@@ -409,7 +470,6 @@ class TestArrowNonStringMapKeys:
         }
         spec = compile_schema(schema)
         dt = MapType(LongType(), LongType(), True)
-        assert supports(spec.root, dt, spec.defs)
         rows = [{1: 5}, {1: -2}, {2: 0}, {1: 0, 2: 9}, {1: 0, 2: 2},
                 {1: 1, 2: 2, 3: 3}, {}]
         ev = _Compiler(spec.defs).compile(spec.root, dt)
@@ -432,7 +492,6 @@ class TestArrowNonStringMapKeys:
         }
         spec = compile_schema(schema)
         dt = MapType(BooleanType(), LongType(), True)
-        assert supports(spec.root, dt, spec.defs)
         rows = [{True: 3}, {True: -1}, {False: 3}, {True: 1, False: 2}, {}]
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         arr = pa.array(
@@ -451,7 +510,8 @@ class TestArrowNonStringMapKeys:
 
         spec = compile_schema({"type": "object", "required": ["1.5"]})
         dt = MapType(DoubleType(), LongType(), True)
-        assert not supports(spec.root, dt, spec.defs)
+        with pytest.raises(Unsupported, match="map key"):
+            _Compiler(spec.defs).compile(spec.root, dt)
         with pytest.raises(SchemaError, match="map key"):
             df = spark.createDataFrame(
                 [], f"m {dt.simpleString()}"
@@ -461,10 +521,9 @@ class TestArrowNonStringMapKeys:
             )
 
     def test_float_keys_key_agnostic_specs_still_lower(self, spark):
-        """Review finding: the exclusion must apply only to nodes that
-        READ keys. Constant subschemas compile on both backends over a
-        float-keyed map; size-only checks (minProperties) work on the
-        Column path (they never touch keys)."""
+        """The exclusion applies only to nodes that READ keys. Constant
+        subschemas and size-only checks (minProperties) compile over a
+        float-keyed map, in the kernels and in lower_typed alike."""
         from pyspark.sql.types import DoubleType, LongType, MapType
 
         from jvst_spark.spec.nodes import Invalid, Valid
@@ -479,6 +538,8 @@ class TestArrowNonStringMapKeys:
         assert [bool(v) for v in ev_f(arr)] == [False, False]
 
         spec = compile_schema({"type": "object", "minProperties": 1})
+        ev = _Compiler(spec.defs).compile(spec.root, dt)
+        assert [bool(v) for v in ev(arr)] == [True, False]
         got = self._column_path(spark, spec, dt, [{1.5: 1}, {}])
         assert got == [True, False]
 
@@ -517,9 +578,10 @@ class TestArrowConformanceCorpus:
                 continue
             spec = compile_schema(schema)
             dt = MapType(StringType(), sp_t, True)
-            if not supports(spec.root, dt, spec.defs):
+            try:
+                ev = _Compiler(spec.defs).compile(spec.root, dt)
+            except Unsupported:
                 continue
-            ev = _Compiler(spec.defs).compile(spec.root, dt)
             arr = pa.array(
                 [list(doc.items())], type=pa.map_(pa.string(), pa_t)
             )
@@ -567,9 +629,10 @@ class TestArrowConformanceCorpus:
 
             spec = compile_schema(schema)
             dt = ArrayType(sp_t, True)
-            if not supports(spec.root, dt, spec.defs):
+            try:
+                ev = _Compiler(spec.defs).compile(spec.root, dt)
+            except Unsupported:
                 continue
-            ev = _Compiler(spec.defs).compile(spec.root, dt)
             arr = pa.array([doc], type=pa.list_(pa_t))
             got = bool(ev(arr)[0])
             # int lists typed as float64 change 1 vs 1.0 identity for
@@ -615,19 +678,10 @@ class TestArrowValidateCorpus:
             else:
                 continue
             spec = compile_schema(schema)
-            from pyspark.sql.types import StructField, StructType as ST
-
             dt = MapType(StringType(), sp_t, True)
-            row_type = ST([
-                StructField("doc_id", StringType(), False),
-                StructField("m", dt, True),
-            ])
-            if not supports(spec.root, dt, spec.defs):
-                continue
-            # the row is an object of its columns; validate the map
-            # column directly through the decomposition
+            # validate the map column directly through the
+            # decomposition
             from jvst_spark.compiler.arrow_backend import _adecompose
-            from jvst_spark.compiler.arrow_backend import _Compiler
 
             try:
                 checks = _adecompose(
@@ -657,7 +711,6 @@ class TestArrowUniqueItems:
 
         spec = compile_schema({"uniqueItems": True})
         dt = _parse_datatype_string(f"array<{dtype_str}>")
-        assert supports(spec.root, dt, spec.defs)
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         arr = pa.array(values, type=pa.list_(pa_type))
         got = [bool(v) for v in ev(arr)]
@@ -701,7 +754,6 @@ class TestArrowUniqueItems:
         def check(schema, dtype_str, pa_type, values):
             spec = compile_schema(schema)
             dt = _parse_datatype_string(dtype_str)
-            assert supports(spec.root, dt, spec.defs), schema
             ev = _Compiler(spec.defs).compile(spec.root, dt)
             arr = pa.array(values, type=pa_type)
             got = [bool(v) for v in ev(arr)]
@@ -746,7 +798,6 @@ class TestArrowPositionalItems:
 
         spec = compile_schema(schema)
         dt = _parse_datatype_string(dtype_str)
-        assert supports(spec.root, dt, spec.defs), schema
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         arr = pa.array(values, type=pa_type)
         got = [bool(v) for v in ev(arr)]
@@ -789,7 +840,6 @@ class TestArrowPositionalItems:
         ]}
         spec = compile_schema(schema)
         dt = _parse_datatype_string("array<struct<a:bigint>>")
-        assert supports(spec.root, dt, spec.defs)
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         values = [[{"a": 1}, {"a": 7}], [{"a": None}, {"a": 7}],
                   [{"a": 1}, {"a": 2}], [{"a": 1}], []]
@@ -811,7 +861,6 @@ class TestArrowCompositeCanon:
 
         spec = compile_schema(schema)
         dt = _parse_datatype_string(dtype_str)
-        assert supports(spec.root, dt, spec.defs), schema
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         arr = pa.array(values, type=pa_type)
         got = [bool(v) for v in ev(arr)]
@@ -882,7 +931,6 @@ class TestArrowCompositeCanon:
 
         spec = compile_schema({"uniqueItems": True})
         dt = _parse_datatype_string("array<map<string,bigint>>")
-        assert supports(spec.root, dt, spec.defs)
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         arr = pa.array(
             [[[("a", 1), ("b", 2)], [("b", 2), ("a", 1)]],
@@ -902,10 +950,9 @@ class TestArrowCompositeCanon:
 
 class TestArrowRecursiveRefs:
     """Round-5 (late): cyclic $ref through the Arrow backend —
-    recursion bounded by the column's DataType exactly as the
-    typed-Column path bounds it (same 64-hop budget; was 16, which
-    made dtypes nested 17+ deep fall back even though the Column path
-    lowered them). The reference runs recursion natively via VM CALL
+    recursion bounded by the column's DataType exactly as lower_typed
+    bounds it (same 64-hop budget; was 16, which declined dtypes nested
+    17+ deep). The reference runs recursion natively via VM CALL
     frames (src/validate_vm.c:1449-1468); over TYPED columns the
     DataType is the call-depth bound."""
 
@@ -966,7 +1013,6 @@ class TestArrowRecursiveRefs:
         depth = 24  # > the old 16-hop Unsupported threshold
         spec = compile_schema(self.SCHEMA)
         dt = _parse_datatype_string(self._dtype_str(depth))
-        assert supports(spec.root, dt, spec.defs)
         docs = self._docs(depth)
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         arr = pa.array(docs, type=self._pa_type(depth))
@@ -1008,7 +1054,7 @@ class TestArrowRecursiveRefs:
         DAG-shared deep dtype (the same child StructType object reused
         at every level) must compile via the (uri, dtype) memo — one
         compile per level, not 2^depth ref paths (which would hang the
-        supports() probe)."""
+        driver-side compile)."""
         from pyspark.sql.types import LongType, StructField
         from pyspark.sql.types import StructType as ST
 
@@ -1035,7 +1081,7 @@ class TestArrowRecursiveRefs:
                     StructField("prev", dt),
                 ]
             )
-        assert supports(spec.root, dt, spec.defs)
+        _Compiler(spec.defs).compile(spec.root, dt)
 
     def test_non_narrowing_cycle_stays_unsupported(self, spark):
         from pyspark.sql.types import _parse_datatype_string
@@ -1048,6 +1094,7 @@ class TestArrowRecursiveRefs:
             },
         }
         spec = compile_schema(schema)
-        assert not supports(
-            spec.root, _parse_datatype_string("struct<v:bigint>"), spec.defs
-        )
+        with pytest.raises(Unsupported, match="non-narrowing"):
+            _Compiler(spec.defs).compile(
+                spec.root, _parse_datatype_string("struct<v:bigint>")
+            )

@@ -951,6 +951,58 @@ class TestExplainLowering:
                 for d in docs
             )
 
+    def test_max_ref_depth_zero_cuts_a_named_acyclic_def(self, spark):
+        """translate keeps an acyclic def larger than 256 nodes as a
+        named $ref. max_ref_depth=0 cuts a ref at its first entry, so
+        the variant lowering must not inline such a ref at D = 0: at
+        D = 0, 1 and None, verdicts(), frame and violations() agree
+        with compile_explain(..., D) on every document."""
+        big = {
+            "type": "object",
+            "properties": {
+                f"p{i}": {"type": "integer", "minimum": 0} for i in range(80)
+            },
+        }
+        spec = compile_schema({
+            "definitions": {"big": big},
+            "properties": {"a": {"$ref": "#/definitions/big"}},
+        })
+        assert spec.defs and "Ref(" in repr(spec.root)
+        assert _lowers(spec)  # acyclic: it inlines when nothing cuts
+        docs = ['{"a": {"p1": 5}}', '{"a": {"p1": -1}}', '{"a": 5}',
+                "{}", '{"b": 1}', '{"a": {"p1": "x"}}', "not json"]
+        df = spark.createDataFrame(
+            [(str(i), d) for i, d in enumerate(docs)], ["doc_id", "body"]
+        )
+        cut = (UNEXPECTED, "$.a")
+        assert _pyeval_violations(spec, docs[0], 0) == [cut]
+        assert _pyeval_violations(spec, docs[0], 1) == []
+        for depth in (0, 1, None):
+            res = ValidationPlan(spec).apply_json(
+                df, "body", max_ref_depth=depth
+            )
+            verdicts = {
+                r["doc_id"]: r["valid"] for r in res.verdicts().collect()
+            }
+            frame = {
+                r["doc_id"]: (
+                    r["valid"],
+                    [(v["code"], v["path"]) for v in r["_violations"]],
+                )
+                for r in res.frame.collect()
+            }
+            rows = {}
+            for r in res.violations().collect():
+                rows.setdefault(r["doc_id"], []).append(
+                    (r["code"], r["path"])
+                )
+            for i, d in enumerate(docs):
+                want = _pyeval_violations(spec, d, depth)
+                key = str(i)
+                assert verdicts[key] == (not want), (depth, d)
+                assert frame[key] == (not want, want), (depth, d)
+                assert sorted(rows.get(key, [])) == sorted(want), (depth, d)
+
     def test_fuzz_explain_matches_pyeval(self, spark):
         """Seeded fuzz for the VIOLATION lowering: random supported
         specs x random documents — codes, paths, and order must match

@@ -101,10 +101,9 @@ class TestFlagshipTyped:
         assert "ArrowEvalPython" not in explained
 
     def test_fast_valid_agrees_with_violation_program(self, flagship_result):
-        """The two-tier layout computes `valid` from the fused boolean
-        pass and violations from the check decomposition — they are
-        derived independently from the same DAG and must agree row-wise
-        (valid <=> no violations)."""
+        """The kernels compute `valid` and the violation rows from the
+        same check decomposition — they must agree row-wise (valid <=>
+        no violations)."""
         bad = flagship_result.filter(
             (F.col("valid") & (F.size("_violations") > 0))
             | (~F.col("valid") & (F.size("_violations") == 0))
