@@ -2,9 +2,7 @@
 
 - arrow_backend: DAG x Spark DataType -> pyarrow kernels, for
   statically-typed rows. apply_typed's one engine: verdicts and coded
-  violation rows from one mapInArrow stage.
-- typed: DAG x Spark DataType -> a validity Column, for a verdict
-  inside a Spark expression (valid_expr, val_spans_unique).
+  violation rows from one mapInArrow stage, in batch and streaming.
 - pyeval: DAG -> Python closures, for dynamic (schemaless) JSON
   documents. Runs inside Arrow-batched pandas UDFs; the per-document
   analogue of jvst's VM run (src/validate_vm.c:1136-1592).

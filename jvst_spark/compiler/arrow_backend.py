@@ -89,7 +89,6 @@ from jvst_spark.spec.nodes import (
     Xor,
 )
 from jvst_spark.spec.translate import SchemaError
-from jvst_spark.compiler.typed import _arm_of
 
 _NUMERIC = (
     ByteType, ShortType, IntegerType, LongType,
@@ -103,12 +102,30 @@ _CASTABLE_KEYS = (ByteType, ShortType, IntegerType, LongType, BooleanType)
 Ev = Callable[[pa.Array], np.ndarray]
 
 
+def _arm_of(dtype: DataType) -> str:
+    """Static JSON-type arm of a Spark DataType — the compile-time
+    constant-folding of jvst's runtime type switch."""
+    if isinstance(dtype, StringType):
+        return "string"
+    if isinstance(dtype, BooleanType):
+        return "boolean"
+    if isinstance(dtype, _NUMERIC):
+        return "number"
+    if isinstance(dtype, ArrayType):
+        return "array"
+    if isinstance(dtype, (StructType, MapType)):
+        return "object"
+    if isinstance(dtype, NullType):
+        return "null"
+    raise SchemaError(f"unsupported column type for validation: {dtype}")
+
+
 def _as_f64(arr: pa.Array) -> pa.Array:
     """Numeric array -> float64 in C-double space (precision-lossy by
-    design: 2^53+1 == 2^53, matching typed.py's cast("double") and
-    pyeval's float()). Arrow's default cast is CHECKED and raises
-    ArrowInvalid on int64 beyond 2^53 — safe=False restores the
-    unchecked double-space semantics all backends share."""
+    design: 2^53+1 == 2^53, matching pyeval's float()). Arrow's default
+    cast is CHECKED and raises ArrowInvalid on int64 beyond 2^53 —
+    safe=False restores the unchecked double-space semantics all
+    backends share."""
     return pc.cast(arr, pa.float64(), safe=False)
 
 
@@ -225,9 +242,9 @@ class _Compiler:
 
     @staticmethod
     def _map_keys_ok(dtype) -> None:
-        """Keys a node reads must render as Spark renders them: string,
-        integral and boolean keys do (typed._stringify_map_keys casts
-        the same set); float keys do not ("1.0" in Spark, "1" in
+        """Keys a node reads must render as Spark renders them (to_json
+        writes every object key as a string): string, integral and
+        boolean keys do; float keys do not ("1.0" in Spark, "1" in
         Arrow). Called by key-reading nodes only, so size-only and
         constant nodes still compile over any key type."""
         if not isinstance(dtype.keyType, (StringType, *_CASTABLE_KEYS)):
@@ -284,9 +301,8 @@ class _Compiler:
             # container narrows the DataType (finite); a re-entry at
             # the SAME (uri, dtype) while that pair is still compiling
             # is a non-narrowing cycle (e.g. allOf self-ref), which
-            # cannot be validated over a finite type. The depth budget
-            # (the same 64 as typed.py's _ref_budget) stays as the
-            # backstop for mutual-ref chains.
+            # cannot be validated over a finite type. A depth budget
+            # of 64 stays as the backstop for mutual-ref chains.
             key = (node.uri, id(dtype))
             hit = self._ref_memo.get(key)
             if hit is not None:
@@ -377,7 +393,7 @@ class _Compiler:
                     out = np.ones(len(a), dtype=bool)
                     for k in keys_req:
                         # key PRESENCE, even with a null value — map
-                        # semantics (typed's map_contains_key), not
+                        # semantics (Spark's map_contains_key), not
                         # the struct path's isNotNull
                         hit = _np_bool(pc.equal(keys, k), len(keys))
                         out &= _seg_any(hit, off)

@@ -36,7 +36,6 @@ from jvst_spark import errors as E
 from jvst_spark._pyworker import install
 from jvst_spark.compiler.arrow_backend import arrow_validate
 from jvst_spark.compiler.pyeval import compile_explain, compile_python
-from jvst_spark.compiler.typed import lower_typed
 from jvst_spark.spec.canonify import canonify
 from jvst_spark.spec.nodes import Node
 from jvst_spark.spec.translate import translate_with_defs
@@ -127,8 +126,10 @@ class ValidationPlan:
 
     Typed mode (`apply_typed`): the whole row is validated as a JSON
     object whose keys are its columns, by the Arrow kernels in one
-    mapInArrow stage (the 100 TB path). `valid_expr` is the verdict
-    alone as a Column expression, for use inside other expressions.
+    mapInArrow stage (the 100 TB path). It is the one typed
+    evaluator: batch, streaming and single-column checks (validate
+    `df.select(id, col)` under `{"properties": {col: ...}}`) all run
+    it.
 
     Dynamic mode (`apply_json`): a string column holding arbitrary
     JSON — verdicts from the compiled Python closure in an
@@ -141,15 +142,6 @@ class ValidationPlan:
         self.spec = spec
 
     # ------------------------------------------------ typed (scale) --
-
-    def valid_expr(
-        self, row_type: StructType, row_col: Optional[Column] = None
-    ) -> Column:
-        if row_col is None:
-            row_col = F.struct(
-                *[F.col(f.name).alias(f.name) for f in row_type.fields]
-            )
-        return lower_typed(self.spec.root, row_type, row_col, self.spec.defs)
 
     def apply_typed(
         self, df: DataFrame, id_col: str = "doc_id"

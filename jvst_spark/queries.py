@@ -245,8 +245,9 @@ def val_resume_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "val_spans_unique",
     # DuckDB can't list_distinct struct lists; serialize each span with
-    # the same equivalence classes as canon_expr (null field = absent,
-    # field-tagged values; span text tokens contain no ';'/'=')
+    # the same equivalence classes as the kernels' canonical form (null
+    # field = absent, field-tagged values; span text tokens contain no
+    # ';'/'=')
     f"""
 WITH spans_tbl AS ({SPANS_SQL}),
 canon AS (SELECT doc_id, list_transform(spans, s -> concat(
@@ -260,19 +261,15 @@ SELECT doc_id, len(list_distinct(cs)) = n AS spans_unique FROM canon
 )
 def val_spans_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """uniqueItems over the spans array via canonical serialization
-    (the UEM recipe, SURVEY op 22) — typed lowering path."""
-    from jvst_spark.compiler.typed import lower_typed
-    from jvst_spark.spec.nodes import ArrUnique
-
-    df = spans_from_documents(spark, sf_dir)
-    spans_type = df.schema["spans"].dataType
-    return df.select(
-        "doc_id",
-        F.coalesce(
-            lower_typed(ArrUnique(), spans_type, F.col("spans")), F.lit(True)
-        ).alias("spans_unique"),
+    (the UEM recipe, SURVEY op 22) — apply_typed over (doc_id, spans);
+    a NULL spans field is an absent key, so it reads as unique."""
+    plan = ValidationPlan(
+        compile_schema({"properties": {"spans": {"uniqueItems": True}}})
     )
-
+    df = spans_from_documents(spark, sf_dir).select("doc_id", "spans")
+    return plan.apply_typed(df).verdicts().select(
+        "doc_id", F.col("valid").alias("spans_unique")
+    )
 
 
 # dynamic-JSON path: validate the events.props JSON column with the

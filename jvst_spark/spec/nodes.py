@@ -326,8 +326,9 @@ class EnumMatch(Node):
     canonicalize(v, neg_zero_distinct=False) strings (the enum regime:
     -0.0 == 0 at every depth, per the reference's NUM_RANGE [x,x]
     desugaring), sorted + deduped; `raw_json` holds the matching raw
-    values as json.dumps strings (same order) for typed lowering,
-    which compares natively instead of via canon bytes."""
+    values as json.dumps strings (same order) for the backends that
+    compare natively instead of via canon bytes (the Arrow kernels,
+    the variant Columns) and for the stage dump."""
 
     canon_values: Tuple[str, ...]
     raw_json: Tuple[str, ...] = ()

@@ -19,7 +19,7 @@ $ref handling: acyclic refs are inlined (columnar plans cannot recurse);
 cyclic refs stay as Ref nodes with their targets collected in a
 definitions map — the Python evaluator supports true recursion via
 mutually recursive closures (replacing jvst's VM CALL frames,
-src/validate_vm.c:1449-1468); typed lowering unrolls to the static
+src/validate_vm.c:1449-1468); the Arrow kernels recurse to the static
 depth of the column's DataType, which is always finite.
 """
 
@@ -350,14 +350,14 @@ class _Translator:
                 # Nested diamonds (each def referencing the previous
                 # twice) otherwise double the inlined tree per level —
                 # every engine that walks per occurrence (pyeval
-                # compile, typed lowering, the variant fast path) goes
-                # exponential. With the cut, each inline site adds at
-                # most _INLINE_SIZE_LIMIT nodes and big shared schemas
-                # become CALL-style defs, which all four engines bound
-                # (pyeval memoizes; typed unrolls against the finite
-                # DataType; arrow caps ref depth; json_builtin inlines
-                # acyclic refs under its own budget and declines
-                # cycles).
+                # compile, the Arrow kernels, the variant fast path)
+                # goes exponential. With the cut, each inline site adds
+                # at most _INLINE_SIZE_LIMIT nodes and big shared
+                # schemas become CALL-style defs, which all three
+                # engines bound (pyeval memoizes; arrow memoizes per
+                # (def, DataType) and caps ref depth; json_builtin
+                # inlines acyclic refs under its own budget and
+                # declines cycles).
                 if key not in self.defs:
                     self.defs[key] = node
                 ref = Ref(key)

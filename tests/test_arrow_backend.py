@@ -166,8 +166,6 @@ class TestDecimalColumns:
     def test_decimal_verdicts_match_pyeval(self, spark, schema):
         from decimal import Decimal
 
-        from pyspark.sql import functions as F
-
         from jvst_spark.compiler.pyeval import compile_explain
 
         plan = ValidationPlan(compile_schema({"properties": {"x": schema}}))
@@ -192,12 +190,6 @@ class TestDecimalColumns:
             i: (want[i], [] if want[i] else explain(d))
             for i, d in docs.items()
         }
-        valid = F.coalesce(plan.valid_expr(df.schema), F.lit(False))
-        column = {
-            r["doc_id"]: r["v"]
-            for r in df.select("doc_id", valid.alias("v")).collect()
-        }
-        assert column == want
 
 
 class TestArrowKernelsDirect:
@@ -293,7 +285,7 @@ class TestArrowMapColumns:
         from pyspark.sql.types import LongType
 
         # key PRESENT with null value: required satisfied (map
-        # semantics — matches typed's map_contains_key), and the
+        # semantics — matches Spark's map_contains_key), and the
         # subschema's null arm decides the value check
         self.check_map(
             {"required": ["a"], "properties": {"a": {"type": "integer"}}},
@@ -421,7 +413,8 @@ class TestArrowMapColumns:
 class TestArrowNonStringMapKeys:
     """Round-5: non-string (integral/boolean) map keys validate as
     their string rendering — the JSON-object model (to_json renders
-    object keys as strings) — with Arrow/lower_typed/pyeval agreement.
+    object keys as strings) — the kernels directly, the kernels behind
+    apply_typed (a Spark round trip) and pyeval agree.
     Float keys stay excluded wherever a keyword reads them (rendering
     differs)."""
 
@@ -437,26 +430,22 @@ class TestArrowNonStringMapKeys:
             for r in rows
         ]
 
-    def _column_path(self, spark, spec, dt, rows):
-        from pyspark.sql import functions as F
+    def _spark_path(self, spark, schema, dt, rows):
+        """Verdicts of apply_typed over (doc_id, m) rows, with `schema`
+        applied to the map column m."""
         from pyspark.sql.types import (
             IntegerType, StructField, StructType as ST,
         )
 
-        from jvst_spark.compiler.typed import lower_typed
-
+        plan = ValidationPlan(
+            compile_schema({"properties": {"m": schema}})
+        )
         df = spark.createDataFrame(
             [(i, r) for i, r in enumerate(rows)],
-            ST([StructField("i", IntegerType()), StructField("m", dt)]),
+            ST([StructField("doc_id", IntegerType()), StructField("m", dt)]),
         )
-        got = df.select(
-            "i",
-            F.coalesce(
-                lower_typed(spec.root, dt, F.col("m"), spec.defs),
-                F.lit(False),
-            ).alias("v"),
-        ).collect()
-        return [r["v"] for r in sorted(got, key=lambda r: r["i"])]
+        got = plan.apply_typed(df).verdicts().collect()
+        return [r["valid"] for r in sorted(got, key=lambda r: r["doc_id"])]
 
     def test_int_keys_all_three_backends_agree(self, spark):
         from pyspark.sql.types import LongType, MapType
@@ -479,7 +468,7 @@ class TestArrowNonStringMapKeys:
         )
         expect = self._expect(spec, rows)
         assert [bool(v) for v in ev(arr)] == expect
-        assert self._column_path(spark, spec, dt, rows) == expect
+        assert self._spark_path(spark, schema, dt, rows) == expect
 
     def test_bool_keys_all_three_backends_agree(self, spark):
         from pyspark.sql.types import BooleanType, LongType, MapType
@@ -500,30 +489,28 @@ class TestArrowNonStringMapKeys:
         )
         expect = self._expect(spec, rows)
         assert [bool(v) for v in ev(arr)] == expect
-        assert self._column_path(spark, spec, dt, rows) == expect
+        assert self._spark_path(spark, schema, dt, rows) == expect
 
     def test_float_keys_stay_excluded_on_both_backends(self, spark):
-        from pyspark.sql import functions as F
         from pyspark.sql.types import DoubleType, LongType, MapType
 
-        from jvst_spark.compiler.typed import SchemaError, lower_typed
-
-        spec = compile_schema({"type": "object", "required": ["1.5"]})
+        schema = {"type": "object", "required": ["1.5"]}
+        spec = compile_schema(schema)
         dt = MapType(DoubleType(), LongType(), True)
         with pytest.raises(Unsupported, match="map key"):
             _Compiler(spec.defs).compile(spec.root, dt)
+        # apply_typed compiles on the driver: the decline is a
+        # SchemaError before any job runs
+        plan = ValidationPlan(compile_schema({"properties": {"m": schema}}))
+        df = spark.createDataFrame([], f"doc_id int, m {dt.simpleString()}")
         with pytest.raises(SchemaError, match="map key"):
-            df = spark.createDataFrame(
-                [], f"m {dt.simpleString()}"
-            )
-            df.select(
-                lower_typed(spec.root, dt, F.col("m"), spec.defs)
-            )
+            plan.apply_typed(df)
 
     def test_float_keys_key_agnostic_specs_still_lower(self, spark):
         """The exclusion applies only to nodes that READ keys. Constant
         subschemas and size-only checks (minProperties) compile over a
-        float-keyed map, in the kernels and in lower_typed alike."""
+        float-keyed map, in the kernels directly and behind
+        apply_typed alike."""
         from pyspark.sql.types import DoubleType, LongType, MapType
 
         from jvst_spark.spec.nodes import Invalid, Valid
@@ -537,10 +524,11 @@ class TestArrowNonStringMapKeys:
         assert [bool(v) for v in ev_t(arr)] == [True, True]
         assert [bool(v) for v in ev_f(arr)] == [False, False]
 
-        spec = compile_schema({"type": "object", "minProperties": 1})
+        schema = {"type": "object", "minProperties": 1}
+        spec = compile_schema(schema)
         ev = _Compiler(spec.defs).compile(spec.root, dt)
         assert [bool(v) for v in ev(arr)] == [True, False]
-        got = self._column_path(spark, spec, dt, [{1.5: 1}, {}])
+        got = self._spark_path(spark, schema, dt, [{1.5: 1}, {}])
         assert got == [True, False]
 
 
@@ -891,7 +879,7 @@ class TestArrowCompositeCanon:
         )
 
     def test_unique_injective_against_delimiter_spoofing(self):
-        # the canon_expr injectivity battery (round-2 Column fix):
+        # the canonical-form injectivity battery (round-2 fix):
         # string content embedding the serializer's own delimiters
         self.check(
             {"uniqueItems": True}, "array<array<string>>",
@@ -950,11 +938,11 @@ class TestArrowCompositeCanon:
 
 class TestArrowRecursiveRefs:
     """Round-5 (late): cyclic $ref through the Arrow backend —
-    recursion bounded by the column's DataType exactly as lower_typed
-    bounds it (same 64-hop budget; was 16, which declined dtypes nested
-    17+ deep). The reference runs recursion natively via VM CALL
-    frames (src/validate_vm.c:1449-1468); over TYPED columns the
-    DataType is the call-depth bound."""
+    recursion bounded by the column's DataType (a 64-hop budget; was
+    16, which declined dtypes nested 17+ deep). The reference runs
+    recursion natively via VM CALL frames
+    (src/validate_vm.c:1449-1468); over TYPED columns the DataType is
+    the call-depth bound."""
 
     SCHEMA = {
         "$ref": "#/definitions/node",
@@ -1022,32 +1010,39 @@ class TestArrowRecursiveRefs:
         assert got == expect
         assert True in got and False in got
 
-    def test_deep_linked_list_spark_roundtrip_vs_column_path(self, spark):
+    def test_deep_linked_list_spark_roundtrip_vs_pyeval(self, spark):
         import json as _json
 
         from pyspark.sql import functions as F
         from pyspark.sql.types import _parse_datatype_string
 
-        from jvst_spark.compiler.typed import lower_typed
-
         depth = 20
-        spec = compile_schema(self.SCHEMA)
+        # the chain as column `doc` of the (doc_id, doc) row
+        schema = {
+            "definitions": self.SCHEMA["definitions"],
+            "properties": {"doc": {"$ref": "#/definitions/node"}},
+        }
+        plan = ValidationPlan(compile_schema(schema))
         dt = _parse_datatype_string(self._dtype_str(depth))
         docs = self._docs(depth)
         df = spark.createDataFrame(
             [(i, _json.dumps(d)) for i, d in enumerate(docs)],
-            "i long, txt string",
-        ).select("i", F.from_json("txt", dt).alias("doc"))
-        cv = df.select(
-            "i",
-            F.coalesce(
-                lower_typed(spec.root, dt, F.col("doc"), spec.defs),
-                F.lit(False),
-            ).alias("valid"),
-        ).collect()
-        column = {r["i"]: r["valid"] for r in cv}
-        pyv = compile_python(spec.root, spec.defs)
-        assert column == {i: bool(pyv(d)) for i, d in enumerate(docs)}
+            "doc_id long, txt string",
+        ).select("doc_id", F.from_json("txt", dt).alias("doc"))
+        got = {
+            r["doc_id"]: r["valid"]
+            for r in plan.apply_typed(df).verdicts().collect()
+        }
+        pyv = compile_python(plan.spec.root, plan.spec.defs)
+        # the documents as Spark holds them: from_json reads the JSON
+        # null document as a struct of null fields, i.e. {}
+        want = {
+            r["doc_id"]: pyv(_strip_absent(r.asDict(recursive=True)))
+            for r in df.collect()
+        }
+        assert want[len(docs) - 1] is False
+        assert got == want
+        assert True in got.values() and False in got.values()
 
     def test_dag_shared_dtype_two_self_refs_compiles_linear(self, spark):
         """Review finding: a def with TWO self-ref properties over a

@@ -14,9 +14,9 @@ with shared members bridging cliques, edges in either orientation and
 repeated; their ids are strings, negative longs, or longs above 2^53
 (where a double would round). The reference is a union-find.
 
-lower_typed's uniqueItems (val_spans_unique) runs a sort-adjacent scan
-for element types whose native equality is the canonical one, and the
-canonical serialization otherwise; both are checked against
+The Arrow kernels' uniqueItems (apply_typed, as val_spans_unique runs
+it) scans scalar elements in double bit-pattern space and composite
+elements by their canonical strings; both are checked against
 nodes.canonicalize on arrays with NULL elements, nested structs and
 arrays, longs past 2^53, -0.0/0.0 and NaN, and empty arrays."""
 
@@ -232,10 +232,9 @@ def test_near_dup_components_chain_past_max_iter_warns(
     assert all(truth[x] <= got[x] <= x for x in got)
 
 
-# ---- ArrUnique: lower_typed's uniqueItems over typed arrays ----------
+# ---- ArrUnique: the kernels' uniqueItems over typed arrays ----------
 
 _UNIQUE_POOLS = {
-    # element types on the sort-adjacent path (native equality)
     "int": [0, 1, -1, 7, None],
     "string": ["", "a", "a,b", "s1:a", "A", None],
     "boolean": [True, False, None],
@@ -244,8 +243,8 @@ _UNIQUE_POOLS = {
         {"a": 1, "b": None}, {"a": None, "b": ["x", None]}, None,
     ],
     "array<int>": [[], [1], [1, 2], [2, 1], [None], None],
-    # the exclusions, on the canonical serialization: longs past 2^53
-    # collapse to one double, -0.0/NaN follow UEM double identity
+    # longs past 2^53 collapse to one double, -0.0/NaN follow UEM
+    # double identity
     "bigint": [2 ** 53, 2 ** 53 + 1, 2 ** 63 - 1, -(2 ** 63), 0, None],
     "double": [0.0, -0.0, float("nan"), 1.0, 1e300, float("inf"), None],
     "struct<x:bigint,y:double>": [
@@ -255,8 +254,6 @@ _UNIQUE_POOLS = {
     ],
     "array<double>": [[], [0.0], [-0.0], [float("nan")], [None], None],
 }
-_NATIVE_UNIQUE = {"int", "string", "boolean", "struct<a:int,b:array<string>>",
-                  "array<int>"}
 
 
 def unique_reference(arr):
@@ -266,7 +263,7 @@ def unique_reference(arr):
     from tests.test_spark_validation import _strip_absent
 
     if arr is None:
-        return True  # val_spans_unique reads a NULL array as unique
+        return True  # a NULL field is an absent key: nothing to check
     # typed data model: a NULL struct field is an absent key
     canon = [canonicalize(_strip_absent(x)) for x in arr]
     return len(set(canon)) == len(canon)
@@ -274,31 +271,22 @@ def unique_reference(arr):
 
 @pytest.mark.parametrize("elem", sorted(_UNIQUE_POOLS))
 def test_arr_unique_lowering_matches_canonical_reference(spark, elem):
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
+    from jvst_spark.compiler.plan import ValidationPlan, compile_schema
 
-    from jvst_spark.compiler.typed import _native_unique_ok, lower_typed
-    from jvst_spark.spec.nodes import ArrUnique
-
-    et = _parse_datatype_string(elem)
-    assert _native_unique_ok(et) == (elem in _NATIVE_UNIQUE)
     rng = random.Random(f"unique-{elem}")
     pool = _UNIQUE_POOLS[elem]
     arrays = [[rng.choice(pool) for _ in range(rng.randrange(0, 6))]
               for _ in range(60)]
     arrays += [[], None, list(pool), list(pool) + [pool[0]]]
     df = spark.createDataFrame(
-        list(enumerate(arrays)), f"i int, arr array<{elem}>"
+        list(enumerate(arrays)), f"doc_id int, arr array<{elem}>"
     )
-    dt = df.schema["arr"].dataType
+    plan = ValidationPlan(
+        compile_schema({"properties": {"arr": {"uniqueItems": True}}})
+    )
     got = {
-        r["i"]: r["u"]
-        for r in df.select(
-            "i",
-            F.coalesce(
-                lower_typed(ArrUnique(), dt, F.col("arr")), F.lit(True)
-            ).alias("u"),
-        ).collect()
+        r["doc_id"]: r["valid"]
+        for r in plan.apply_typed(df).verdicts().collect()
     }
     want = {i: unique_reference(a) for i, a in enumerate(arrays)}
     assert got == want

@@ -334,20 +334,14 @@ class TestStreaming:
         )
         assert rows2 == rows
 
-    def test_violation_rate_windows(self, spark, tmp_path):
+    @staticmethod
+    def _rate_windows(spark, tmp_path, schema, sink):
+        """(events frame, rows violation_rate_windows emits for it)
+        from an availableNow file stream over the events table."""
         from jvst_spark.streaming.validate_stream import (
             violation_rate_windows,
         )
 
-        p = ValidationPlan(
-            compile_schema(
-                {
-                    "type": "object",
-                    "properties": {"value": {"type": "number", "minimum": 10}},
-                    "required": ["value"],
-                }
-            )
-        )
         ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
             F.col("event_id").alias("doc_id"),
             # parquet gives TIMESTAMP_NTZ; watermarks need TIMESTAMP
@@ -358,30 +352,79 @@ class TestStreaming:
         ev.write.mode("overwrite").parquet(data_dir)
         stream = spark.readStream.schema(ev.schema).parquet(data_dir)
         win = violation_rate_windows(
-            p, stream, ts_col="ts", window="1 day", watermark="1 day"
+            ValidationPlan(compile_schema(schema)), stream, ts_col="ts",
+            window="1 day", watermark="1 day",
         )
         q = (
             win.writeStream.format("memory")
-            .queryName("ratestream")
+            .queryName(sink)
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM ratestream").collect()
-        # append mode emits only windows closed by the watermark; the
-        # final (max-ts) window stays open, so compare against batch on
-        # the emitted subset
-        batch = ev.select(
-            F.window("ts", "1 day").alias("win"),
-            F.when(F.col("value") >= 10, 1).otherwise(0).alias("ok"),
-        ).groupBy("win").agg(
+        rows = spark.sql(f"SELECT * FROM {sink}").collect()
+        assert rows, "no windows emitted"
+        return ev, rows
+
+    @staticmethod
+    def _batch_windows(ts_ok):
+        """{window start: (n_docs, n_valid)} of a (ts, ok int) frame."""
+        batch = ts_ok.groupBy(F.window("ts", "1 day").alias("win")).agg(
             F.count("*").alias("n_docs"), F.sum("ok").alias("n_valid")
         )
-        bm = {
+        return {
             r["win"]["start"]: (r["n_docs"], r["n_valid"])
             for r in batch.collect()
         }
-        assert rows, "no windows emitted"
+
+    def test_violation_rate_windows(self, spark, tmp_path):
+        ev, rows = self._rate_windows(
+            spark, tmp_path,
+            {
+                "type": "object",
+                "properties": {"value": {"type": "number", "minimum": 10}},
+                "required": ["value"],
+            },
+            "ratestream",
+        )
+        # append mode emits only windows closed by the watermark; the
+        # final (max-ts) window stays open, so compare against batch on
+        # the emitted subset
+        bm = self._batch_windows(ev.select(
+            "ts", F.when(F.col("value") >= 10, 1).otherwise(0).alias("ok")
+        ))
         for r in rows:
             assert bm[r["window_start"]] == (r["n_docs"], r["n_valid"])
+
+    @pytest.mark.parametrize(
+        "names, any_valid",
+        [(["doc_id", "ts", "value"], True), (["doc_id", "value"], False)],
+        ids=["names-ts", "omits-ts"],
+    )
+    def test_violation_rate_windows_match_batch_verdicts(
+        self, spark, tmp_path, names, any_valid
+    ):
+        """Each streamed row validates as the object of ALL its columns,
+        ts included, exactly as batch apply_typed does: under a closed
+        spec that omits ts, every row is invalid."""
+        schema = {
+            "type": "object",
+            "properties": {
+                **{n: {} for n in names},
+                "value": {"type": "number", "minimum": 10},
+            },
+            "additionalProperties": False,
+        }
+        ev, rows = self._rate_windows(
+            spark, tmp_path, schema, f"ratestream_{len(names)}"
+        )
+        result = ValidationPlan(compile_schema(schema)).apply_typed(ev)
+        bm = self._batch_windows(
+            result.verdicts().join(ev, "doc_id").select(
+                "ts", F.col("valid").cast("int").alias("ok")
+            )
+        )
+        for r in rows:
+            assert bm[r["window_start"]] == (r["n_docs"], r["n_valid"])
+        assert any(r["n_valid"] for r in rows) == any_valid

@@ -1,4 +1,4 @@
-"""Spark-side validation: typed lowering + dynamic-JSON pandas-UDF path.
+"""Spark-side validation: typed rows (apply_typed) + dynamic-JSON path.
 
 - Flagship spec over the spans table (sf0.001): Spark verdicts must
   agree row-for-row with the compiled Python evaluator (the engine's
@@ -197,10 +197,12 @@ class TestTypedParityRandomized:
         assert got == expect
 
 
-class TestCanonExprInjectivity:
-    """canon_expr (Column serializer) must agree with pyeval's
-    canonicalize equivalence classes even when string content embeds the
-    serializer's own delimiters (round-2 fix: length-prefixed strings)."""
+class TestKernelCanonInjectivity:
+    """The Arrow kernels' canonical serialization (apply_typed) must
+    agree with pyeval's canonicalize equivalence classes even when
+    string content embeds the serializer's own delimiters (round-2
+    fix: length-prefixed strings). Each case validates the (doc_id, arr)
+    row under {"properties": {"arr": ...}}."""
 
     DOCS = [
         [["x,s:y"], ["x", "y"]],            # old-format collision
@@ -210,59 +212,31 @@ class TestCanonExprInjectivity:
         [["x,y"], ["x", "y"]],
     ]
 
-    def test_unique_items_typed_vs_pyeval(self, spark):
-        from jvst_spark.compiler.pyeval import compile_python
-        from jvst_spark.compiler.typed import lower_typed
-        from jvst_spark.spec.nodes import ArrUnique
-
-        df = spark.createDataFrame(
-            [(i, d) for i, d in enumerate(self.DOCS)],
-            "id long, arr array<array<string>>",
+    @staticmethod
+    def _arr_verdicts(spark, schema, docs, elem):
+        plan = ValidationPlan(
+            compile_schema({"properties": {"arr": schema}})
         )
-        got = {
-            r["id"]: r["u"]
-            for r in df.select(
-                "id",
-                F.coalesce(
-                    lower_typed(
-                        ArrUnique(), df.schema["arr"].dataType, F.col("arr")
-                    ),
-                    F.lit(True),
-                ).alias("u"),
-            ).collect()
+        df = spark.createDataFrame(
+            list(enumerate(docs)), f"doc_id long, arr array<{elem}>"
+        )
+        return {
+            r["doc_id"]: r["valid"]
+            for r in plan.apply_typed(df).verdicts().collect()
         }
-        pyv = compile_python(ArrUnique())
+
+    def test_unique_items_typed_vs_pyeval(self, spark):
+        schema = {"uniqueItems": True}
+        got = self._arr_verdicts(spark, schema, self.DOCS, "array<string>")
+        pyv = compile_python(compile_schema(schema).root)
         for i, d in enumerate(self.DOCS):
             assert got[i] == pyv(d), d
 
     def test_composite_enum_typed_vs_pyeval(self, spark):
-        from jvst_spark.compiler.pyeval import compile_python
-
         schema = {"enum": [["x", "y"], ["a=s:b"]]}
         spec = compile_schema(schema)
         pyv = compile_python(spec.root, spec.defs)
         docs = [["x", "y"], ["x,s:y"], ["a=s:b"], ["a", "s:b"], ["x"]]
-        df = spark.createDataFrame(
-            [(i, d) for i, d in enumerate(docs)],
-            "id long, arr array<string>",
-        )
-        # validate the array column directly via the root Switch
-        from jvst_spark.compiler.typed import lower_typed
-
-        got = {
-            r["id"]: r["v"]
-            for r in df.select(
-                "id",
-                F.coalesce(
-                    lower_typed(
-                        spec.root,
-                        df.schema["arr"].dataType,
-                        F.col("arr"),
-                        spec.defs,
-                    ),
-                    F.lit(False),
-                ).alias("v"),
-            ).collect()
-        }
+        got = self._arr_verdicts(spark, schema, docs, "string")
         for i, d in enumerate(docs):
             assert got[i] == pyv(d), d
