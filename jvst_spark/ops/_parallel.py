@@ -21,11 +21,19 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     wide enough, which is the normal case at scale.
 
     Cost note: the `.rdd` partition probe plans the input subtree on
-    the driver (~0.3-0.6s on this host, once per DataFrame build —
-    negligible against any real job). With AQE, probing a frame whose
-    lineage already contains an Exchange can additionally execute the
-    shuffle stages eagerly; call sites here probe scan/projection
-    inputs, where the probe is planning-only."""
+    the driver (~0.3-0.6s on a 4-core host, once per DataFrame build).
+    Over a scan or projection that is all it does. With AQE, probing a
+    frame whose lineage already contains an Exchange also EXECUTES the
+    shuffle stages below it as Spark jobs, at build time. Most call
+    sites probe whatever frame their caller passes; one always hits
+    this: `dedup.minhash_bands` probes the output of
+    `exact_class_representatives`, so every MinHash build runs the
+    md5-class shuffle as one Spark job before the real action
+    (measured on a 4-core host over perfbench table_suite's 2,000
+    docs: ~2.1 s in a cold session, 0.15-0.25 s in each new session on
+    a warm JVM; that benchmark pays it in `setup_s`). The per-session
+    memo below keeps repeat builds in one session from paying it
+    again."""
     if df.isStreaming:  # .rdd is undefined; micro-batches repartition
         return df       # via their own shuffle boundaries
     spark = df.sparkSession

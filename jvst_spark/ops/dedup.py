@@ -3,10 +3,12 @@
 Scale design (the 100 TB story):
 - exact: one groupBy on a content hash — Catalyst map-side partial
   aggregation keeps hot hashes from hotspotting a reducer.
-- MinHash+LSH: per-doc signatures are shuffle-free Column expressions;
-  candidate generation explodes BANDS (rows = docs x n_bands, narrow),
-  groups by band key, and only verifies Jaccard on within-bucket pairs
-  — the all-pairs O(n^2) never materializes.
+- MinHash+LSH: signature and band keys are one shuffle-free SQL
+  expression per doc; band rows (docs x n_bands, narrow) carry the
+  doc's shingle array into ONE band-key shuffle, and exact Jaccard is
+  verified inside each bucket's pair expansion — the all-pairs O(n^2)
+  never materializes and no candidate list is cached. The price: that
+  shuffle moves n_bands copies of every shingle array.
 - n-gram Jaccard: exposed for verification and small candidate sets.
 - SimHash: per-doc 64-bit signature in one Arrow-batched numpy pass per
   partition (no shuffle); near-dup pairs come from banding the
@@ -95,54 +97,42 @@ def exact_class_representatives(
     )
 
 
+# the 16 seeded minima over `_sh`, let-bound so the n_bands key slices
+# share one evaluation; `inline` emits the (band, band_key) rows
+_BANDS_SQL = (
+    "inline(element_at(transform(array(array({})), g -> transform("
+    "sequence(0, {}), b -> named_struct('band', b, 'band_key', "
+    "concat_ws('|', slice(g, b * {r} + 1, {r}))))), 1))"
+).format(
+    ", ".join(f"array_min(transform(_sh, s -> md5(concat('mh{i}|', s))))"
+              for i in range(N_HASHES)),
+    N_HASHES // BAND_SIZE - 1, r=BAND_SIZE,
+)
+
+
 def minhash_bands(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, band int, band_key string): LSH bucket keys. Narrow
-    explode — n_bands rows per doc.
+    """(doc_id, _sh, band int, band_key string): LSH bucket keys. Narrow
+    explode — n_bands rows per doc, each carrying the doc's distinct
+    shingle array `_sh` for in-bucket verification (callers that need
+    only ids let column pruning drop it).
 
-    Two binding layers keep the expensive subexpressions single-
-    evaluation: the shingle array is materialized through a Generate
-    barrier (explode of a singleton) so the 16 per-seed md5 passes read
-    an attribute instead of re-deriving shingles 16x; the signature is
-    let-bound so the n_bands key slices share one evaluation."""
-    n_bands = N_HASHES // BAND_SIZE
-
-    def bands_of(s: Column) -> Column:
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "|", F.slice(s, b * BAND_SIZE + 1, BAND_SIZE)
-                    ).alias("band_key"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-
+    The shingle array is materialized through a Generate barrier
+    (explode of a singleton) so the 16 per-seed md5 passes read an
+    attribute instead of re-deriving shingles 16x. Signature and band
+    keys are one `F.expr` (`_BANDS_SQL`): as Python Column trees the
+    16 lambda passes cost ~1,000 py4j calls per DataFrame build."""
     from jvst_spark.ops._parallel import ensure_min_parallelism
 
     # 16 md5 passes per doc are CPU-bound — don't let a narrow input
     # (1-2 size-based parquet splits) pin them to 2 cores; no-op on
-    # wide inputs (round-4: the old .cache() masked this in min-of-N
-    # benches by letting later runs reuse the first run's bands)
+    # wide inputs
     sh_df = ensure_min_parallelism(df).select(
         "doc_id",
         F.explode(
             F.array(word_shingles(tokens(F.col(text_col))))
         ).alias("_sh"),
     )
-
-    def seed_min(i: int) -> Column:
-        seed = F.lit(f"mh{i}|")
-        return F.array_min(
-            F.transform(F.col("_sh"), lambda s: F.md5(F.concat(seed, s)))
-        )
-
-    sig = F.array(*[seed_min(i) for i in range(N_HASHES)])
-    bands = F.element_at(F.transform(F.array(sig), bands_of), 1)
-    return sh_df.select("doc_id", F.explode(bands).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
+    return sh_df.select("doc_id", "_sh", F.expr(_BANDS_SQL))
 
 
 def _capped_buckets(
@@ -172,6 +162,27 @@ def _capped_buckets(
     )
 
 
+def _bucket_pairs(buckets: DataFrame, key=lambda m: m) -> DataFrame:
+    """(a, b) for every i < j pair of each bucket's sorted `ids`.
+
+    Pairs STREAM through two chained Generates (posexplode the members,
+    explode each member's tail slice): no row ever holds more than one
+    bucket's O(k) array, where a one-row-per-bucket pair array is
+    O(k^2) and a single hot bucket (every empty document in a corpus)
+    could OOM its task. The key(a) != key(b) guard drops the self-pairs
+    that duplicate doc_id rows would otherwise produce."""
+    return (
+        buckets.select("ids", F.posexplode("ids").alias("_i", "a"))
+        .select(
+            "a",
+            F.explode(
+                F.slice("ids", F.col("_i") + 2, F.size("ids"))
+            ).alias("b"),
+        )
+        .filter(key(F.col("a")) != key(F.col("b")))
+    )
+
+
 def _bucket_overflow(
     rows: DataFrame, key_cols: List[str], max_bucket_size: int
 ) -> DataFrame:
@@ -194,16 +205,9 @@ def lsh_candidate_pairs(
     """Distinct candidate pairs (a < b) sharing any LSH band bucket.
 
     Aggregate-then-pair (round-4, replacing a cached self-join): ONE
-    shuffle groups band rows into (band, band_key) -> sorted id list;
-    pairs then STREAM through two chained Generates (posexplode the
-    members, explode each member's tail slice) — no row ever holds
-    more than one bucket's O(k) id array, where the earlier
-    one-row-per-bucket pair array was O(k^2) and a single hot bucket
-    (every empty document in a corpus) could OOM its task. The
-    signature expression evaluates exactly once per doc with no
-    corpus-scale `.cache()`. The a != b guard drops self-pairs that
-    duplicate doc_id rows would otherwise produce (the old join's
-    strict < predicate excluded them).
+    shuffle groups band rows into (band, band_key) -> sorted id list,
+    and `_bucket_pairs` streams the pairs out of it; no corpus-scale
+    `.cache()`.
 
     Round-5 skew guard: each bucket keeps only its first
     `max_bucket_size` members (doc_id order, enforced BEFORE the
@@ -213,22 +217,13 @@ def lsh_candidate_pairs(
     `lsh_bucket_overflow`; entry points collapse exact-duplicate
     classes first (`exact_class_representatives`) so a mass-duplicate
     class never reaches the bucket in the first place."""
-    b = minhash_bands(df, text_col)
     buckets = _capped_buckets(
-        b, ["band", "band_key"], F.col("doc_id"), ["doc_id"],
-        max_bucket_size,
+        minhash_bands(df, text_col), ["band", "band_key"],
+        F.col("doc_id"), ["doc_id"], max_bucket_size,
     )
     return (
-        buckets.select(
-            "ids", F.posexplode("ids").alias("i", "doc_a")
-        )
-        .select(
-            "doc_a",
-            F.explode(
-                F.slice("ids", F.col("i") + 2, F.size("ids"))
-            ).alias("doc_b"),
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
+        _bucket_pairs(buckets)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
     )
 
@@ -243,6 +238,19 @@ def lsh_bucket_overflow(
     return _bucket_overflow(
         minhash_bands(df, text_col), ["band", "band_key"], max_bucket_size
     )
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard >= threshold) of (doc_a, doc_b, sh_a, sh_b)."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
+    # explode(array(...)) = Generate barrier: stops the >= filter from
+    # being pushed below the projection, which would re-evaluate the
+    # intersect/union per row
+    return pairs.select(
+        "doc_a", "doc_b", F.explode(F.array(jac)).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def jaccard_pairs(
@@ -269,16 +277,9 @@ def jaccard_pairs(
     )
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    joined = candidates.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-    # explode(array(...)) = Generate barrier: stops the >= filter from
-    # being pushed below the projection, which would re-evaluate the
-    # intersect/union per row
-    return joined.select(
-        "doc_a", "doc_b", F.explode(F.array(jac)).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard_at_least(
+        candidates.join(a, "doc_a").join(b, "doc_b"), threshold
+    )
 
 
 def _warn_overflow(overflow: DataFrame, what: str, cap: int) -> None:
@@ -307,8 +308,8 @@ def minhash_lsh_dedup(
     max_bucket_size: int = MAX_BUCKET_SIZE,
     log_overflow: bool = False,
 ) -> DataFrame:
-    """Full near-dup pipeline: exact-class collapse -> LSH candidates
-    -> exact Jaccard verify.
+    """Full near-dup pipeline: exact-class collapse -> LSH buckets ->
+    exact Jaccard verify inside each bucket.
 
     Every byte-identical duplicate class maps to its min-doc_id
     representative BEFORE banding
@@ -320,19 +321,32 @@ def minhash_lsh_dedup(
     runs the count-only overflow monitor and warns through the module
     logger (an extra job — off by default, on for monitored runs).
 
-    The candidate PAIRS are cached — jaccard_pairs references them
-    three times (two id projections + the verify join) and re-running
-    the banding pipeline per reference would triple the corpus work.
-    Unlike the corpus-scale band cache this replaced, the pair list is
-    O(duplicates found), bounded and small by construction."""
+    One pure action, nothing cached: band rows carry each doc's
+    shingle array through the capped bucket aggregate, the pair
+    expansion verifies exact Jaccard on the spot, and a distinct over
+    the VERIFIED pairs collapses those that shared several bands. The
+    trade is shuffle bytes: the band-key exchange moves n_bands copies
+    of every shingle array instead of bare ids.
+
+    Only texts that shared a bucket are compared: a doc_id carried by
+    several rows with different texts is verified text by text."""
     corpus = exact_class_representatives(df, text_col)
-    cand = lsh_candidate_pairs(corpus, text_col, max_bucket_size).cache()
+    buckets = _capped_buckets(
+        minhash_bands(corpus, text_col), ["band", "band_key"],
+        F.struct("doc_id", "_sh"), ["doc_id"], max_bucket_size,
+    )
     if log_overflow:
         _warn_overflow(
             lsh_bucket_overflow(corpus, text_col, max_bucket_size),
             "minhash_lsh_dedup", max_bucket_size,
         )
-    return jaccard_pairs(cand, corpus, text_col, threshold)
+    pairs = _bucket_pairs(buckets, lambda m: m["doc_id"]).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a._sh").alias("sh_a"),
+        F.col("b._sh").alias("sh_b"),
+    )
+    return _jaccard_at_least(pairs, threshold).distinct()
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -503,34 +517,18 @@ def simhash_near_pairs(
         ["doc_id", "simhash"],
         max_bucket_size,
     )
-    buckets = buckets.withColumnRenamed("ids", "members")
     if log_overflow:
         _warn_overflow(
             simhash_bucket_overflow(sig, max_bucket_size),
             "simhash_near_pairs", max_bucket_size,
         )
-    # streamed pair expansion (see lsh_candidate_pairs): two chained
-    # Generates keep per-row memory at O(k), and the a != b guard
-    # drops self-pairs from duplicate doc_id rows
-    cand = (
-        buckets.select(
-            "members", F.posexplode("members").alias("i", "m")
-        )
-        .select(
-            F.col("m.doc_id").alias("doc_a"),
-            F.col("m.hi").alias("_ahi"),
-            F.col("m.lo").alias("_alo"),
-            F.explode(
-                F.slice("members", F.col("i") + 2, F.size("members"))
-            ).alias("n"),
-        )
-        .select(
-            "doc_a", "_ahi", "_alo",
-            F.col("n.doc_id").alias("doc_b"),
-            F.col("n.hi").alias("_bhi"),
-            F.col("n.lo").alias("_blo"),
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
+    cand = _bucket_pairs(buckets, lambda m: m["doc_id"]).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("a.hi").alias("_ahi"),
+        F.col("a.lo").alias("_alo"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("b.hi").alias("_bhi"),
+        F.col("b.lo").alias("_blo"),
     )
     ham = (
         F.bit_count(F.col("_ahi").bitwiseXOR(F.col("_bhi")))
